@@ -137,18 +137,18 @@ object Dedup {
     cand.join(sa, "id_a").join(sb, "id_b")
       // ArrayEqCount = the zip_with/filter/size chain as one precompiled
       // kernel call (that chain ran interpreted per candidate pair)
+      // optimizer fence (guide §4.4's trick, arithmetic form): the
+      // always-zero nondeterministic term makes this Project
+      // nondeterministic, so the threshold filter cannot be pushed below
+      // it with the kernel substituted for `est_jaccard` — the kernel runs
+      // once, in this Project, per candidate pair. Inside the filter the
+      // term does not fence: the filter still pushes through a
+      // deterministic Project (2 evaluations per survivor). PlanSpec's
+      // "optimizer fences" row pins one kernel node per plan.
       .withColumn("est_jaccard",
         graft.functions.ArrayEqCount(col("sig_a"), col("sig_b"))
-          .cast("double") / perms.toDouble)
-      // optimizer fence (guide §4.4's trick, arithmetic form): a separate
-      // nondeterministic conjunct gets SPLIT off and the deterministic
-      // half still pushes into the join condition with the kernel
-      // substituted (2 evaluations per survivor) — folding the
-      // always-zero nondeterministic term INTO the one comparison makes
-      // the predicate unsplittable and unpushable, so the kernel runs
-      // once, in this Project, per candidate pair
-      .where(col("est_jaccard") >=
-        lit(minJaccard) + spark_partition_id() * lit(0.0))
+          .cast("double") / perms.toDouble + spark_partition_id() * lit(0.0))
+      .where(col("est_jaccard") >= minJaccard)
       .select("id_a", "id_b", "est_jaccard")
   }
 
@@ -209,11 +209,12 @@ object Dedup {
     cand
       // HammingCount = the aggregate/zip_with/bit_count chain as one
       // precompiled kernel call (interpreted per candidate pair before)
-      .withColumn("hamming",
-        graft.functions.HammingCount(col("sh_a"), col("sh_b")))
       // optimizer fence, arithmetic form — see minhashPairs: one kernel
-      // evaluation per candidate pair (the added term is always zero)
-      .where(col("hamming") <= lit(maxHamming) + spark_partition_id() * lit(0))
+      // evaluation per candidate pair (the added term is always zero;
+      // PlanSpec's "optimizer fences" row pins it)
+      .withColumn("hamming",
+        graft.functions.HammingCount(col("sh_a"), col("sh_b")) + spark_partition_id() * lit(0))
+      .where(col("hamming") <= maxHamming)
       .select(col("id_a"), col("id_b"), col("hamming"))
   }
 

@@ -24,7 +24,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * forbids the optimizer to reorder, duplicate or fold it) keeps the
   * threshold filter ABOVE the projection, referencing the attribute: one
   * kernel evaluation per candidate pair, aborted pairs exit at the filter
-  * inside the same codegen stage.
+  * inside the same codegen stage. PlanSpec's "optimizer fences" row fails
+  * if an optimizer change ever puts a second copy of the kernel in a plan.
   *
   * Bit-exactness vs the replaced chain (oracle-pinned): `required` is the
   * same `floor(c * (|a|+|b|))` with c = t/(1+t) precomputed as a double;

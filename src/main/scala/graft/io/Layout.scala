@@ -346,7 +346,8 @@ private[graft] object LayoutManifest {
   * footer-only I/O cost (no data pages touched). `None` bounds mean the
   * file carries no usable stats for that column (all-null chunk, missing
   * stats, non-numeric physical type) and must be treated as
-  * overlaps-everything.
+  * overlaps-everything. `name` is the file's path relative to the table
+  * root (`dt=…/part-…` on a partitioned layout).
   */
 private[graft] case class FileRect(name: String, bytes: Long, rows: Long,
                                    lo: Array[Option[Double]], hi: Array[Option[Double]]) {
@@ -379,6 +380,8 @@ private[graft] object FileRect {
     */
   def readAll(spark: SparkSession, dir: String, names: Seq[String],
               zCols: Seq[String]): Map[String, FileRect] = {
+    // keyed by the caller's relative name: basenames repeat across `dt=`
+    // dirs, so a basename key would collapse those files into one entry
     if (names.isEmpty) return Map.empty
     // SIZE GATE (optimization round 21): below a handful of files the
     // footer reads are microseconds of driver metadata I/O, while the
@@ -390,7 +393,7 @@ private[graft] object FileRect {
     // path unchanged.
     if (names.size <= 64) {
       val conf = spark.sparkContext.hadoopConfiguration
-      return names.map(n => readOne(conf, new Path(dir, n), zCols))
+      return names.map(n => readOne(conf, dir, n, zCols))
         .map(r => r.name -> r).toMap
     }
     val confKv = spark.sparkContext.hadoopConfiguration.asScala
@@ -402,7 +405,7 @@ private[graft] object FileRect {
     spark.sparkContext.parallelize(names, slices).mapPartitions { it =>
       val conf = new Configuration(false)
       confKv.foreach { case (k, v) => conf.set(k, v) }
-      it.map(name => readOne(conf, new Path(dir, name), zCols))
+      it.map(name => readOne(conf, dir, name, zCols))
     }.collect().map(r => r.name -> r).toMap
   }
 
@@ -412,9 +415,11 @@ private[graft] object FileRect {
     * micros, dates as int32 days) are monotone in the numeric value, so
     * comparing as double preserves intersection truth.
     */
-  def readOne(conf: Configuration, file: Path, zCols: Seq[String]): FileRect = {
+  def readOne(conf: Configuration, dir: String, name: String,
+              zCols: Seq[String]): FileRect = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
+    val file = new Path(dir, name)
     val fs = file.getFileSystem(conf)
     val bytes = fs.getFileStatus(file).getLen
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
@@ -442,7 +447,7 @@ private[graft] object FileRect {
           }
         }
       }
-      FileRect(file.getName, bytes, rows, lo, hi)
+      FileRect(name, bytes, rows, lo, hi)
     } finally reader.close()
   }
 

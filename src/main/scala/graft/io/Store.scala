@@ -43,9 +43,10 @@ class Store(spark: SparkSession, baseDir: String) {
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   /** S8: full-overwrite sorted single-file CSV with header
-    * (`raw_data.py:263`, `data_engineering.py:129-130`). `coalesce(1)`
-    * matches the reference artifact shape — export path only, NOT the scale
-    * sink.
+    * (`raw_data.py:263`, `data_engineering.py:129-130`). One partition
+    * sorted in place matches the reference artifact shape — export path
+    * only, NOT the scale sink — and, unlike a global `orderBy`, submits no
+    * range-partitioning sample job.
     *
     * The upsert plans READ the same path they replace, and Spark refuses to
     * overwrite a path it is reading from — so write to a sibling tmp dir
@@ -57,8 +58,8 @@ class Store(spark: SparkSession, baseDir: String) {
     // only), so a nested rel like "a/b.csv" stays inside its parent dir
     // instead of creating a stray ".tmp_a/" tree.
     val tmp = new Path(target.getParent, s".tmp_${target.getName}")
-    df.orderBy(col(sortCol))
-      .coalesce(1)
+    df.repartition(1)
+      .sortWithinPartitions(col(sortCol))
       .write.mode("overwrite").option("header", "true")
       .csv(tmp.toString)
     Store.swapInto(fs, tmp, target)

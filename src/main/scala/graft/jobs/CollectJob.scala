@@ -12,8 +12,11 @@ import graft.sources.{ApiClient, Fetchers}
 
 /** EP1 — daily collection (`raw_data_collection/raw_data.py:273-352`),
   * Spark-first: the five sources compose into ONE lazy logical plan
-  * (outer joins -> as-of join -> broadcast stamp -> filters); Catalyst
-  * plans it and a single write action executes it. The quality gate is one
+  * (outer joins -> as-of join -> broadcast stamp -> filters). The merged
+  * day has two consumers, the quality gate and the keep-newest upsert, so
+  * it is materialized once with `localCheckpoint()` and both read that
+  * copy: otherwise each would re-run the whole five-feed merge (parse,
+  * explode, three outer joins, as-of join). The quality gate is one
   * batched `agg` action, not per-column passes.
   */
 object CollectJob {
@@ -54,6 +57,7 @@ object CollectJob {
       .where(to_date(col("datetime")) === lit(runDate.toString).cast("date")) // raw_data.py:310
       .where(minute(col("datetime")) === 0) // raw_data.py:313
       .transform(Schemas.project(_, Schemas.raw))
+      .localCheckpoint()
 
     qualityGate(merged)
 

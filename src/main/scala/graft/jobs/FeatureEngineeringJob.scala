@@ -15,7 +15,10 @@ import graft.pipeline.Schemas
   *
   * The whole run is O(delta), not O(history): only rows absent from the
   * previous output are transformed, which is the reference's one real
-  * big-data optimization and the property that matters at 100 TB.
+  * big-data optimization and the property that matters at 100 TB. The
+  * delta is materialized once with `localCheckpoint()`: the emptiness
+  * check, the scaler fit and the write all read it, and each would
+  * otherwise re-scan both CSV tables and re-run the anti-join.
   */
 object FeatureEngineeringJob {
 
@@ -39,6 +42,7 @@ object FeatureEngineeringJob {
 
     // P7/J4: the incremental delta (data_engineering.py:107)
     val delta = raw.join(prev.select("datetime"), Seq("datetime"), "left_anti")
+      .localCheckpoint()
 
     if (delta.isEmpty) return prev // P8 short-circuit (data_engineering.py:113-115)
 

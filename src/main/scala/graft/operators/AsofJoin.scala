@@ -11,16 +11,17 @@ import org.apache.spark.sql.functions._
   * match within an inclusive tolerance, equidistant tie broken toward the
   * earlier (backward) right row.
   *
-  * Scale design: a naive formulation is a pure band join
-  * (`abs(l.ts - r.ts) <= tol`), which Spark can only execute as a
-  * broadcast-nested-loop / cartesian product — fine for a tiny right side,
-  * quadratic at 100 TB. Instead we bucket both sides by
-  * `floor(ts / tolerance)` and explode each RIGHT row into its bucket and
-  * the two adjacent buckets: every pair within `tolerance` then shares an
-  * equi-join key, so Catalyst plans a shuffle/broadcast HASH join that
-  * partitions cleanly across executors. The per-left-row best match is
-  * picked with a `row_number` window partitioned by the left row key —
-  * also hash-partitioned, no global sort, no driver materialization.
+  * Scale design: a naive band join (`abs(l.ts - r.ts) <= tol`) can only
+  * run as a broadcast-nested-loop / cartesian product — quadratic at
+  * 100 TB. Instead both sides bucket by `floor(ts / tolerance)` and each
+  * RIGHT row explodes into its bucket and the two adjacent ones, so every
+  * in-tolerance pair shares an equi-join key and Catalyst plans a HASH
+  * join. The plan is single-pass: the full left rows ride a left-outer
+  * bucket join with the tolerance test as its residual, and a
+  * `row_number` window per left key keeps the best candidate (Spark adds a
+  * map-side `WindowGroupLimit`); the left input is scanned once. A
+  * null-key left row never matches and carries its own id into the window
+  * partition, so null-key rows are never merged into one partition.
   */
 object AsofJoin {
 
@@ -50,18 +51,15 @@ object AsofJoin {
               toleranceSeconds: Long, leftKey: Seq[String]): DataFrame =
     asof(left, right, on, toleranceSeconds, leftKey, Forward)
 
-  // NTZ inputs normalize through the shared TimeCols.ltz (see its note).
-  private def ltz(df: DataFrame, on: String): DataFrame = TimeCols.ltz(df, on)
-
   def asof(left0: DataFrame, right0: DataFrame, on: String,
            toleranceSeconds: Long, leftKey: Seq[String],
            direction: Direction): DataFrame = {
     require(toleranceSeconds > 0, "tolerance must be positive")
-    val left = ltz(left0, on)
-    val right = ltz(right0, on)
-    // Contract (was implicit): right payload columns land next to the full
-    // left row, so any shared name other than `on` would make the final
-    // equi-join ambiguous and silently mis-resolve. Fail fast instead.
+    // NTZ inputs normalize through the shared TimeCols.ltz (see its note)
+    val left = TimeCols.ltz(left0, on)
+    val right = TimeCols.ltz(right0, on)
+    // right payload columns land next to the full left row, so any shared
+    // name other than `on` would be ambiguous. Fail fast instead.
     val collisions = right.columns.toSet.intersect(left.columns.toSet) - on
     require(collisions.isEmpty,
       s"right-side columns collide with left: ${collisions.mkString(", ")} — rename before joining")
@@ -69,12 +67,13 @@ object AsofJoin {
 
     val lt = col("__l_ts")
     val rt = col("__r_ts")
+    val rb = floor(rt / tolMicros)
+    val keyNull = leftKey.map(col(_).isNull).foldLeft(lit(false))(_ || _)
 
-    // Left candidates: only key + timestamp travel through the join; the
-    // full left payload is re-attached by a final equi-join on leftKey.
-    val lSlim = left
-      .select((leftKey.map(col) :+ unix_micros(col(on)).as("__l_ts")): _*)
+    val lTagged = left
+      .withColumn("__l_ts", unix_micros(col(on)))
       .withColumn("__l_bucket", floor(lt / tolMicros))
+      .withColumn("__l_nullkey_id", when(keyNull, monotonically_increasing_id()))
 
     // Right rows exploded into the 3 buckets any in-tolerance left row can
     // occupy. |l - r| <= tol  =>  floor(l/tol) ∈ {floor(r/tol)-1, .., +1}.
@@ -82,30 +81,30 @@ object AsofJoin {
     val rExp = right
       .withColumn("__r_ts", unix_micros(col(on)))
       .drop(on)
-      .withColumn("__r_bucket0", floor(rt / tolMicros))
-      .withColumn("__l_bucket",
-        explode(array(col("__r_bucket0") - 1, col("__r_bucket0"), col("__r_bucket0") + 1)))
-      .drop("__r_bucket0")
+      .withColumn("__r_bucket", explode(array(rb - 1, rb, rb + 1)))
 
     val inTol: Column = direction match {
       case Nearest  => abs(lt - rt) <= tolMicros
       case Backward => rt <= lt && (lt - rt) <= tolMicros
       case Forward  => rt >= lt && (rt - lt) <= tolMicros
     }
+    // unmatched left rows carry a null right time: nulls sort last
     val ordering: Seq[Column] = direction match {
       // pandas tie-break: equidistant -> earlier (backward) right row wins.
-      case Nearest  => Seq(abs(lt - rt).asc, rt.asc)
-      case Backward => Seq(rt.desc)
-      case Forward  => Seq(rt.asc)
+      case Nearest  => Seq(abs(lt - rt).asc_nulls_last, rt.asc_nulls_last)
+      case Backward => Seq(rt.desc_nulls_last)
+      case Forward  => Seq(rt.asc_nulls_last)
     }
 
-    val cand = lSlim.join(rExp, Seq("__l_bucket")).where(inTol)
-    val w = Window.partitionBy(leftKey.map(col): _*).orderBy(ordering: _*)
-    val best = cand
+    val cand = lTagged.join(rExp,
+      col("__l_bucket") === col("__r_bucket") && inTol && !keyNull, "left_outer")
+    val w = Window.partitionBy((leftKey :+ "__l_nullkey_id").map(col): _*)
+      .orderBy(ordering: _*)
+    // key columns first, then the rest of the left row, then the payload
+    val outCols = leftKey ++ left.columns.filterNot(leftKey.contains) ++ rCols
+    cand
       .withColumn("__rn", row_number().over(w))
       .where(col("__rn") === 1)
-      .select((leftKey.map(col) ++ rCols.map(col)): _*)
-
-    left.join(best, leftKey, "left")
+      .select(outCols.map(col): _*)
   }
 }

@@ -295,4 +295,30 @@ class PartitionedManifestSpec extends AnyFunSuite {
     assert(store.readVersion("tbl", 0L).count() == 400)
     assert(rows(store.readSnapshot("tbl")).isEmpty)
   }
+
+  test("MERGE on the managed partitioned store counts every touched file's " +
+    "rows when basenames repeat across dt= dirs") {
+    import org.apache.spark.sql.GraftBridge
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import spark.implicits._
+    def s(c: String) = GraftBridge.toColumn(UnresolvedAttribute(Seq("__s", c)))
+    def t(c: String) = GraftBridge.toColumn(UnresolvedAttribute(Seq("__t", c)))
+    val base = Files.createTempDirectory("graft_pm_merge_names").toString
+    val store = new Store(spark, base)
+    // ONE writing task lays down one file per day, under the same basename
+    store.writePartitionedManaged(mkEvents(100).coalesce(1), "tbl")  // epoch 0
+    val names = deepTriples(s"$base/tbl").map(_._1)
+    assert(names.size == 5 && names.map(n => n.substring(n.lastIndexOf('/') + 1)).size == 1,
+      names)
+    // k=1 lives on day 2, k=2 on day 3: two touched files; k=1000 is new
+    val src = Seq((1L, 11.0), (2L, 22.0), (1000L, 5.0)).toDF("mk", "mv")
+      .withColumn("sdt", lit("2024-07-09").cast("date"))
+    val stats = store.mergeInto("tbl", src, t("k") === s("mk"),           // epoch 1
+      matched = Seq(Store.MergeUpdate(Map("v" -> s("mv")))),
+      insert = Some((Map("datetime" -> s("sdt").cast("timestamp"), "k" -> s("mk"),
+        "v" -> s("mv"), "dt" -> s("sdt")), None)))
+    assert(stats.filesTouched == 2 && stats.rowsUpdated == 2, stats)
+    assert(stats.rowsInserted == 1L, stats)
+    assert(store.readSnapshot("tbl").count() == 101)
+  }
 }

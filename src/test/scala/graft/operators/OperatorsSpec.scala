@@ -113,6 +113,22 @@ class AsofJoinSpec extends AnyFunSuite {
     assert(AsofJoin.forward(l, r, "t", 600L, Seq("id")).select("v").head().getDouble(0) == 2.0)
   }
 
+  test("left-total: null-key and null-`on` rows each come back once with a null match") {
+    val at10 = Some(ts("2024-01-01 10:00:00"))
+    // two identical null-key rows: one window partition would keep only one
+    val l = Seq[(Option[Long], Option[Timestamp])](
+      (Some(1L), at10), (Some(2L), None), (Some(3L), None),
+      (None, at10), (None, at10), (None, None)).toDF("id", "t")
+    val r = right("2024-01-01 10:00:00" -> 1.0)
+    for (asof <- Seq(AsofJoin.nearest _, AsofJoin.backward _, AsofJoin.forward _)) {
+      val out = asof(l, r, "t", 1800L, Seq("id")).select("id", "t", "v").collect()
+        .map(x => (Option(x.get(0)), Option(x.get(1)), Option(x.get(2)))).toSeq
+      assert(out.size == 6, out)
+      assert(out.filter(_._3.isDefined) == Seq((Some(1L), at10, Some(1.0))), out)
+      assert(out.count(_._1.isEmpty) == 3 && out.count(_._2.isEmpty) == 3, out)
+    }
+  }
+
   test("property: bucketed nearest == brute-force nearest on random timestamps") {
     val rnd = new scala.util.Random(7)
     val base = ts("2024-06-01 00:00:00").getTime

@@ -56,6 +56,29 @@ class PipelineSpec extends AnyFunSuite {
     assert(written.where(minute(col("datetime")) =!= 0).count() == 0)
   }
 
+  test("EP1 executes the five-feed merge once per run (quality gate and upsert share it)") {
+    // every SQL execution whose plan parses the weather payload (its
+    // explode(arrays_zip(...)) over the hourly series) re-runs the merge
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit = plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      collect(freshStore())
+      org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val merges = plans.asScala.count(p =>
+      p.contains("explode(arrays_zip(") && p.contains("temperature_2m"))
+    assert(merges == 1, s"the merge ran $merges times")
+  }
+
   test("EP1 as-of join: exact matches, equidistant tie -> earlier wins, gap -> null") {
     val out = collect(freshStore()).withColumn("h", hour(col("datetime")))
       .select("h", "retail_price_£_per_kWh").collect()

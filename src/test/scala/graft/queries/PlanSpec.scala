@@ -25,6 +25,35 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
   }
 
+  test("as-of join is single-pass: j2_asof scans events once per input (twice)") {
+    // left clicks + right purchase rates; a re-attach join of the full left
+    // rows to the matches would scan events a third time
+    val p = plan("j2_asof")
+    val scans = p.linesIterator.count(l => l.contains("FileScan") && l.contains("events"))
+    assert(scans == 2, s"expected 2 scans of events, got $scans:\n$p")
+    assert(p.contains("LeftOuter") && p.contains("WindowGroupLimit"), p)
+  }
+
+  test("optimizer fences: each pair-verify kernel appears once in its optimized plan") {
+    // BoundedJaccard (deterministic = false) and the `spark_partition_id() * 0`
+    // terms in the ArrayEqCount/HammingCount columns of ext/Dedup.scala keep
+    // each kernel in ONE Project, with the threshold filter on its attribute. A
+    // Spark upgrade whose optimizer sees through a fence would substitute
+    // the kernel into the filter or join condition and evaluate it again.
+    val kernels = Seq("boundedjaccard", "arrayeqcount", "hammingcount")
+    val queries = Seq("x2_dedup_minhash", "x3_dedup_ngram", "x4_dedup_simhash",
+      "x14_dedup_resolve", "x19_decontaminate", "x20_dedup_incremental",
+      "x34_dedup_collapse")
+    val plans = queries.map(q =>
+      q -> graft.SparkEntry.queries(q)(spark, sf).queryExecution.optimizedPlan.toString).toMap
+    def uses(q: String, k: String) = s"\\b$k\\(".r.findAllMatchIn(plans(q)).size
+    kernels.foreach(k => assert(queries.exists(uses(_, k) > 0), s"no query uses $k"))
+    val wrong = for (q <- queries; k <- kernels if uses(q, k) > 1)
+      yield s"$q: $k x${uses(q, k)} in\n" +
+        plans(q).linesIterator.filter(_.contains(s"$k(")).mkString("\n")
+    assert(wrong.isEmpty, wrong.mkString("\n"))
+  }
+
   test("SQL-surface band join is rewritten to a hash join by BandJoinRewrite") {
     // j6_band_sql writes the naive `abs(l - r) <= tol` predicate through
     // spark.sql — without the optimizer rule this can only plan as a
