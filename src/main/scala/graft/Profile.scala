@@ -45,12 +45,6 @@ object Profile {
             .flatMap(p => Option(p.getProperty("callSite.short"))))
           .getOrElse("")
         jobDescs.put(e.jobId, d)
-        if (sys.env.get("GRAFT_PROFILE_PROPS").contains("1") && d.isEmpty)
-          Option(e.properties).foreach { p =>
-            import scala.jdk.CollectionConverters._
-            jobDescs.put(e.jobId,
-              "props:" + p.stringPropertyNames().asScala.toSeq.sorted.mkString(","))
-          }
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = {
         val a = jobs.get(e.jobId); if (a != null) a(1) = e.time

@@ -458,9 +458,9 @@ object SimSearch {
       corpus, k, rerankFactor, nBits, nTables, dim, seed, qId, qVec, cId, cVec)
 
   /** Probe a PREBUILT [[lshIndexQuantized]] — the deployment path: the
-    * index is built once (and persisted bucketed by (tbl, bucket), with
-    * [[graft.io.Store.appendBucketed]] maintenance — same layout contract
-    * as [[lshIndex]]), query batches probe it without re-hashing or
+    * index is built once (persisted bucketed by (tbl, bucket) via
+    * [[graft.io.Store.writeBucketed]]; new batches append under the same
+    * bucket spec), query batches probe it without re-hashing or
     * re-quantizing the corpus, and only the exact re-rank touches the
     * primary `corpus` store for float vectors. The (nBits, nTables, dim,
     * seed) parameters are the index identity and must match build time.

@@ -31,6 +31,10 @@ import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType}
   *     (bounds come from a NaN-free sample);
   *   - long compare is exact (no double round-trip — a 62-bit curve
   *     index does not fit a double mantissa).
+  *
+  * Equality compares the bounds by CONTENT (a case class compares array
+  * fields by reference), so canonicalization, `semanticEquals` and CSE
+  * match two instances built from equal cut points.
   */
 case class BoundsRankDouble(child: Expression, bounds: Array[Double])
     extends UnaryExpression {
@@ -63,6 +67,13 @@ case class BoundsRankDouble(child: Expression, bounds: Array[Double])
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+
+  override def equals(other: Any): Boolean = other match {
+    case r: BoundsRankDouble => child == r.child && java.util.Arrays.equals(bounds, r.bounds)
+    case _ => false
+  }
+
+  override def hashCode(): Int = 31 * child.hashCode() + java.util.Arrays.hashCode(bounds)
 }
 
 object BoundsRankDouble {
@@ -120,6 +131,13 @@ case class BoundsRankLong(child: Expression, bounds: Array[Long])
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+
+  override def equals(other: Any): Boolean = other match {
+    case r: BoundsRankLong => child == r.child && java.util.Arrays.equals(bounds, r.bounds)
+    case _ => false
+  }
+
+  override def hashCode(): Int = 31 * child.hashCode() + java.util.Arrays.hashCode(bounds)
 }
 
 object BoundsRankLong {

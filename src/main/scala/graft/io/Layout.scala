@@ -20,8 +20,7 @@ import org.apache.spark.sql.SparkSession
   * provenance split plus the layout parameters, as IMMUTABLE per-epoch
   * snapshots under the hidden `.graft_history/v<epoch>` dir — the current
   * manifest is the max committed snapshot (see [[LayoutManifest.read]] /
-  * [[LayoutManifest.write]]; a legacy `_graft_layout` live pointer is
-  * still read, never rewritten).
+  * [[LayoutManifest.write]]).
   *
   * Format: line-oriented `key=value` (file names cannot contain the tab
   * separator), committed via atomic create-exclusive. Deliberately not
@@ -73,11 +72,8 @@ private[graft] case class LayoutManifest(
 
 private[graft] object LayoutManifest {
 
-  val FileName = "_graft_layout"
   val HistoryDirName = ".graft_history"
   val RetiredDirName = ".graft_retired"
-
-  def path(dir: Path) = new Path(dir, FileName)
 
   /** Per-epoch manifest snapshots — the unit of time travel. Dot-prefixed
     * (invisible to scans, travels with the table); one file per epoch
@@ -133,10 +129,7 @@ private[graft] object LayoutManifest {
     * stat refresh must not shift an epoch's wall-clock identity).
     *
     * Claim release last keeps the epoch-CAS read-under-claim race-free:
-    * nobody can win the next claim until this epoch is fully visible. The
-    * legacy live `_graft_layout` pointer (pre-upgrade tables) is retired
-    * here — after a table's first post-upgrade commit only snapshots
-    * remain.
+    * nobody can win the next claim until this epoch is fully visible.
     */
   def write(fs: FileSystem, dir: Path, m: LayoutManifest): Unit = {
     // MONOTONIC commit stamp (Delta's commit-timestamp adjustment): clamp
@@ -149,7 +142,6 @@ private[graft] object LayoutManifest {
     val stamp = math.max(System.currentTimeMillis, prev + 1L)
     writeLinesCreate(fs, snapshotPath(dir, m.epoch),
       m.copy(committedAt = Some(stamp)).lines)
-    fs.delete(path(dir), false)
     fs.delete(claimPath(dir, m.epoch), false)
   }
 
@@ -163,10 +155,8 @@ private[graft] object LayoutManifest {
     * replay can never clobber this refresh because its create-exclusive
     * loses to the existing snapshot.
     */
-  def rewriteSameEpoch(fs: FileSystem, dir: Path, m: LayoutManifest): Unit = {
+  def rewriteSameEpoch(fs: FileSystem, dir: Path, m: LayoutManifest): Unit =
     writeLinesAtomic(fs, snapshotPath(dir, m.epoch), m.lines)
-    fs.delete(path(dir), false)
-  }
 
   /** Atomic small-file write: create under a dot-prefixed tmp name, then
     * rename over the destination with OVERWRITE semantics. A
@@ -279,27 +269,19 @@ private[graft] object LayoutManifest {
     if (vs.isEmpty) None else Some(vs.max)
   }
 
-  /** Whether `dir` is a manifest-tracked table at all: committed history
-    * snapshots (the post-upgrade shape) or a legacy live pointer.
+  /** Whether `dir` is a manifest-tracked table at all: any committed
+    * history snapshot.
     */
-  def exists(fs: FileSystem, dir: Path): Boolean =
-    fs.exists(path(dir)) || maxSnapshotEpoch(fs, dir).isDefined
+  def exists(fs: FileSystem, dir: Path): Boolean = maxSnapshotEpoch(fs, dir).isDefined
 
   /** The COMMITTED manifest: the max `v<N>` history snapshot (the
     * immutable commit pointer — every commit is an atomic create, so the
     * max over the listing can never observe a half-commit or a rollback).
-    * When ANY snapshot exists it wins outright: ever since per-epoch
-    * snapshots were introduced, every commit wrote its snapshot BEFORE
-    * touching the live pointer, so a live pointer can never be ahead of
-    * the snapshot set — the legacy `_graft_layout` file is consulted
-    * only for pre-snapshot-era tables with no history at all, and its
-    * own exists-then-read is retried through [[readAttempt]] because the
-    * table's first post-upgrade commit DELETES it (the retry then finds
-    * the snapshot that commit created first). The retry also absorbs a
-    * vacuum deleting a non-current snapshot between the listing and the
-    * read (vacuum always keeps the max, so the re-list converges). Cost
-    * on the hot path: one history listing + one small read — no
-    * legacy-pointer probe on post-upgrade tables.
+    * The read is retried once through [[readAttempt]]: a commit plus a
+    * vacuum landing between the listing and the read can delete the
+    * snapshot the listing found (FileNotFoundException), and vacuum
+    * always keeps the newest, so the re-list converges. Cost: one history
+    * listing + one small read.
     */
   def read(fs: FileSystem, dir: Path): Option[LayoutManifest] =
     readAttempt(fs, dir, retried = false)
@@ -307,12 +289,7 @@ private[graft] object LayoutManifest {
   private def readAttempt(fs: FileSystem, dir: Path,
                           retried: Boolean): Option[LayoutManifest] = {
     try {
-      maxSnapshotEpoch(fs, dir) match {
-        case Some(v) => Some(fromLines(readLines(fs, snapshotPath(dir, v))))
-        case None =>
-          val p = path(dir)
-          if (fs.exists(p)) Some(fromLines(readLines(fs, p))) else None
-      }
+      maxSnapshotEpoch(fs, dir).map(v => fromLines(readLines(fs, snapshotPath(dir, v))))
     } catch {
       case _: java.io.FileNotFoundException if !retried =>
         readAttempt(fs, dir, retried = true)
@@ -460,12 +437,14 @@ private[graft] object FileRect {
 /** The scoped-commit journal: [[graft.io.Store.scopedRecluster]] cannot
   * promote several files and delete several others in one atomic rename,
   * so it writes this marker FIRST (atomically, after the rewritten data
-  * is fully staged under a hidden tmp dir) and then replays it — every
-  * step idempotent — until the marker is removed. A crash anywhere after
-  * the marker re-drives to completion on the next entry; a crash before
-  * it leaves only hidden tmp garbage and an intact table.
+  * is fully staged under the commit's own hidden stage dir) and then
+  * replays it — every step idempotent — until the marker is removed. A
+  * crash anywhere after the marker re-drives to completion on the next
+  * entry; a crash before it leaves only hidden stage garbage and an
+  * intact table.
   *
-  * Marker lines: `rename=<tmpName>\t<dstName>`, `delete=<name>` (gone for
+  * Marker lines: `tmp=<stageDirName>` (the commit's stage dir, first
+  * line), `rename=<tmpName>\t<dstName>`, `delete=<name>` (gone for
   * good — tables without layout provenance), `retire=<name>` (moved into
   * [[LayoutManifest.retiredDir]] so prior epochs stay readable until
   * vacuum — manifest-tracked tables), and the replacement manifest
@@ -479,18 +458,13 @@ private[graft] object ScopedCommit {
   /** One commit's journal: its own UNIQUE marker file plus the lines it
     * holds. The unique name is load-bearing: a replayer deletes exactly
     * ITS journal's file when done — a successor's journal is a different
-    * file, so the pre-upgrade check-then-delete window (laggard re-reads
-    * the marker, successor overwrites it, laggard deletes the successor's
-    * journal) cannot exist at all.
+    * file, so a check-then-delete window (laggard re-reads the marker,
+    * successor overwrites it, laggard deletes the successor's journal)
+    * cannot exist at all.
     */
   case class Journal(marker: Path, lines: Seq[String])
 
-  /** Legacy fixed marker path — pre-upgrade journals only; new journals
-    * get a unique name ([[newMarkerPath]]) and are found by prefix.
-    */
-  def marker(dir: Path) = new Path(dir, MarkerName)
-
-  /** New journals live in the HIDDEN history dir (`.graft_history/`): the
+  /** Journals live in the HIDDEN history dir (`.graft_history/`): the
     * recovery check that every mutator AND every per-statement DSv2 read
     * runs must stay O(1)-ish — listing the TABLE root to find markers
     * would be an O(data files) metadata pass per statement on a 100 TB
@@ -503,32 +477,25 @@ private[graft] object ScopedCommit {
     new Path(LayoutManifest.historyDir(dir),
       s"$MarkerName-${java.util.UUID.randomUUID.toString.take(8)}")
 
-  /** Every journal marker under `dir` (the unique-named ones in the
-    * history dir and a legacy fixed-name one at the root), name-sorted
-    * for deterministic replay order — replay is idempotent and journals
-    * touch disjoint files (epoch-unique promote names, per-journal stage
-    * dirs), so order is correctness-neutral. Cost: one exists probe plus
-    * one small-dir listing.
+  /** Every journal marker under `dir`'s history dir, name-sorted for
+    * deterministic replay order — replay is idempotent and journals touch
+    * disjoint files (epoch-unique promote names, per-journal stage dirs),
+    * so order is correctness-neutral. Cost: one small-dir listing.
     */
   def markers(fs: FileSystem, dir: Path): Seq[Path] = {
-    val legacy = if (fs.exists(marker(dir))) Seq(marker(dir)) else Nil
     val hd = LayoutManifest.historyDir(dir)
-    val fresh =
-      if (!fs.exists(hd)) Nil
-      else fs.listStatus(hd).toSeq
-        .filter(st => st.isFile && st.getPath.getName.startsWith(MarkerName))
-        .map(_.getPath).sortBy(_.getName)
-    legacy ++ fresh
+    if (!fs.exists(hd)) Nil
+    else fs.listStatus(hd).toSeq
+      .filter(st => st.isFile && st.getPath.getName.startsWith(MarkerName))
+      .map(_.getPath).sortBy(_.getName)
   }
 
   def anyMarker(fs: FileSystem, dir: Path): Boolean = markers(fs, dir).nonEmpty
 
-  def tmpDir(dir: Path) = new Path(dir, TmpDirName)
-
   /** A FRESH stage dir for one commit attempt — unique per journal, and
     * recorded in the journal's own `tmp=` line, so a LAGGARD replayer of
     * an old journal can only ever clean its own journal's stage, never a
-    * successor's (the fixed shared name made that a real race: laggard
+    * successor's (a shared fixed name would be a real race: laggard
     * wakes after the successor claimed and staged, deletes the shared
     * dir, successor's renames silently no-op).
     */
@@ -558,11 +525,10 @@ private[graft] object ScopedCommit {
     */
   def write(fs: FileSystem, dir: Path, renames: Seq[(String, String)],
             deletes: Seq[String], manifest: Option[LayoutManifest],
-            retires: Seq[String] = Nil, stage: Path = null): Journal = {
+            retires: Seq[String] = Nil, stage: Path): Journal = {
     // the journal records ITS stage dir (`tmp=` line); replay renames out
-    // of and cleans exactly that dir — absent (pre-upgrade journals), the
-    // legacy fixed name applies
-    val lines = Option(stage).map(s => s"tmp=${s.getName}").toSeq ++
+    // of and cleans exactly that dir
+    val lines = Seq(s"tmp=${stage.getName}") ++
       renames.map { case (s, d) => s"rename=$s\t$d" } ++
       deletes.map(d => s"delete=$d") ++
       retires.map(r => s"retire=$r") ++
@@ -615,9 +581,9 @@ private[graft] object ScopedCommit {
 
   def replay(fs: FileSystem, dir: Path, j: Journal): Unit = {
     val lines = j.lines
-    val tmp = lines.collectFirst {
-      case l if l.startsWith("tmp=") => new Path(dir, l.stripPrefix("tmp="))
-    }.getOrElse(tmpDir(dir))
+    val tmp = new Path(dir, lines.collectFirst {
+      case l if l.startsWith("tmp=") => l.stripPrefix("tmp=")
+    }.get)
     // Two replayers of the SAME journal may run concurrently (the
     // committing writer and a reader-driven recover, or two readers): every
     // step below treats "src gone but dst present" as that step already
@@ -683,8 +649,7 @@ private[graft] object ScopedCommit {
         LayoutManifest.write(fs, dir, jm)
     }
     // Delete THIS journal's own marker file — unique name, so a laggard
-    // can never delete a successor's journal (the pre-upgrade fixed-name
-    // marker had exactly that check-then-delete window).
+    // can never delete a successor's journal.
     fs.delete(j.marker, false)
   }
 }

@@ -75,9 +75,6 @@ class Store(spark: SparkSession, baseDir: String) {
       .partitionBy("dt")
       .parquet(s"$baseDir/$rel")
 
-  def readPartitioned(rel: String): DataFrame =
-    spark.read.parquet(s"$baseDir/$rel").drop("dt")
-
   /** MANAGED date-partitioned table: [[writePartitioned]]'s layout under
     * the same manifest-epoch machinery as the curve stores — every write
     * commits an epoch (journaled, CAS-guarded), replaced files RETIRE into
@@ -238,22 +235,6 @@ class Store(spark: SparkSession, baseDir: String) {
     val (d, b) = if (i < 0) ("", s) else (s.substring(0, i + 1), s.substring(i + 1))
     s"${d}part-$prefix$epoch-${b.stripPrefix("part-")}"
   }
-
-  /** Schema-evolution read: scan a parquet table whose OLDER files
-    * predate newly added columns, by declaring the current superset
-    * schema explicitly — absent columns read as null from old files,
-    * present ones read normally, and pushdown/pruning still work
-    * (StoreSpec pins both). This is the 100-TB discipline for additive
-    * drift: `mergeSchema=true` would reconcile the union by reading a
-    * footer from EVERY file — a full listing+footer pass over the table
-    * per query — when the reader already knows the current schema. The
-    * schema comes from the catalog/code, not from the data. Column
-    * REMOVALS or type changes are not tolerated silently: reading an old
-    * column under a new type fails analysis/scan loudly, which is the
-    * correct behavior for a lakehouse table without a rewrite.
-    */
-  def readEvolved(rel: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).parquet(s"$baseDir/$rel")
 
   /** SCHEMA EVOLUTION on a manifest-tracked store — `ALTER TABLE ADD
     * COLUMN(S)` without rewriting a byte of data: commits a new epoch with
@@ -822,7 +803,8 @@ class Store(spark: SparkSession, baseDir: String) {
 
   /** Restore a clustered/z-ordered table's layout after appends: one full
     * re-sort into `files` fresh files, swapped in atomically with the
-    * park-aside/rename discipline (crash-recovered like [[compact]]).
+    * park-aside/rename discipline ([[Store.swapInto]], crash-recovered by
+    * [[Store.recoverSwap]]).
     * At 100 TB this is the amortized OPTIMIZE pass — its range exchange
     * costs one table rewrite and every later scan's skipping pays it
     * back; schedule it by appended-bytes fraction, not per batch.
@@ -905,7 +887,6 @@ class Store(spark: SparkSession, baseDir: String) {
       LayoutManifest.write(fs, target,
         LayoutManifest(zCols, bits, files, epoch = 0L,
           base = listDataFiles(target), appends = Nil, lastBatch = prevBatch))
-    else fs.delete(LayoutManifest.path(target), false)
     refreshCatalog(target)
   }
 
@@ -1002,16 +983,15 @@ class Store(spark: SparkSession, baseDir: String) {
     * be forced to read both files. Untouched base files are never opened:
     * same name, same bytes, same mtime (StoreSpec pins all three).
     *
-    * Provenance comes from the `_graft_layout` manifest
+    * Provenance comes from the layout manifest
     * ([[LayoutManifest]] explains why geometry alone cannot detect
     * erosion); the rewrite region is re-staged through the same curve and
     * promoted with a journaled multi-file commit ([[ScopedCommit]]): data
     * staged under a hidden tmp dir, marker written atomically, then
     * rename-in/delete-originals replayed idempotently — a crash anywhere
     * re-drives to completion at the next layout operation, and no window
-    * ever shows a reader missing rows (mid-commit duplicates are possible
-    * under the single-writer contract, exactly like [[compact]]'s
-    * documented swap window).
+    * ever shows a reader missing rows (a directory listing taken
+    * mid-commit can see duplicates; [[readSnapshot]] never does).
     *
     * Output file count scales with the rewritten fraction
     * (`files * rewrittenBytes/totalBytes`, min 1), so repeated scoped
@@ -1708,12 +1688,11 @@ class Store(spark: SparkSession, baseDir: String) {
     * `maxAppendFiles` is the SMALL-FILE trigger the erosion statistic
     * cannot see: many thin append layers in fresh key space never erode a
     * base rect (each probe still touches few files), but every scan pays
-    * their per-file open/footer overhead — and [[compact]] correctly
-    * refuses curve tables. When the accreted append-layer file count
-    * crosses the threshold, the scoped pass runs anyway: append files are
-    * always in its rewrite region, so thin layers fold into ~file-sized
-    * output (output count scales with rewritten bytes) while untouched
-    * base files still never move.
+    * their per-file open/footer overhead. When the accreted append-layer
+    * file count crosses the threshold, the scoped pass runs anyway:
+    * append files are always in its rewrite region, so thin layers fold
+    * into ~file-sized output (output count scales with rewritten bytes)
+    * while untouched base files still never move.
     */
   def maintainZordered(rel: String, maxTouchedPerProbe: Double,
                        maxAppendFiles: Option[Int] = None): Option[ScopedStats] = {
@@ -1774,11 +1753,8 @@ class Store(spark: SparkSession, baseDir: String) {
     * streaming face diffs epochs by name; a vacuumed snapshot stays loud).
     */
   private[graft] def versionFileNames(rel: String, epoch: Long): Seq[String] = {
-    val dir = new Path(s"$baseDir/$rel")
-    val hp = new Path(LayoutManifest.historyDir(dir), s"v$epoch")
-    val liveM = LayoutManifest.read(fs, dir)
-    if (liveM.exists(_.epoch == epoch) && !fs.exists(hp)) liveM.get.allFiles
-    else if (fs.exists(hp))
+    val hp = LayoutManifest.snapshotPath(new Path(s"$baseDir/$rel"), epoch)
+    if (fs.exists(hp))
       LayoutManifest.fromLines(LayoutManifest.readLines(fs, hp)).allFiles
     else throw new IllegalStateException(
       s"epoch $epoch of $rel is not readable — vacuumed, never committed, or an " +
@@ -1802,36 +1778,16 @@ class Store(spark: SparkSession, baseDir: String) {
     */
   def versionHistory(rel: String): Seq[VersionInfo] = {
     val dir = new Path(s"$baseDir/$rel")
-    val liveM = LayoutManifest.read(fs, dir)
-    val current = liveM.map(_.epoch).getOrElse(-1L)
-    val hd = LayoutManifest.historyDir(dir)
-    // listVersions lists only epochs WITH a v<epoch> snapshot — a
-    // pre-upgrade table (live manifest from before per-epoch snapshots)
-    // has a readable current epoch with none, exactly the case
-    // readVersion serves; include it, or $history would list empty for a
-    // table the user can in fact time-travel
-    val vs = listVersions(rel)
-    val all = if (current >= 0 && !vs.contains(current)) vs :+ current else vs
-    all.flatMap { e =>
+    val current = LayoutManifest.read(fs, dir).map(_.epoch).getOrElse(-1L)
+    listVersions(rel).flatMap { e =>
       // a vacuum racing this listing may drop a snapshot mid-iteration:
-      // skip that row rather than fabricate one from the live manifest.
-      // The live-manifest fallback serves ONLY the current epoch (the
-      // pre-upgrade shape) — for any other epoch a missing snapshot IS
-      // the vacuum race, and emitting it would list an unreadable epoch
-      // with wrong metadata.
+      // skip that row rather than list an unreadable epoch
       try {
-        val p = new Path(hd, s"v$e")
-        if (fs.exists(p)) {
-          val sm = LayoutManifest.fromLines(LayoutManifest.readLines(fs, p))
-          Some(VersionInfo(e,
-            sm.committedAt.getOrElse(fs.getFileStatus(p).getModificationTime),
-            sm.allFiles.size, e == current))
-        } else if (e == current) // pre-upgrade: the live manifest IS the snapshot
-          Some(VersionInfo(e,
-            liveM.flatMap(_.committedAt).getOrElse(
-              fs.getFileStatus(LayoutManifest.path(dir)).getModificationTime),
-            liveM.map(_.allFiles.size).getOrElse(0), isCurrent = true))
-        else None
+        val p = LayoutManifest.snapshotPath(dir, e)
+        val sm = LayoutManifest.fromLines(LayoutManifest.readLines(fs, p))
+        Some(VersionInfo(e,
+          sm.committedAt.getOrElse(fs.getFileStatus(p).getModificationTime),
+          sm.allFiles.size, e == current))
       } catch { case _: java.io.FileNotFoundException => None }
     }
   }
@@ -1973,9 +1929,9 @@ class Store(spark: SparkSession, baseDir: String) {
     * [[claimEpoch]]; committed snapshots are [[vacuum]]'s to manage.
     * SNAPSHOTS are never touched here: under the immutable-pointer
     * discipline a `v<N>` file IS a committed epoch (its create is the
-    * commit point, sequenced after all data motion) — the pre-upgrade
-    * "phantom snapshot" state cannot be produced anymore, and deleting
-    * the max snapshot would BE the rollback this design eliminates.
+    * commit point, sequenced after all data motion) — a "phantom
+    * snapshot" state cannot be produced, and deleting the max snapshot
+    * would BE the rollback this design eliminates.
     */
   def releaseStaleClaims(rel: String): Int = {
     val dir = new Path(s"$baseDir/$rel")
@@ -2054,30 +2010,21 @@ class Store(spark: SparkSession, baseDir: String) {
     val dir = new Path(s"$baseDir/$rel")
     Store.recoverSwap(fs, dir)
     ScopedCommit.recover(fs, dir)
-    val hp = new Path(LayoutManifest.historyDir(dir), s"v$epoch")
     // epoch <= committed: with immutable commit pointers the committed
     // epoch IS the max snapshot, so this is a consistency bound (a commit
     // racing this resolution stays invisible until re-resolved), not a
     // phantom filter — a v<N> snapshot is a commit by construction
-    val liveM = LayoutManifest.read(fs, dir)
-    val committed = liveM.map(_.epoch).getOrElse(-1L)
-    val snapshotOk = fs.exists(hp) && fs.getFileStatus(hp).getLen > 0L &&
-      LayoutManifest.readLines(fs, hp).exists(_.startsWith("zcols="))
-    val m =
-      if (epoch <= committed && snapshotOk)
-        LayoutManifest.fromLines(LayoutManifest.readLines(fs, hp))
-      else if (liveM.isDefined && epoch == committed)
-        // pre-upgrade table: a live manifest written before per-epoch
-        // snapshots existed has no v<epoch> file, but by the crash contract
-        // (snapshot first, manifest second, FILE SET per epoch immutable)
-        // the live manifest IS the current epoch's snapshot content — serve
-        // it rather than declaring a valid table unreadable until its
-        // first post-upgrade mutation
-        liveM.get
-      else
-        throw new IllegalStateException(
-          s"epoch $epoch of $rel is not readable — vacuumed, never committed, or an " +
-            s"unfinished claim (available: ${listVersions(rel).mkString(", ")})")
+    val committed = LayoutManifest.read(fs, dir).map(_.epoch).getOrElse(-1L)
+    // one read of the snapshot; missing, empty and non-manifest are all loud
+    val lines =
+      if (epoch > committed) Nil
+      else try LayoutManifest.readLines(fs, LayoutManifest.snapshotPath(dir, epoch))
+      catch { case _: java.io.FileNotFoundException => Nil }
+    if (!lines.exists(_.startsWith("zcols=")))
+      throw new IllegalStateException(
+        s"epoch $epoch of $rel is not readable — vacuumed, never committed, or an " +
+          s"unfinished claim (available: ${listVersions(rel).mkString(", ")})")
+    val m = LayoutManifest.fromLines(lines)
     val live = listDataFilesDeep(dir).toSet
     val retired = listRetired(dir).keySet
     val paths = m.allFiles.map { n =>
@@ -2143,55 +2090,11 @@ class Store(spark: SparkSession, baseDir: String) {
     out.result()
   }
 
-  /** Mechanized form of [[readVersion]]'s documented concurrency
-    * boundary: resolution is eager, the frame is lazy — a maintenance
-    * pass that RETIRES a resolved-live file (or a vacuum that deletes a
-    * resolved-retired one) between resolution and the action fails the
-    * scan loudly with a missing-file error. This wrapper re-resolves and
-    * re-runs `action` on exactly that failure shape, up to `retries`
-    * times: the re-resolution finds every file at its current home (live
-    * vs retired), so a read overlapping maintenance self-heals instead of
-    * surfacing an infrastructure error to the caller. Any other failure
-    * — and a missing-file error that persists past the retries (a
-    * genuinely vacuumed epoch) — stays loud. `action` must be pure
-    * w.r.t. the frame (it may run more than once).
-    */
-  def withVersionRetry[T](rel: String, epoch: Long, retries: Int = 3)(
-      action: DataFrame => T): T =
-    retryResolve(retries, () => readVersion(rel, epoch), action)
-
-  /** [[withVersionRetry]] for the CURRENT epoch: each attempt re-resolves
-    * through [[readSnapshot]], so a retry lands on the newest committed
-    * epoch (which may have advanced past the one that failed) — the right
-    * semantics for a "read the table now" consumer under continuous
-    * maintenance.
-    */
-  def withSnapshotRetry[T](rel: String, retries: Int = 3)(
-      action: DataFrame => T): T =
-    retryResolve(retries, () => readSnapshot(rel), action)
-
-  @annotation.tailrec
-  private def retryResolve[T](attemptsLeft: Int, resolve: () => DataFrame,
-                              action: DataFrame => T): T = {
-    val df = resolve()
-    val out =
-      try Right(action(df))
-      catch {
-        case e: Throwable if attemptsLeft > 0 && Store.isMissingFileError(e) =>
-          Left(e)
-      }
-    out match {
-      case Right(v) => v
-      case Left(_) => retryResolve(attemptsLeft - 1, resolve, action)
-    }
-  }
-
   /** Manifest-driven read of the CURRENT epoch — the duplicate-free
     * alternative to listing the live directory: a listing taken between a
     * journal's rename-in and retire steps sees promoted copies AND
-    * originals at once (compact's documented window); the manifest pins
-    * exactly one file set. Use for correctness-critical reads of tables
-    * under continuous maintenance.
+    * originals at once; the manifest pins exactly one file set. Use for
+    * correctness-critical reads of tables under continuous maintenance.
     */
   def readSnapshot(rel: String): DataFrame = {
     val r = resolveSnapshot(rel)
@@ -2349,16 +2252,6 @@ class Store(spark: SparkSession, baseDir: String) {
     else perEpoch.reduce(_ unionByName _)
   }
 
-  /** SQL face of [[changeFeed]]: register `view` over the change rows of
-    * `(sinceEpoch, untilEpoch]`, so a pure-SQL consumer reads
-    * `SELECT ... FROM view` — the `table_changes(...)` role. The view is
-    * a plain temp view over the lazily-planned feed (epoch-bounded
-    * content never changes, so there is nothing to re-pin).
-    */
-  def registerChangeView(view: String, rel: String, key: Seq[String],
-                         sinceEpoch: Long, untilEpoch: Option[Long] = None): Unit =
-    changeFeed(rel, key, sinceEpoch, untilEpoch).createOrReplaceTempView(view)
-
   /** Result of a [[vacuum]] pass, for logging and specs. */
   case class VacuumStats(keptEpochs: Seq[Long], droppedEpochs: Seq[Long],
                          removedFiles: Int, reclaimedBytes: Long)
@@ -2454,59 +2347,15 @@ class Store(spark: SparkSession, baseDir: String) {
     else None
   }
 
-  /** Small-file compaction — the operational complement of continuous
-    * sinks (a streaming upsert/append sink accretes one-file-per-batch
-    * until scans drown in per-file open/footer overhead): rewrite `rel`
-    * into ~`targetBytes` files, byte-identical rows, swapped in with the
-    * park-aside/rename discipline of [[writeCsv]] so a failed swap rolls
-    * back with the data intact.
-    *
-    * Concurrency contract: single writer, no concurrent readers DURING the
-    * swap. Each rename is atomic but the pair is not — between
-    * rename(target, old) and rename(tmp, target) the table path briefly
-    * does not exist, so a reader racing the swap can fail with
-    * path-not-found (it never sees PARTIAL data; retry-on-missing is
-    * enough). A table that must stay readable under concurrent scans at
-    * all instants needs a catalog/manifest indirection (swap a pointer,
-    * not the directory) — out of scope for this path-addressed store.
-    */
-  def compact(rel: String, targetBytes: Long = 128L * 1024 * 1024): Unit = {
-    val target = new Path(s"$baseDir/$rel")
-    // a compact interrupted mid-swap parks the table; restore before the
-    // size probe and read, or the rewrite would compact a phantom
-    Store.recoverSwap(fs, target)
-    // likewise drive an interrupted scoped commit to completion first:
-    // reading mid-journal duplicates (promoted copies + not-yet-deleted
-    // originals) would bake them into the compacted table permanently
-    ScopedCommit.recover(fs, target)
-    // a curve-clustered table must not be compacted: repartition(n) would
-    // destroy the layout while the manifest still declares its files
-    // pristine — and silently discard the exactly-once batch watermark.
-    // recluster/scopedRecluster already manage file counts for z-tables.
-    require(LayoutManifest.read(fs, target).isEmpty,
-      s"$rel is curve-clustered (has a layout manifest) — compact would destroy " +
-        "the layout and its provenance; use recluster/scopedRecluster instead")
-    val totalBytes = fs.getContentSummary(target).getLength
-    val n = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val tmp = new Path(target.getParent, s".tmp_${target.getName}")
-    // the read is lazy but executes fully during the tmp write, while the
-    // target is still intact; only after tmp is complete does the swap run
-    spark.read.parquet(target.toString)
-      .repartition(n)
-      .write.mode("overwrite").parquet(tmp.toString)
-    Store.swapInto(fs, tmp, target)
-    refreshCatalog(target)
-  }
-
   /** Result of a [[compactPartitionsManaged]] pass, for logging and specs. */
   case class PartCompactStats(partitionsCompacted: Int, filesIn: Int,
                               filesOut: Int, bytesRewritten: Long)
 
   /** Small-file compaction for MANAGED PARTITIONED stores — the
-    * maintenance half the partitioned shape was missing ([[compact]]
-    * refuses manifest tables; [[scopedRecluster]] refuses partitioned
-    * ones): each nightly [[upsertPartitionsManaged]] writes its day in
-    * as many files as tasks carried rows, and a month of ingests leaves
+    * maintenance half the partitioned shape was missing
+    * ([[scopedRecluster]] refuses partitioned stores): each nightly
+    * [[upsertPartitionsManaged]] writes its day in as many files as tasks
+    * carried rows, and a month of ingests leaves
     * every partition paying per-file open/footer overhead on every scan.
     * This pass rewrites ONLY the partitions whose file count exceeds both
     * `maxFilesPerPartition` and their byte-optimal count
@@ -2610,21 +2459,6 @@ class Store(spark: SparkSession, baseDir: String) {
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .option("path", s"$baseDir/$table")
       .saveAsTable(table)
-
-  /** Append a new batch's rows to an existing bucketed table (bucket spec
-    * must match the original write) — index MAINTENANCE: e.g. appending
-    * `lshIndex(newBatch)` to the corpus LSH index means only the batch is
-    * hashed and shuffled; the existing corpus index files are untouched.
-    */
-  def appendBucketed(df: DataFrame, table: String, bucketCols: Seq[String],
-                     buckets: Int = 32): Unit =
-    df.write.mode("append")
-      .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .option("path", s"$baseDir/$table")
-      .saveAsTable(table)
-
-  def readTable(table: String): DataFrame = spark.table(table)
 
   /** Catalog face for the layout sinks: register a path-addressed
     * clustered/z-ordered/partitioned store as an EXTERNAL parquet table
@@ -2976,45 +2810,21 @@ object Store {
     }
   }
 
-  /** The failure shape of a scan whose resolved FILE moved under it
-    * (retire/vacuum between resolution and action): a FileNotFoundException
-    * anywhere in the cause chain, or Spark's FILE_NOT_FOUND /
-    * FAILED_READ_FILE.FILE_NOT_EXIST error classes. Deliberately NOT a
-    * generic "does not exist" substring: analysis-time path/table/partition
-    * errors (PATH_NOT_FOUND, TABLE_OR_VIEW_NOT_FOUND) are permanent user
-    * errors that a retry would only re-run — possibly expensively — before
-    * surfacing. Nothing else qualifies; a genuine data error must never be
-    * retried into.
-    */
-  private[graft] def isMissingFileError(e: Throwable): Boolean = {
-    var c: Throwable = e
-    var seen = 0
-    while (c != null && seen < 16) {
-      if (c.isInstanceOf[java.io.FileNotFoundException]) return true
-      val m = Option(c.getMessage).getOrElse("")
-      if (m.contains("FILE_NOT_FOUND") || m.contains("FILE_NOT_EXIST")) return true
-      val next = c.getCause
-      c = if (next eq c) null else next
-      seen += 1
-    }
-    false
-  }
-
   /** Park-aside/rename swap of a fully-written `tmp` directory into
     * `target` — the shared durability discipline of [[Store.writeCsv]],
-    * [[Store.compact]], and the streaming upsert sinks: the old data is
-    * parked aside (never deleted first), so a failed swap rolls back with
-    * the target intact, and nothing reads and overwrites the same files
-    * in one plan. The park path is dot-prefixed, so Spark scans ignore a
-    * crash's leftovers. Single writer; a reader racing the swap can see a
-    * briefly missing target (one rename wide), never partial data — see
-    * [[Store.compact]]'s concurrency note.
+    * the unmanaged [[Store.recluster]], and the streaming upsert sinks:
+    * the old data is parked aside (never deleted first), so a failed swap
+    * rolls back with the target intact, and nothing reads and overwrites
+    * the same files in one plan. The park path is dot-prefixed, so Spark
+    * scans ignore a crash's leftovers. Single writer; a reader racing the
+    * swap can see a briefly missing target (one rename wide), never
+    * partial data.
     *
     * Crash window: a HARD crash between rename(target, old) and
     * rename(tmp, target) leaves the table parked under the dot-prefixed
     * park path with the target missing — in-process rollback only runs
     * when the process survives to see the second rename fail. Every
-    * caller that READS the target before merging (compact, the upsert
+    * caller that READS the target before merging (recluster, the upsert
     * sinks) must call [[recoverSwap]] first, so a replay merges against
     * the real stored table instead of a phantom empty one and never
     * reaches this method's `fs.delete(old)` with the parked copy as the

@@ -506,7 +506,7 @@ class SimSearchSpec extends AnyFunSuite {
     val store = new graft.io.Store(spark,
       java.nio.file.Files.createTempDirectory("graft_lsh_idx").toString)
     store.writeBucketed(idx, "lsh_idx", Seq("tbl", "bucket"), buckets = 8)
-    assert(asSet(SimSearch.lshTopKFromIndex(q, store.readTable("lsh_idx"), k = 3)) == direct)
+    assert(asSet(SimSearch.lshTopKFromIndex(q, spark.table("lsh_idx"), k = 3)) == direct)
   }
 
   test("lsh index maintenance: appending a batch's index rows == full rebuild") {
@@ -514,15 +514,17 @@ class SimSearchSpec extends AnyFunSuite {
     def asSet(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     // corpus indexed yesterday; today's batch appended WITHOUT re-hashing it
-    val store = new graft.io.Store(spark,
-      java.nio.file.Files.createTempDirectory("graft_lsh_append").toString)
+    val base = java.nio.file.Files.createTempDirectory("graft_lsh_append").toString
+    val store = new graft.io.Store(spark, base)
     store.writeBucketed(SimSearch.lshIndex(e.where(col("vec_id") >= 10)),
       "lsh_idx_m", Seq("tbl", "bucket"), buckets = 8)
-    store.appendBucketed(SimSearch.lshIndex(e.where(col("vec_id") < 10)),
-      "lsh_idx_m", Seq("tbl", "bucket"), buckets = 8)
+    // same bucket spec as the original write
+    SimSearch.lshIndex(e.where(col("vec_id") < 10)).write.mode("append")
+      .bucketBy(8, "tbl", "bucket").sortBy("tbl", "bucket")
+      .option("path", s"$base/lsh_idx_m").saveAsTable("lsh_idx_m")
     val q = e.where(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-    val maintained = asSet(SimSearch.lshTopKFromIndex(q, store.readTable("lsh_idx_m"), k = 3))
+    val maintained = asSet(SimSearch.lshTopKFromIndex(q, spark.table("lsh_idx_m"), k = 3))
     val rebuilt = asSet(SimSearch.lshTopKFromIndex(q, SimSearch.lshIndex(e), k = 3))
     assert(maintained == rebuilt)
   }
@@ -590,7 +592,7 @@ class SimSearchSpec extends AnyFunSuite {
       java.nio.file.Files.createTempDirectory("graft_ivf_idx").toString)
     store.writeBucketed(cells, "ivf_cells", Seq("cell"), buckets = 8)
     assert(asSet(SimSearch.ivfTopKFromIndex(
-      q, store.readTable("ivf_cells"), centroids, k = 3, nProbe = 4)) == direct)
+      q, spark.table("ivf_cells"), centroids, k = 3, nProbe = 4)) == direct)
   }
 
   test("quantized serving: a prebuilt bucketed on-disk index answers like the direct path") {
@@ -605,7 +607,7 @@ class SimSearchSpec extends AnyFunSuite {
     store.writeBucketed(SimSearch.lshIndexQuantized(e), "q_idx", Seq("tbl", "bucket"),
       buckets = 8)
     assert(asSet(SimSearch.quantizedTopKFromIndex(
-      q, store.readTable("q_idx"), e, k = 3)) == direct)
+      q, spark.table("q_idx"), e, k = 3)) == direct)
   }
 
   test("int8 dot product: codegen expression equals the interpreted zip_with form") {
@@ -1605,6 +1607,19 @@ class FunctionsSpec extends AnyFunSuite {
     // the precision trap itself: b and b+1 must rank differently around b
     assert(graft.functions.BoundsRankLong.compute(base, boundsL) == 0)
     assert(graft.functions.BoundsRankLong.compute(base + 1L, boundsL) == 1)
+  }
+
+  test("BoundsRank: instances with equal bounds are semantically equal (CSE)") {
+    // fresh arrays with equal content, as two staging writes build them
+    val child = org.apache.spark.sql.GraftBridge.toExpression(col("v"))
+    val d1 = graft.functions.BoundsRankDouble(child, Array(1.0, 2.5, 7.0))
+    val d2 = graft.functions.BoundsRankDouble(child, Array(1.0, 2.5, 7.0))
+    assert(d1 == d2 && d1.hashCode == d2.hashCode && d1.semanticEquals(d2))
+    assert(d1 != d1.copy(bounds = Array(1.0, 2.5)))
+    val l1 = graft.functions.BoundsRankLong(child, Array(1L, 1L << 62))
+    val l2 = graft.functions.BoundsRankLong(child, Array(1L, 1L << 62))
+    assert(l1 == l2 && l1.hashCode == l2.hashCode && l1.semanticEquals(l2))
+    assert(l1 != l1.copy(bounds = Array(1L, (1L << 62) + 1L)))
   }
 
   test("BoundedJaccard: filter(>= t) keeps exactly the exact-Jaccard >= t " +

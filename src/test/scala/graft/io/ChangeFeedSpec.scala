@@ -130,7 +130,7 @@ class ChangeFeedSpec extends AnyFunSuite {
     // partition column rides along
     assert(feed.where(col("dt") =!= lit("2024-03-02").cast("date")).count() == 0)
     // SQL face
-    store.registerChangeView("ptbl_changes", "ptbl", Seq("k"), 0)
+    store.changeFeed("ptbl", Seq("k"), 0).createOrReplaceTempView("ptbl_changes")
     assert(spark.sql(
       "SELECT COUNT(*) FROM ptbl_changes WHERE _change_type = 'insert'")
       .head.getLong(0) == 1)

@@ -96,8 +96,5 @@ class PartCompactSpec extends AnyFunSuite {
       "ztbl", Seq("k", "v"), files = 2)
     val e = intercept[Exception] { store.compactPartitionsManaged("ztbl") }
     assert(e.getMessage.contains("curve"), e.getMessage)
-    // and the flat-dir compact still refuses manifest tables
-    val e2 = intercept[Exception] { store.compact("ptbl") }
-    assert(e2.getMessage.contains("manifest"), e2.getMessage)
   }
 }

@@ -173,7 +173,7 @@ class PartitionedManifestSpec extends AnyFunSuite {
     val m = LayoutManifest.read(fs, dir).get
     val victim = m.base.head // dt=…/part-w0-…
     val vdir = victim.substring(0, victim.lastIndexOf('/'))
-    val tmp = ScopedCommit.tmpDir(dir)
+    val tmp = ScopedCommit.newStageDir(dir)
     fs.mkdirs(new org.apache.hadoop.fs.Path(tmp, vdir))
     assert(org.apache.hadoop.fs.FileUtil.copy(fs,
       new org.apache.hadoop.fs.Path(dir, victim), fs,
@@ -184,10 +184,10 @@ class PartitionedManifestSpec extends AnyFunSuite {
     ScopedCommit.write(fs, dir, renames = Seq(victim -> promoted),
       deletes = Nil, retires = Seq(victim),
       manifest = Some(m.copy(epoch = 9L,
-        base = (m.base.filterNot(_ == victim) :+ promoted).sorted)))
+        base = (m.base.filterNot(_ == victim) :+ promoted).sorted)), stage = tmp)
     // any entry recovers the journal; both epochs then read exactly
     assert(rows(store.readVersion("tbl", 0L)) == epoch0)
-    assert(!fs.exists(ScopedCommit.marker(dir)))
+    assert(ScopedCommit.markers(fs, dir).isEmpty)
     assert(fs.exists(LayoutManifest.retiredPath(dir, victim)),
       "the replayed retire must land in the partition's nested retired dir")
     assert(rows(store.readVersion("tbl", 9L)) == epoch0)
@@ -205,7 +205,6 @@ class PartitionedManifestSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       store.maintainZordered("ptbl", maxTouchedPerProbe = 1.0)
     }
-    intercept[IllegalArgumentException] { store.compact("ptbl") }
     intercept[IllegalArgumentException] {
       store.appendZordered(df.select(col("k"), col("v")), "ptbl", Seq("k", "v"))
     }

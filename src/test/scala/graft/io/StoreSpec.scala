@@ -12,7 +12,8 @@ class StoreSpec extends AnyFunSuite {
 
   test("partitioned parquet: dynamic overwrite touches only the delta's partitions") {
     import spark.implicits._
-    val store = new Store(spark, Files.createTempDirectory("graft_part").toString)
+    val base = Files.createTempDirectory("graft_part").toString
+    val store = new Store(spark, base)
     val day1 = Seq(
       (java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), 1.0),
       (java.sql.Timestamp.valueOf("2024-01-02 10:00:00"), 2.0)).toDF("datetime", "v")
@@ -20,7 +21,7 @@ class StoreSpec extends AnyFunSuite {
     // overwrite ONLY 2024-01-02 with a new value
     val delta = Seq((java.sql.Timestamp.valueOf("2024-01-02 10:00:00"), 99.0)).toDF("datetime", "v")
     store.writePartitioned(delta, "hist")
-    val out = store.readPartitioned("hist").collect()
+    val out = spark.read.parquet(s"$base/hist").drop("dt").collect()
       .map(r => r.getTimestamp(0).toString -> r.getDouble(1)).toMap
     assert(out("2024-01-01 10:00:00.0") == 1.0) // untouched partition survives
     assert(out("2024-01-02 10:00:00.0") == 99.0) // delta partition replaced
@@ -206,27 +207,6 @@ class StoreSpec extends AnyFunSuite {
     assert(shipped.nonEmpty && rederived == shipped)
   }
 
-  test("compact: many small files collapse to few, rows byte-identical, swap is atomic") {
-    import spark.implicits._
-    val base = Files.createTempDirectory("graft_compact").toString
-    val store = new Store(spark, base)
-    // simulate a continuous sink's accretion: 16 one-row-ish files
-    (1L to 16L).map(i => Seq((i, s"v$i")).toDF("k", "v"))
-      .foreach(_.write.mode("append").parquet(s"$base/tbl"))
-    val before = spark.read.parquet(s"$base/tbl")
-    val want = before.collect().map(_.toString).sorted.toSeq
-    val filesBefore = before.select(input_file_name()).distinct().count()
-    assert(filesBefore >= 16)
-    store.compact("tbl", targetBytes = Long.MaxValue) // everything fits one file
-    val after = spark.read.parquet(s"$base/tbl")
-    assert(after.select(input_file_name()).distinct().count() == 1)
-    assert(after.collect().map(_.toString).sorted.toSeq == want)
-    // no tmp/old debris left beside the table
-    val leftovers = Files.list(java.nio.file.Paths.get(base))
-      .map(_.getFileName.toString).filter(n => n.startsWith(".tmp_") || n.startsWith(".old_"))
-    assert(leftovers.count() == 0)
-  }
-
   test("z-order appends erode skipping per batch; recluster restores it atomically") {
     import spark.implicits._
     val base = Files.createTempDirectory("graft_recluster").toString
@@ -322,23 +302,6 @@ class StoreSpec extends AnyFunSuite {
     assert(clu * 4 <= unc, s"clustered=$clu vs unclustered=$unc — no page-level advantage")
   }
 
-  test("compact after a crash mid-swap restores the parked table before rewriting") {
-    import spark.implicits._
-    val base = Files.createTempDirectory("graft_compact_crash").toString
-    val store = new Store(spark, base)
-    Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(s"$base/tbl")
-    val want = spark.read.parquet(s"$base/tbl").collect().map(_.toString).sorted.toSeq
-    // crash signature: table parked under .old_, target missing
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$base/tbl"),
-      new org.apache.hadoop.fs.Path(s"$base/.old_tbl")))
-    store.compact("tbl", targetBytes = Long.MaxValue)
-    val after = spark.read.parquet(s"$base/tbl")
-    assert(after.collect().map(_.toString).sorted.toSeq == want)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$base/.old_tbl")))
-  }
-
   test("scoped recluster rewrites only eroded+appended files: untouched files keep " +
     "name/size/mtime, rows identical, skipping restored, second pass is a no-op") {
     import spark.implicits._
@@ -385,7 +348,7 @@ class StoreSpec extends AnyFunSuite {
     assert(touched(100, 600) <= lowFresh)
     // no journal/stage debris; provenance reset to all-base
     assert(!graft.io.ScopedCommit.anyMarker(fs, dir))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir, ".tmp_scoped")))
+    assert(!fs.listStatus(dir).exists(_.getPath.getName.startsWith(ScopedCommit.TmpDirName)))
     // a second pass finds nothing to do and moves no file
     val again = store.scopedRecluster("tbl")
     assert(again.rewrittenFiles == 0 && fileTriples() == after)
@@ -416,11 +379,11 @@ class StoreSpec extends AnyFunSuite {
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val want = spark.read.parquet(dir.toString).collect().map(_.toString).sorted.toSeq
     // fabricate the crash state mid-commit: one data file already staged
-    // under .tmp_scoped, the journal written, NOTHING promoted yet — the
+    // under its stage dir, the journal written, NOTHING promoted yet — the
     // exact instant after ScopedCommit.write
     val victim = fs.listStatus(dir).map(_.getPath.getName)
       .filter(n => n.startsWith("part-")).sorted.head
-    val tmp = new org.apache.hadoop.fs.Path(dir, ".tmp_scoped")
+    val tmp = ScopedCommit.newStageDir(dir)
     fs.mkdirs(tmp)
     assert(fs.rename(new org.apache.hadoop.fs.Path(dir, victim),
       new org.apache.hadoop.fs.Path(tmp, victim)))
@@ -429,7 +392,8 @@ class StoreSpec extends AnyFunSuite {
     ScopedCommit.write(fs, dir, renames = Seq(victim -> promoted),
       deletes = Seq(victim),
       manifest = Some(m.copy(epoch = 9L,
-        base = (m.base.filterNot(_ == victim) :+ promoted).sorted, appends = Nil)))
+        base = (m.base.filterNot(_ == victim) :+ promoted).sorted, appends = Nil)),
+      stage = tmp)
     // next layout operation drives the journal to completion
     store.appendZordered(
       spark.range(1000, 1010).select(col("id").as("k"), (col("id") * 7 % 1000).as("v")),
@@ -531,38 +495,33 @@ class StoreSpec extends AnyFunSuite {
     assert(triples() == t0)
   }
 
-  test("compact replays an interrupted scoped journal first and refuses curve-clustered tables") {
-    import spark.implicits._
-    val base = Files.createTempDirectory("graft_compact_guard").toString
+  test("deleteWhere replays an interrupted manifest-less scoped journal before locating") {
+    val base = Files.createTempDirectory("graft_cow_journal").toString
     val store = new Store(spark, base)
     val fs = new org.apache.hadoop.fs.Path(base)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // plain table with a fabricated mid-journal crash: one file staged for
-    // promotion, its original still listed for deletion. compact must
-    // drive the journal to completion BEFORE reading — otherwise the
-    // promoted copy and the original would both be read and the
-    // duplicates baked permanently into the compacted table.
+    // promotion, its original still listed for deletion, no manifest
+    // section. The delete must drive the journal to completion BEFORE its
+    // locate scan — otherwise the staged file's rows are invisible to the
+    // rewrite and lost for good.
     spark.range(1000).select(col("id").as("k")).repartition(4).write.parquet(s"$base/plain")
     val dir = new org.apache.hadoop.fs.Path(s"$base/plain")
-    val want = spark.read.parquet(dir.toString).collect().map(_.toString).sorted.toSeq
+    val want = spark.read.parquet(dir.toString).where(col("k") >= 10)
+      .collect().map(_.toString).sorted.toSeq
     val victim = fs.listStatus(dir).map(_.getPath.getName)
       .filter(_.startsWith("part-")).sorted.head
-    val tmp = new org.apache.hadoop.fs.Path(dir, ".tmp_scoped")
+    val tmp = ScopedCommit.newStageDir(dir)
     fs.mkdirs(tmp)
     assert(fs.rename(new org.apache.hadoop.fs.Path(dir, victim),
       new org.apache.hadoop.fs.Path(tmp, victim)))
     ScopedCommit.write(fs, dir, renames = Seq(victim -> s"part-s9-$victim"),
-      deletes = Seq(victim), manifest = None)
-    store.compact("plain", targetBytes = Long.MaxValue)
+      deletes = Seq(victim), manifest = None, stage = tmp)
+    assert(store.deleteWhere("plain", col("k") < 10).rowsDeleted == 10)
     val got = spark.read.parquet(dir.toString).collect().map(_.toString).sorted.toSeq
-    assert(got == want, "journal not replayed before compact: rows lost or duplicated")
+    assert(got == want, "journal not replayed before the delete: rows lost or duplicated")
     assert(!graft.io.ScopedCommit.anyMarker(fs, dir))
-    // curve-clustered table: repartition would destroy the layout AND the
-    // provenance/watermark — refuse loudly, recluster is the right tool
-    val df = spark.range(1000).select(col("id").as("k"), (col("id") % 7).as("v"))
-    store.writeZordered(df, "ztbl", Seq("k", "v"), files = 2)
-    intercept[IllegalArgumentException] { store.compact("ztbl") }
-    assert(spark.read.parquet(s"$base/ztbl").count() == 1000)
+    assert(!LayoutManifest.exists(fs, dir), "a manifest-less journal must not add a manifest")
   }
 
   test("appendZordered layout mismatch fails BEFORE any rows land") {
@@ -678,36 +637,6 @@ class StoreSpec extends AnyFunSuite {
     assert(p.contains("PushedFilters") && p.contains("IsNotNull(doc_id)"), p)
   }
 
-  test("readEvolved: old files read nulls for added columns; pushdown survives drift") {
-    import spark.implicits._
-    import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft_evolve").toString
-    val store = new Store(spark, dir)
-    // generation 1: (id, v) — written before the schema grew
-    Seq((1L, 1.0), (2L, 2.0)).toDF("id", "v")
-      .write.parquet(s"$dir/evolved/gen=1")
-    // generation 2: (id, v, lang) — the column added later
-    Seq((3L, 3.0, "en"), (4L, 4.0, "fr")).toDF("id", "v", "lang")
-      .write.parquet(s"$dir/evolved/gen=2")
-    val schema = StructType(Seq(StructField("id", LongType),
-      StructField("v", DoubleType), StructField("lang", StringType)))
-    val out = store.readEvolved("evolved", schema).drop("gen")
-    val rows = out.collect()
-      .map(r => r.getLong(0) -> (r.getDouble(1), if (r.isNullAt(2)) null else r.getString(2))).toMap
-    assert(rows == Map(1L -> (1.0, null), 2L -> (2.0, null),
-      3L -> (3.0, "en"), 4L -> (4.0, "fr")))
-    // the scale contracts drift must not break: predicate pushdown on an
-    // original column, and pruning the ADDED column still cuts ReadSchema
-    val p = store.readEvolved("evolved", schema).where(col("id") === 3L)
-      .select("id", "v").queryExecution.executedPlan.toString
-    assert(p.contains("PushedFilters") && p.contains("IsNotNull(id)"), p)
-    assert(!p.replaceAll("(?s).*ReadSchema", "").contains("lang"), p)
-    // filtering ON the added column is correct across generations: null
-    // never matches, so gen-1 rows drop without error
-    assert(store.readEvolved("evolved", schema).where(col("lang") === "en")
-      .count() == 1L)
-  }
-
   test("bucketed tables: equi-join on the bucket key plans without a shuffle") {
     val store = new Store(spark, Files.createTempDirectory("graft_bucket").toString)
     val sf = "/root/testdata/sf0.001"
@@ -721,8 +650,8 @@ class StoreSpec extends AnyFunSuite {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val joined = store.readTable("li_bucketed")
-        .join(store.readTable("ord_bucketed"), Seq("l_orderkey"))
+      val joined = spark.table("li_bucketed")
+        .join(spark.table("ord_bucketed"), Seq("l_orderkey"))
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange hashpartitioning"),
         s"expected shuffle-free co-located join, got:\n$plan")

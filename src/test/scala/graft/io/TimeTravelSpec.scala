@@ -122,7 +122,7 @@ class TimeTravelSpec extends AnyFunSuite {
     // leaves every original in place until the journal's retire step.
     val victim = fs.listStatus(dir).map(_.getPath.getName)
       .filter(_.startsWith("part-")).sorted.head
-    val tmp = new org.apache.hadoop.fs.Path(dir, ".tmp_scoped")
+    val tmp = ScopedCommit.newStageDir(dir)
     fs.mkdirs(tmp)
     assert(org.apache.hadoop.fs.FileUtil.copy(fs,
       new org.apache.hadoop.fs.Path(dir, victim), fs,
@@ -133,7 +133,8 @@ class TimeTravelSpec extends AnyFunSuite {
     ScopedCommit.write(fs, dir, renames = Seq(victim -> promoted),
       deletes = Nil, retires = Seq(victim),
       manifest = Some(m.copy(epoch = 9L,
-        base = (m.base.filterNot(_ == victim) :+ promoted).sorted, appends = Nil)))
+        base = (m.base.filterNot(_ == victim) :+ promoted).sorted, appends = Nil)),
+      stage = tmp)
     // ANY entry (readVersion included) recovers the journal, then reads
     assert(rows(store.readVersion("tbl", 0L)) == epoch0,
       "epoch 0 must survive the interrupted commit byte-exactly")
@@ -158,7 +159,7 @@ class TimeTravelSpec extends AnyFunSuite {
     // fabricate the mid-commit state (same shape as the crash test above)
     val victim = fs.listStatus(dir).map(_.getPath.getName)
       .filter(_.startsWith("part-")).sorted.head
-    val tmp = ScopedCommit.tmpDir(dir)
+    val tmp = ScopedCommit.newStageDir(dir)
     fs.mkdirs(tmp)
     assert(org.apache.hadoop.fs.FileUtil.copy(fs,
       new org.apache.hadoop.fs.Path(dir, victim), fs,
@@ -169,7 +170,8 @@ class TimeTravelSpec extends AnyFunSuite {
     val lines = ScopedCommit.write(fs, dir, renames = Seq(victim -> promoted),
       deletes = Nil, retires = Seq(victim),
       manifest = Some(m.copy(epoch = 7L,
-        base = (m.base.filterNot(_ == victim) :+ promoted).sorted, appends = Nil)))
+        base = (m.base.filterNot(_ == victim) :+ promoted).sorted, appends = Nil)),
+      stage = tmp)
     // a READER-driven recover (the per-statement DSv2 path) finishes the
     // commit and removes the marker first…
     assert(ScopedCommit.recover(fs, dir))
@@ -210,8 +212,8 @@ class TimeTravelSpec extends AnyFunSuite {
       stage = tmp2)
     // the laggard replays the OLD epoch-7 journal while the NEW epoch-8
     // journal sits pending: nothing of the successor's may move — its
-    // journal is a DIFFERENT file now (unique marker names), so the
-    // pre-upgrade check-then-delete window is gone by construction
+    // journal is a DIFFERENT file (unique marker names), so a
+    // check-then-delete window cannot exist
     ScopedCommit.replay(fs, dir, lines)
     assert(LayoutManifest.readLines(fs, lines2.marker) == lines2.lines,
       "stale replay must not delete the successor's journal")
@@ -530,34 +532,6 @@ class TimeTravelSpec extends AnyFunSuite {
     assert(spark.read.parquet(dir.toString).count() == 295)
   }
 
-  test("a pre-upgrade table (live manifest, no history snapshots) reads via " +
-    "readSnapshot/readVersion at its committed epoch") {
-    val base = Files.createTempDirectory("graft_tt_preupgrade").toString
-    val store = new Store(spark, base)
-    val df = spark.range(800).select(col("id").as("k"), (col("id") % 13).as("v"))
-    store.writeZordered(df, "tbl", Seq("k", "v"), files = 2)
-    val dir = new org.apache.hadoop.fs.Path(s"$base/tbl")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // simulate a table written before per-epoch snapshots existed: the
-    // live `_graft_layout` pointer is present (written here explicitly —
-    // post-upgrade commits never write it), the history dir is not
-    LayoutManifest.writeLinesAtomic(fs, LayoutManifest.path(dir),
-      LayoutManifest.read(fs, dir).get.lines)
-    assert(fs.delete(LayoutManifest.historyDir(dir), true))
-    assert(store.listVersions("tbl").isEmpty)
-    // the live manifest IS the current epoch's snapshot content (crash
-    // contract): the manifest-driven read serves it instead of failing
-    assert(rows(store.readSnapshot("tbl")) == rows(df))
-    assert(rows(store.readVersion("tbl", 0L)) == rows(df))
-    // non-current epochs stay loud — there is genuinely no snapshot
-    intercept[IllegalStateException] { store.readVersion("tbl", 1L) }
-    // the first post-upgrade mutation restores normal history service
-    store.deleteWhere("tbl", col("k") < 100)                     // epoch 1
-    assert(store.listVersions("tbl") == Seq(1L))
-    assert(rows(store.readSnapshot("tbl")) ==
-      rows(spark.read.parquet(dir.toString)))
-  }
-
   test("the snapshot view serves EXACTLY the committed epoch through a " +
     "mid-journal state where the live listing shows duplicates") {
     val base = Files.createTempDirectory("graft_tt_midj").toString
@@ -575,7 +549,7 @@ class TimeTravelSpec extends AnyFunSuite {
       .filter(_.startsWith("part-")).sorted.head
     val victimRows = spark.read.parquet(s"$dir/$victim").count()
     assert(victimRows > 0)
-    val tmp = new org.apache.hadoop.fs.Path(dir, ".tmp_scoped")
+    val tmp = ScopedCommit.newStageDir(dir)
     fs.mkdirs(tmp)
     assert(org.apache.hadoop.fs.FileUtil.copy(fs,
       new org.apache.hadoop.fs.Path(dir, victim), fs,
@@ -586,7 +560,8 @@ class TimeTravelSpec extends AnyFunSuite {
     ScopedCommit.write(fs, dir, renames = Seq(victim -> promoted),
       deletes = Nil, retires = Seq(victim),
       manifest = Some(m.copy(epoch = 9L,
-        base = (m.base.filterNot(_ == victim) :+ promoted).sorted, appends = Nil)))
+        base = (m.base.filterNot(_ == victim) :+ promoted).sorted, appends = Nil)),
+      stage = tmp)
     assert(fs.rename(new org.apache.hadoop.fs.Path(tmp, victim),
       new org.apache.hadoop.fs.Path(dir, promoted)))
     // the listing-based read hits the window: duplicates
@@ -738,46 +713,6 @@ class TimeTravelSpec extends AnyFunSuite {
     store.erosionStats("tbl")
     assert(!fs.exists(LayoutManifest.claimPath(dir, 2L)))
     store.scopedRecluster("tbl") // still not wedged after the stat refresh
-  }
-
-  test("withVersionRetry self-heals a read that a concurrent retire lands on: " +
-    "one re-resolution finds the files at their new home") {
-    val base = Files.createTempDirectory("graft_tt_retry").toString
-    val store = new Store(spark, base)
-    val df = spark.range(2000).select(col("id").as("k"), (col("id") % 19).as("v"))
-    store.writeZordered(df, "tbl", Seq("k", "v"), files = 2)       // epoch 0
-    // first attempt: the frame resolves epoch 0's LIVE files, then a full
-    // recluster retires every one of them before the action runs — the
-    // exact boundary the scaladoc documents. The retry must re-resolve
-    // into .graft_retired and land the same rows.
-    var attempts = 0
-    val n = store.withVersionRetry("tbl", 0L) { frame =>
-      attempts += 1
-      if (attempts == 1) store.recluster("tbl", Seq("k", "v"), files = 2) // epoch 1
-      frame.count()
-    }
-    assert(attempts == 2, s"expected exactly one retry, got $attempts attempts")
-    assert(n == 2000)
-    // snapshot flavor: the retry resolves the NEWEST epoch, so a read
-    // overlapping a delete self-heals onto the post-delete table
-    attempts = 0
-    val n2 = store.withSnapshotRetry("tbl") { frame =>
-      attempts += 1
-      if (attempts == 1) {
-        store.deleteWhere("tbl", col("k") < 100)                   // epoch 2
-        // the delete retires the files the resolved frame points at only
-        // if they bear matches; force staleness for the whole frame
-        store.recluster("tbl", Seq("k", "v"), files = 2)           // epoch 3
-      }
-      frame.count()
-    }
-    assert(attempts == 2 && n2 == 1900)
-    // a genuinely vacuumed epoch is NOT retried into success: loud after
-    // the bounded attempts
-    store.vacuum("tbl", keepLast = 1)
-    intercept[IllegalStateException] {
-      store.withVersionRetry("tbl", 0L, retries = 2)(_.count())
-    }
   }
 
   test("maintainZordered size-trigger folds accreted thin append layers " +

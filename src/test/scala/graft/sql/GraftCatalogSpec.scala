@@ -384,25 +384,6 @@ class GraftCatalogSpec extends AnyFunSuite {
     assert(mkScan() == mkScan() && mkScan().hashCode() == mkScan().hashCode(),
       "wrapper scans must compare by wrapped-scan identity")
 
-    // a PRE-UPGRADE table (live manifest, no per-epoch snapshots) still
-    // lists its readable current epoch — readVersion serves it, so
-    // $history must name it
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tdir = new org.apache.hadoop.fs.Path(s"$base/tbl")
-    // pre-upgrade shape = live pointer present (written here explicitly —
-    // post-upgrade commits never write it), no snapshots
-    LayoutManifest.writeLinesAtomic(fs, LayoutManifest.path(tdir),
-      LayoutManifest.read(fs, tdir).get.lines)
-    val hd = LayoutManifest.historyDir(tdir)
-    fs.listStatus(hd).foreach { st =>
-      if (st.getPath.getName.startsWith("v")) fs.delete(st.getPath, false)
-    }
-    val preUp = spark.sql(
-      "SELECT version, is_current FROM graft_h1.`tbl$history`").collect()
-    assert(preUp.length == 1 && preUp.head.getLong(0) == 2L &&
-      preUp.head.getBoolean(1), preUp.mkString(","))
-
     // write-shaped DDL guards (a future Spark growing new entry points
     // must not silently write around the CAS): CTAS and ALTER refuse
     val e1 = intercept[Exception] {
@@ -477,7 +458,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     val victim = fs.listStatus(dir).map(_.getPath.getName)
       .filter(_.startsWith("part-")).sorted.head
     val victimRows = spark.read.parquet(s"$dir/$victim").count()
-    val tmp = new org.apache.hadoop.fs.Path(dir, ".tmp_scoped")
+    val tmp = ScopedCommit.newStageDir(dir)
     fs.mkdirs(tmp)
     assert(org.apache.hadoop.fs.FileUtil.copy(fs,
       new org.apache.hadoop.fs.Path(dir, victim), fs,
@@ -488,7 +469,8 @@ class GraftCatalogSpec extends AnyFunSuite {
     ScopedCommit.write(fs, dir, renames = Seq(victim -> promoted),
       deletes = Nil, retires = Seq(victim),
       manifest = Some(m.copy(epoch = 9L,
-        base = (m.base.filterNot(_ == victim) :+ promoted).sorted, appends = Nil)))
+        base = (m.base.filterNot(_ == victim) :+ promoted).sorted, appends = Nil)),
+      stage = tmp)
     assert(fs.rename(new org.apache.hadoop.fs.Path(tmp, victim),
       new org.apache.hadoop.fs.Path(dir, promoted)))
     assert(spark.read.parquet(dir.toString).count() == 1000 + victimRows,
