@@ -30,9 +30,6 @@ object Multimodal {
   case class ImageMeta(doc_id: Long, width: Long, height: Long, channels: Long,
                        r_sum: Long, g_sum: Long, b_sum: Long, format: String)
 
-  /** Fixed-size embedding-ish feature vector per media item. */
-  case class MediaFeatures(doc_id: Long, features: Array[Double])
-
   /** One sampled "frame" of a media item. */
   case class MediaFrame(doc_id: Long, frame_idx: Int, n_bytes: Long, checksum: Long)
 
@@ -98,41 +95,6 @@ object Multimodal {
     ImageMeta(r.doc_id, w, h, img.getColorModel.getNumComponents, rs, gs, bs, r.format)
   }
 
-  /** Feature extraction over DECODED pixels: a 16-bin histogram of all
-    * channel bytes, normalized. (A real implementation would run a vision
-    * model per batch; the `mapPartitions` shape is where its state gets
-    * initialized once per partition.)
-    */
-  def extractFeatures(r: MediaRow): MediaFeatures = {
-    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(r.bytes))
-    require(img != null, s"doc ${r.doc_id}: bytes are not a decodable image")
-    val hist = new Array[Double](16)
-    var y = 0
-    while (y < img.getHeight) {
-      var x = 0
-      while (x < img.getWidth) {
-        val p = img.getRGB(x, y)
-        hist(((p >> 16) & 0xFF) / 16) += 1.0
-        hist(((p >> 8) & 0xFF) / 16) += 1.0
-        hist((p & 0xFF) / 16) += 1.0
-        x += 1
-      }
-      y += 1
-    }
-    val n = math.max(img.getWidth * img.getHeight * 3, 1).toDouble
-    MediaFeatures(r.doc_id, hist.map(_ / n))
-  }
-
-  /** "Resize": recompute target dims preserving the stub aspect ratio —
-    * pure column arithmetic over decoded metadata (no re-decode).
-    */
-  def resize(meta: DataFrame, maxSide: Long): DataFrame = {
-    val scale = least(lit(1.0),
-      lit(maxSide.toDouble) / greatest(col("width"), col("height")).cast("double"))
-    meta.withColumn("resized_width", greatest(floor(col("width") * scale), lit(1L)))
-      .withColumn("resized_height", greatest(floor(col("height") * scale), lit(1L)))
-  }
-
   /** Frame sampling: split each payload into `frames` contiguous chunks and
     * emit one row per sampled chunk with a checksum — the video-frame
     * analogue (seek + decode per frame) with the byte-slicing stubbed.
@@ -193,14 +155,5 @@ object Multimodal {
                       format: String = "png"): Dataset[ImageMeta] = {
     import spark.implicits._
     docImages(spark, documents, format).mapPartitions(_.map(decodeImage))
-  }
-
-  /** Decode -> feature-extract per partition (one model init per partition
-    * in a real implementation).
-    */
-  def featurizeDocuments(spark: SparkSession, documents: DataFrame,
-                         format: String = "png"): Dataset[MediaFeatures] = {
-    import spark.implicits._
-    docImages(spark, documents, format).mapPartitions(_.map(extractFeatures))
   }
 }

@@ -34,11 +34,6 @@ object Sampling {
     conv(substring(md5(concat(key.cast("string"), lit("|" + salt))), 1, 8), 16, 10)
       .cast("double") / 4294967296.0
 
-  /** Keep each row with probability `fraction`, deterministically. */
-  def sampleByHash(df: DataFrame, key: String, fraction: Double,
-                   salt: String = ""): DataFrame =
-    df.where(hashUnit(col(key), salt) < fraction)
-
   /** Per-stratum sampling rates (data mixing): keep a row of stratum s
     * with probability `rates(s)` (else `defaultRate`). The rate table is
     * a literal when-chain — strata counts are small by definition, so the

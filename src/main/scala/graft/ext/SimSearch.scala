@@ -725,7 +725,10 @@ object SimSearch {
     val a = spread(withNorm, col(id)).as("a")
     val b = withNorm.as("b")
     a.join(b, col(s"a.$blockCol") === col(s"b.$blockCol") && col(s"a.$id") < col(s"b.$id"))
-      .withColumn("cos", dot(col(s"a.$vec"), col(s"b.$vec")) / (col("a.__n") * col("b.__n")))
+      // optimizer fence, arithmetic form — see Dedup.minhashPairs: one
+      // kernel evaluation per candidate pair
+      .withColumn("cos", dot(col(s"a.$vec"), col(s"b.$vec")) / (col("a.__n") * col("b.__n")) +
+        spark_partition_id() * lit(0.0))
       .where(col("cos") >= minCos)
       .select(col(s"a.$id").as("id_a"), col(s"b.$id").as("id_b"),
         round(col("cos"), 5).as("cos"))
@@ -772,7 +775,10 @@ object SimSearch {
     val a = assigned.as("a")
     val b = assigned.as("b")
     a.join(b, col("a.cell") === col("b.cell") && col(s"a.$id") < col(s"b.$id"))
-      .withColumn("cos", dot(col(s"a.$vec"), col(s"b.$vec")) / (col("a.__n") * col("b.__n")))
+      // optimizer fence, arithmetic form — see Dedup.minhashPairs: one
+      // kernel evaluation per candidate pair
+      .withColumn("cos", dot(col(s"a.$vec"), col(s"b.$vec")) / (col("a.__n") * col("b.__n")) +
+        spark_partition_id() * lit(0.0))
       .where(col("cos") >= minCos)
       .groupBy(col(s"a.$id").as("id_a"), col(s"b.$id").as("id_b"))
       .agg(round(max(col("cos")), 5).as("cos"))

@@ -1,20 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
-/** [[SortedIntersectSize]] with a positional early-abort bound — the
+/** [[SortedIntersectSize]]'s merge with a positional early-abort bound — the
   * standard set-similarity-join optimization: a pairwise-Jaccard filter
   * `J >= t` needs the intersection only when it can still reach
   * `required = floor(t * (|A|+|B|) / (1+t))`; during the two-pointer
   * merge, `acc + min(remaining_A, remaining_B)` is a tight upper bound on
   * the final count, and the moment it drops below `required` the pair is
   * provably below threshold — return -1 (a "below threshold" sentinel)
-  * instead of finishing the merge. Callers filter `>= 0` before dividing.
+  * instead of finishing the merge. [[BoundedJaccard.compute]] is the caller.
   *
   * Safety of the sentinel (why no borderline pair can be lost): the merge
   * returns -1 only when `final_count < required`. For any monotone
@@ -28,53 +23,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * earlier the abort — x3's t=0.9 aborts almost immediately).
   *
   * Same input contract as [[SortedIntersectSize]]: sorted ascending,
-  * distinct, no nulls (a null element poisons to NULL).
+  * distinct, no nulls (a null element poisons the pair).
   */
-case class SortedIntersectSizeBounded(first: Expression, second: Expression,
-                                      third: Expression)
-    extends TernaryExpression {
-
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _), IntegerType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          "sorted_intersect_size_bounded needs (array<bigint>, array<bigint>, int), got " +
-            s"${first.dataType} / ${second.dataType} / ${third.dataType}")
-    }
-
-  override def nullSafeEval(a: Any, b: Any, r: Any): Any = {
-    val n = SortedIntersectSizeBounded.count(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], r.asInstanceOf[Int])
-    if (n == Integer.MIN_VALUE) null else n
-  }
-
-  // calls the shared precompiled kernel — see SortedIntersectSize.doGenCode
-  // for why inlining the loop into every generated class re-pays JIT
-  // warmup per query
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, r) => {
-      val res = ctx.freshName("res")
-      s"""
-         |final int $res = graft.functions.SortedIntersectSizeBounded.count($a, $b, $r);
-         |if ($res == Integer.MIN_VALUE) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $res; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
 object SortedIntersectSizeBounded {
 
-  /** Shared kernel for eval AND generated code. Integer.MIN_VALUE = a
-    * null element poisoned the pair; -1 = provably below `required`.
+  /** Integer.MIN_VALUE = a null element poisoned the pair; -1 = provably
+    * below `required`; else the exact intersection size.
     */
   def count(x: ArrayData, y: ArrayData, required: Int): Int = {
     var i = 0; var j = 0; var n = 0
@@ -89,18 +43,5 @@ object SortedIntersectSizeBounded {
       else j += 1
     }
     if (n < required) -1 else n
-  }
-
-  /** Column-API entry: `required` derived from a Jaccard threshold over
-    * the pair's set sizes — `floor(t/(1+t) * (|a|+|b|))`, the largest
-    * integer provably not above the exact bound (see class doc).
-    */
-  def forThreshold(a: Column, b: Column, minJaccard: Double): Column = {
-    import org.apache.spark.sql.functions._
-    val required = floor(
-      lit(minJaccard / (1.0 + minJaccard)) * (size(a) + size(b))).cast("int")
-    GraftBridge.toColumn(SortedIntersectSizeBounded(
-      GraftBridge.toExpression(a), GraftBridge.toExpression(b),
-      GraftBridge.toExpression(required)))
   }
 }

@@ -31,7 +31,6 @@ private[graft] case class LayoutManifest(
     zCols: Seq[String], bits: Int, files: Int, epoch: Long,
     base: Seq[String], appends: Seq[Seq[String]],
     touched: Option[Double] = None,
-    lastBatch: Option[Long] = None,
     partCols: Seq[String] = Nil,
     committedAt: Option[Long] = None,
     schemaJson: Option[String] = None) {
@@ -64,7 +63,6 @@ private[graft] case class LayoutManifest(
       s"epoch=$epoch", s"base=${base.mkString("\t")}") ++
       appends.map(a => s"append=${a.mkString("\t")}") ++
       touched.map(t => s"stat_touched=$t").toSeq ++
-      lastBatch.map(b => s"last_batch=$b").toSeq ++
       (if (partCols.nonEmpty) Seq(s"partcols=${partCols.mkString("\t")}") else Nil) ++
       committedAt.map(t => s"committed_at=$t").toSeq ++
       schemaJson.map(j => s"schema=$j").toSeq
@@ -145,9 +143,8 @@ private[graft] object LayoutManifest {
     fs.delete(claimPath(dir, m.epoch), false)
   }
 
-  /** Same-epoch manifest REFRESH (the erosion-stat cache, an empty
-    * streaming batch's `last_batch` watermark): rewrites the committed
-    * epoch's snapshot in place — the FILE SET per epoch never changes (the
+  /** Same-epoch manifest REFRESH (the erosion-stat cache): rewrites the
+    * committed epoch's snapshot in place — the FILE SET per epoch never changes (the
     * invariant readVersion depends on) and `committed_at` is PRESERVED
     * from the read manifest, so the epoch keeps its wall-clock identity.
     * Callers hold the same-epoch claim ([[graft.io.Store]]'s
@@ -161,9 +158,9 @@ private[graft] object LayoutManifest {
   /** Atomic small-file write: create under a dot-prefixed tmp name, then
     * rename over the destination with OVERWRITE semantics. A
     * delete-then-rename pair would open a window with NO manifest at all —
-    * a crash there silently drops the `last_batch` watermark and re-admits
-    * an already-committed streaming batch, and a concurrent READER (the
-    * streaming face's offset poll, any resolveSnapshot) hitting the window
+    * a crash there silently drops the epoch's stat refresh, and a
+    * concurrent READER (the streaming face's offset poll, any
+    * resolveSnapshot) hitting the window
     * sees a manifest-less table and fails a read that should have
     * succeeded. Scheme matters: HDFS implements FileContext's OVERWRITE
     * rename natively (atomic), but the LOCAL AbstractFileSystem falls back
@@ -311,7 +308,6 @@ private[graft] object LayoutManifest {
       base = split(m("base")),
       appends = kv.collect { case ("append", v) => split(v) },
       touched = m.get("stat_touched").map(_.toDouble),
-      lastBatch = m.get("last_batch").map(_.toLong),
       partCols = m.get("partcols").map(split).getOrElse(Nil),
       committedAt = m.get("committed_at").map(_.toLong),
       schemaJson = m.get("schema"))
@@ -334,7 +330,7 @@ private[graft] case class FileRect(name: String, bytes: Long, rows: Long,
     * stats intersect everything (conservative: erodes, never misses) —
     * EXCEPT a zero-row file (Spark's schema-only empty write), which has
     * no stats because it has no data and can never compete with anything;
-    * treating it as intersect-everything would let one empty streaming
+    * treating it as intersect-everything would let one empty append
     * batch degrade the next scoped pass into a full-table rewrite.
     */
   def intersects(o: FileRect): Boolean =

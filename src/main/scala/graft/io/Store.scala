@@ -103,8 +103,7 @@ class Store(spark: SparkSession, baseDir: String) {
     if (fs.exists(dir)) ScopedCommit.recover(fs, dir)
     val m0 = LayoutManifest.read(fs, dir)
     val epoch = m0.map(_.epoch + 1).getOrElse(0L)
-    withEpochClaim(dir, epoch,
-      m0.map(_.epoch).getOrElse(-1L), java.util.UUID.randomUUID.toString) {
+    withEpochClaim(dir, epoch, m0.map(_.epoch).getOrElse(-1L)) {
       val current = if (fs.exists(dir)) listDataFilesDeep(dir) else Nil
       val tmp = ScopedCommit.newStageDir(dir)
       ScopedCommit.sweepStages(fs, dir)
@@ -124,7 +123,7 @@ class Store(spark: SparkSession, baseDir: String) {
       // and basePath reads subtract/re-append partition columns)
       val newM = LayoutManifest(Nil, 0, 0, epoch,
         base = renames.map(_._2).sorted, appends = Nil,
-        lastBatch = m0.flatMap(_.lastBatch), partCols = Seq("dt"),
+        partCols = Seq("dt"),
         schemaJson = Some(Store.nullableSchemaJson(stagedDf.schema)))
       // a manifest-less target (fresh dir or a plain writePartitioned
       // table being adopted) has no history to serve — delete its files
@@ -184,8 +183,7 @@ class Store(spark: SparkSession, baseDir: String) {
         "writePartitionedManaged replaces it wholesale instead")
     validateAgainstDeclared(df.withColumn("dt", to_date(col(tsCol))).schema, m0, rel)
     val epoch = m0.map(_.epoch + 1).getOrElse(0L)
-    withEpochClaim(dir, epoch,
-      m0.map(_.epoch).getOrElse(-1L), java.util.UUID.randomUUID.toString) {
+    withEpochClaim(dir, epoch, m0.map(_.epoch).getOrElse(-1L)) {
       val tmp = ScopedCommit.newStageDir(dir)
       ScopedCommit.sweepStages(fs, dir)
       df.withColumn("dt", to_date(col(tsCol)))
@@ -207,7 +205,7 @@ class Store(spark: SparkSession, baseDir: String) {
         val keep = current.filterNot(replaced.toSet)
         val newM = LayoutManifest(Nil, 0, 0, epoch,
           base = (keep ++ renames.map(_._2)).sorted, appends = Nil,
-          lastBatch = m0.flatMap(_.lastBatch), partCols = Seq("dt"),
+          partCols = Seq("dt"),
           // evolved/declared schema rides through; a FRESH table (no kept
           // foreign files) declares the batch schema for inference-free
           // reads — an adopted one keeps inference until a replace
@@ -279,7 +277,7 @@ class Store(spark: SparkSession, baseDir: String) {
       } else StructType(current.fields ++ cols.fields)
     // a pure-metadata commit: same file set, next epoch, widened schema —
     // one atomic snapshot create under the epoch CAS, nothing to journal
-    withEpochClaim(dir, m0.epoch + 1, m0.epoch, java.util.UUID.randomUUID.toString) {
+    withEpochClaim(dir, m0.epoch + 1, m0.epoch) {
       LayoutManifest.write(fs, dir,
         m0.copy(epoch = m0.epoch + 1, schemaJson = Some(widened.json)))
     }
@@ -371,8 +369,7 @@ class Store(spark: SparkSession, baseDir: String) {
     // — a drifting second computation could claim one epoch and journal
     // another, wedging the table behind an unreleasable claim
     val epoch = m0.map(_.epoch + 1).getOrElse(0L)
-    withEpochClaim(dir, epoch,
-      m0.map(_.epoch).getOrElse(-1L), java.util.UUID.randomUUID.toString) {
+    withEpochClaim(dir, epoch, m0.map(_.epoch).getOrElse(-1L)) {
       // DEEP listing for the replace set: a manifest-less target may be a
       // dt-partitioned table, whose data lives under key= subdirs — a
       // top-level-only delete would leave the old partitions' rows visible
@@ -385,13 +382,10 @@ class Store(spark: SparkSession, baseDir: String) {
         zorderStage(df, zCols, files, bits).write.mode("overwrite").parquet(tmp.toString))
       val staged = listDataFiles(tmp)
       val renames = staged.map(s => s -> s"part-w$epoch-${s.stripPrefix("part-")}")
-      // a replace drops the exactly-once watermark ONLY when no manifest
-      // carried one (carrying it through mirrors recluster's discipline).
-      // The replace DEFINES the table's declared schema (an evolved wider
+      // the replace DEFINES the table's declared schema (an evolved wider
       // schema from a prior life is gone — this epoch's content is df)
       val newM = LayoutManifest(zCols, bits, files, epoch,
         base = renames.map(_._2).sorted, appends = Nil,
-        lastBatch = m0.flatMap(_.lastBatch),
         schemaJson = Some(Store.nullableSchemaJson(df.schema)))
       // replay from the lines just written, NOT a marker re-read: a
       // reader-driven recover racing this commit may finish the replay and
@@ -611,8 +605,7 @@ class Store(spark: SparkSession, baseDir: String) {
     // mutator fails loudly here with the table untouched. Unconditional:
     // the first-ever write races too (claimEpoch creates the dir), and
     // an in-process failure during the append releases the claim.
-    withEpochClaim(dir, m0.map(_.epoch + 1).getOrElse(0L),
-      m0.map(_.epoch).getOrElse(-1L), java.util.UUID.randomUUID.toString) {
+    withEpochClaim(dir, m0.map(_.epoch + 1).getOrElse(0L), m0.map(_.epoch).getOrElse(-1L)) {
       val before = if (fs.exists(dir)) listDataFiles(dir).toSet else Set.empty[String]
       labeled(s"z-order append write ${dir.getName}")(
         zorderStage(df, zCols, files, bits).write.mode("append").parquet(s"$baseDir/$rel"))
@@ -815,15 +808,6 @@ class Store(spark: SparkSession, baseDir: String) {
     Store.recoverSwap(fs, target)
     ScopedCommit.recover(fs, target) // finish an interrupted scoped pass first
     val m0 = LayoutManifest.read(fs, target)
-    val prevBatch = m0.flatMap(_.lastBatch)
-    // a recluster to <2 columns drops the manifest (linear layouts carry
-    // none) — refuse when that manifest holds an exactly-once watermark:
-    // silently discarding last_batch would let a checkpoint replay
-    // re-admit every already-committed streaming batch as duplicates
-    require(zCols.size >= 2 || prevBatch.isEmpty,
-      s"$rel carries an exactly-once batch watermark (last_batch=${prevBatch.get}); " +
-        "a recluster to a single column would discard it and re-admit replayed " +
-        "batches — keep >= 2 layout columns or retire the streaming writer first")
     if (m0.isDefined && zCols.size >= 2) {
       // manifest-tracked table: full rewrite through the JOURNALED commit
       // instead of the directory swap — the hidden history/retired dirs
@@ -833,8 +817,7 @@ class Store(spark: SparkSession, baseDir: String) {
       // scopedRecluster with the whole table as the region; layout
       // parameters (columns/bits/files) may change here.
       val m = m0.get
-      withEpochClaim(target, m.epoch + 1, m.epoch,
-        java.util.UUID.randomUUID.toString) {
+      withEpochClaim(target, m.epoch + 1, m.epoch) {
         // DEEP listing: a managed PARTITIONED store reshaping into a curve
         // layout keeps its data under `key=value/` dirs — a top-level-only
         // replace set would leave every old partition's rows visible
@@ -857,8 +840,7 @@ class Store(spark: SparkSession, baseDir: String) {
         val epoch = m.epoch + 1
         val renames = staged.map(s => s -> s"part-s$epoch-${s.stripPrefix("part-")}")
         val newM = LayoutManifest(zCols, bits, files, epoch,
-          base = renames.map(_._2).sorted, appends = Nil, lastBatch = prevBatch,
-          schemaJson = m.schemaJson)
+          base = renames.map(_._2).sorted, appends = Nil, schemaJson = m.schemaJson)
         ScopedCommit.replay(fs, target, ScopedCommit.write(fs, target, renames,
           deletes = Nil, manifest = Some(newM), retires = current, stage = tmp))
       }
@@ -886,86 +868,8 @@ class Store(spark: SparkSession, baseDir: String) {
     if (zCols.size >= 2)
       LayoutManifest.write(fs, target,
         LayoutManifest(zCols, bits, files, epoch = 0L,
-          base = listDataFiles(target), appends = Nil, lastBatch = prevBatch))
+          base = listDataFiles(target), appends = Nil))
     refreshCatalog(target)
-  }
-
-  /** Exactly-once variant of [[appendZordered]] for replayable writers
-    * (the streaming sink): the batch is STAGED under the table's hidden
-    * commit dir, then promoted with the same journaled commit as
-    * [[scopedRecluster]] — the journal's manifest carries the batch id,
-    * so the batch's files and its "already committed" record become
-    * visible in one replayable unit. A crash anywhere re-drives or
-    * discards cleanly; re-delivering a committed batch id is a no-op
-    * (returns false). Ids must be monotone per table writer — exactly
-    * what a Structured Streaming checkpoint guarantees; one writer per
-    * table is the contract (as for every swap-based sink here).
-    */
-  def appendZorderedExactlyOnce(df: DataFrame, rel: String, zCols: Seq[String],
-                                batchId: Long, files: Int = 8, bits: Int = 6): Boolean = {
-    val dir = new Path(s"$baseDir/$rel")
-    Store.recoverSwap(fs, dir)
-    if (fs.exists(dir)) ScopedCommit.recover(fs, dir)
-    val m0 = LayoutManifest.read(fs, dir)
-    if (m0.exists(_.lastBatch.exists(batchId <= _))) return false // replayed
-    m0.foreach(mf => require(mf.zCols == zCols && mf.bits == bits,
-      s"append layout (${zCols.mkString(",")}/bits=$bits) does not match " +
-        s"the table manifest (${mf.zCols.mkString(",")}/bits=${mf.bits})"))
-    validateAgainstDeclared(df.schema, m0, rel)
-    val m = m0.getOrElse {
-      val adopted = if (fs.exists(dir)) listDataFiles(dir) else Nil
-      LayoutManifest(zCols, bits, files, epoch = 0L,
-        base = adopted, appends = Nil,
-        // fresh tables declare the batch schema (inference-free reads);
-        // adopted foreign files keep inference — see appendZorderedOnce
-        schemaJson = if (adopted.isEmpty)
-          Some(Store.nullableSchemaJson(df.schema)) else None)
-    }
-    // the epoch this batch would COMMIT: 0 on a fresh/manifest-less table
-    // (exactly as appendZordered/writeZordered number their first commit —
-    // both first-write paths must race for the SAME claim file, or the
-    // CAS cannot serialize them), the next epoch otherwise
-    val newEpoch = m0.map(_.epoch + 1).getOrElse(0L)
-    // claim with the BATCH ID as token: a checkpoint replay of a crashed
-    // batch is the same logical writer and ADOPTS its own claim; a
-    // different writer (or a different batch) fails loudly
-    withEpochClaim(dir, newEpoch, m0.map(_.epoch).getOrElse(-1L), s"b$batchId") {
-      val tmp = ScopedCommit.newStageDir(dir)
-      ScopedCommit.sweepStages(fs, dir)
-      labeled(s"z-order batch write ${dir.getName}")(
-        zorderStage(df, zCols, files, bits).write.mode("overwrite").parquet(tmp.toString))
-      val staged = listDataFiles(tmp)
-      // An empty batch stages either nothing or one schema-only zero-row
-      // file (Spark's empty-write shape) — record the id, promote no layer.
-      // The row-count guard matters: a promoted zero-row statless file
-      // would be treated conservatively by the erosion test without
-      // FileRect's rows guard, and is dead weight either way.
-      val stagedRows =
-        if (staged.isEmpty) 0L else spark.read.parquet(tmp.toString).count()
-      if (stagedRows == 0L) {
-        // an existing table records the watermark as a SAME-epoch snapshot
-        // refresh (no file-set change, epoch identity preserved); a fresh
-        // table's first-ever batch commits epoch 0 as usual
-        if (m0.isDefined) LayoutManifest.rewriteSameEpoch(fs, dir,
-          m.copy(lastBatch = Some(batchId)))
-        else LayoutManifest.write(fs, dir, m.copy(lastBatch = Some(batchId)))
-        // no epoch bump for an empty batch — release the claim it took
-        // (a fresh-table empty batch committed epoch 0 and released it)
-        fs.delete(LayoutManifest.claimPath(dir, newEpoch), false)
-        fs.delete(tmp, true)
-      } else {
-        val renames = staged.map(s => s -> s"part-b$batchId-${s.stripPrefix("part-")}")
-        val newM = m.copy(epoch = newEpoch,
-          appends = m.appends :+ renames.map(_._2).sorted,
-          lastBatch = Some(batchId))
-        ScopedCommit.replay(fs, dir,
-          ScopedCommit.write(fs, dir, renames, deletes = Nil, manifest = Some(newM),
-            stage = tmp))
-      }
-      ()
-    }
-    refreshCatalog(dir)
-    true
   }
 
   /** Result of a [[scopedRecluster]] pass, for logging and specs. */
@@ -1019,7 +923,7 @@ class Store(spark: SparkSession, baseDir: String) {
       .map(n => fs.getFileStatus(new Path(dir, n)).getLen).sum
     if (appendAll.isEmpty)
       return ScopedStats(base.size, 0, 0, 0L, totalBytes)
-    withEpochClaim(dir, m.epoch + 1, m.epoch, java.util.UUID.randomUUID.toString) {
+    withEpochClaim(dir, m.epoch + 1, m.epoch) {
     val rects = labeled(s"footer rects ${dir.getName}")(
       FileRect.readAll(spark, dir.toString, base ++ appendAll, m.zCols))
     val aRects = appendAll.map(rects)
@@ -1046,11 +950,8 @@ class Store(spark: SparkSession, baseDir: String) {
     // promoted names keep the part- prefix (scan-visible) and carry the
     // epoch so they can never collide with kept files or later passes
     val renames = staged.map(s => s -> s"part-s$epoch-${s.stripPrefix("part-")}")
-    // carry last_batch through: dropping it would let a checkpoint replay
-    // re-append an already-committed streaming batch after an OPTIMIZE
     val newManifest = LayoutManifest(m.zCols, m.bits, m.files, epoch,
-      base = (kept ++ renames.map(_._2)).sorted, appends = Nil,
-      lastBatch = m.lastBatch, schemaJson = m.schemaJson)
+      base = (kept ++ renames.map(_._2)).sorted, appends = Nil, schemaJson = m.schemaJson)
     // rewritten originals are RETIRED, not deleted: every prior epoch's
     // manifest keeps resolving them until an explicit vacuum reclaims
     ScopedCommit.replay(fs, dir, ScopedCommit.write(fs, dir, renames,
@@ -1229,8 +1130,7 @@ class Store(spark: SparkSession, baseDir: String) {
   private def withClaimUnlessNoop[T](dir: Path, m0: Option[LayoutManifest])(
       body: => T)(committed: T => Boolean): T = m0 match {
     case Some(m) =>
-      withEpochClaim(dir, m.epoch + 1, m.epoch,
-        java.util.UUID.randomUUID.toString) {
+      withEpochClaim(dir, m.epoch + 1, m.epoch) {
         val r = body
         if (!committed(r))
           fs.delete(LayoutManifest.claimPath(dir, m.epoch + 1), false)
@@ -1807,18 +1707,14 @@ class Store(spark: SparkSession, baseDir: String) {
     * them) and are swept here, so a crash between commit and release
     * never wedges the table.
     *
-    * `token` is the claim's content: a replayable writer (the
-    * exactly-once streaming sink) passes its batch id and may ADOPT a
-    * claim carrying the same token — a checkpoint replay of the crashed
-    * batch is the same logical writer continuing, not a concurrent one.
-    * Unique-token claims (every other mutator) are never adoptable; a
+    * The claim's content is a fresh UUID, quoted by the conflict error. A
     * crash between claim and commit leaves the FRONTIER claim blocking
     * mutations until [[releaseStaleClaims]] — fail-loud beats
     * fail-corrupt, and automatic frontier cleanup would reintroduce the
     * exact lost-claim race the guard exists to prevent.
     */
-  private def claimEpoch(dir: Path, newEpoch: Long, prevEpoch: Long,
-                         token: String): Unit = {
+  private def claimEpoch(dir: Path, newEpoch: Long, prevEpoch: Long): Unit = {
+    val token = java.util.UUID.randomUUID.toString
     val hd = LayoutManifest.historyDir(dir)
     fs.mkdirs(hd)
     // sweep finished claims (epoch transitions the manifest already moved
@@ -1860,13 +1756,10 @@ class Store(spark: SparkSession, baseDir: String) {
       val existing =
         try LayoutManifest.readLines(fs, hp).mkString("\n")
         catch { case _: Exception => "" }
-      // adopt our own replayed claim (same token); anything else is a
-      // concurrent or crashed OTHER writer
-      if (existing != token || token.isEmpty)
-        throw new java.util.ConcurrentModificationException(
-          s"epoch $newEpoch of $dir is already claimed by another writer " +
-            s"(claim='${existing.take(40)}') — a concurrent mutation is in flight, or one " +
-            "crashed mid-commit; if no writer is live, run releaseStaleClaims(rel)")
+      throw new java.util.ConcurrentModificationException(
+        s"epoch $newEpoch of $dir is already claimed by another writer " +
+          s"(claim='${existing.take(40)}') — a concurrent mutation is in flight, or one " +
+          "crashed mid-commit; if no writer is live, run releaseStaleClaims(rel)")
     }
     // VALIDATE after winning: the claim file is deleted when its epoch
     // commits, so create-if-absent alone cannot distinguish "nobody is
@@ -1886,6 +1779,19 @@ class Store(spark: SparkSession, baseDir: String) {
     }
   }
 
+  /** A SAME-epoch manifest rewrite (e.g. the erosion-stat refresh) under
+    * the claim machinery: claim the next epoch for the write's duration,
+    * always release — the epoch never commits, so [[LayoutManifest.write]]
+    * cannot release it (it releases the epoch it writes). One place for
+    * this non-obvious pairing; a hard crash mid-body still needs
+    * [[releaseStaleClaims]], like any crashed claim holder.
+    */
+  private def withSameEpochClaim[T](dir: Path, m: LayoutManifest)(body: => T): T = {
+    claimEpoch(dir, m.epoch + 1, m.epoch)
+    try body
+    finally fs.delete(LayoutManifest.claimPath(dir, m.epoch + 1), false)
+  }
+
   /** Run a mutator body under an epoch claim, releasing the claim when an
     * IN-PROCESS failure aborts before anything committed — a thrown
     * validation error or failed staging job must not wedge the table's
@@ -1895,22 +1801,9 @@ class Store(spark: SparkSession, baseDir: String) {
     * point the journal replays to completion and its manifest write
     * releases the claim itself.
     */
-  /** A SAME-epoch manifest rewrite (e.g. the erosion-stat refresh) under
-    * the claim machinery: claim the next epoch for the write's duration,
-    * always release — the epoch never commits, so [[LayoutManifest.write]]
-    * cannot release it (it releases the epoch it writes). One place for
-    * this non-obvious pairing; a hard crash mid-body still needs
-    * [[releaseStaleClaims]], like any crashed claim holder.
-    */
-  private def withSameEpochClaim[T](dir: Path, m: LayoutManifest)(body: => T): T = {
-    claimEpoch(dir, m.epoch + 1, m.epoch, java.util.UUID.randomUUID.toString)
-    try body
-    finally fs.delete(LayoutManifest.claimPath(dir, m.epoch + 1), false)
-  }
-
-  private def withEpochClaim[T](dir: Path, newEpoch: Long, prevEpoch: Long,
-                                token: String)(body: => T): T = {
-    claimEpoch(dir, newEpoch, prevEpoch, token)
+  private def withEpochClaim[T](dir: Path, newEpoch: Long, prevEpoch: Long)(
+      body: => T): T = {
+    claimEpoch(dir, newEpoch, prevEpoch)
     try body
     catch {
       case e: Throwable =>
@@ -1983,21 +1876,32 @@ class Store(spark: SparkSession, baseDir: String) {
     * promptly after resolving; reads of vacuum-retained epochs against a
     * paused writer are exact by construction.
     */
-  def readVersion(rel: String, epoch: Long): DataFrame = {
-    val r = resolveVersion(rel, epoch)
-    // partitioned manifests anchor the read at the table root, so Spark's
-    // partition parser reconstructs the `key=value` columns for live AND
-    // nested-retired files alike (flat manifests have no partition dirs
-    // and read as before)
+  def readVersion(rel: String, epoch: Long): DataFrame =
+    scan(rel, resolveVersion(rel, epoch))
+
+  /** The read of a resolution, shared by every manifest-driven reader.
+    * Partitioned manifests anchor the read at the table root, so Spark's
+    * partition parser reconstructs the `key=value` columns for live AND
+    * nested-retired files alike (flat manifests have no partition dirs).
+    * An EVOLVED epoch declares its schema in the snapshot: every file is
+    * projected to it (columns a pre-evolution file lacks read as null) —
+    * each epoch reads under ITS OWN schema, so VERSION AS OF a pre-ALTER
+    * epoch shows the narrow schema and a post-ALTER one the wide.
+    */
+  private def scan(rel: String, r: Store.ResolvedVersion): DataFrame = {
     val reader0 =
       if (r.partCols.nonEmpty) spark.read.option("basePath", s"$baseDir/$rel")
       else spark.read
-    // an EVOLVED epoch declares its schema in the snapshot: project every
-    // file to it (columns a pre-evolution file lacks read as null) — each
-    // epoch reads under ITS OWN schema, so VERSION AS OF a pre-ALTER
-    // epoch shows the narrow schema and a post-ALTER one the wide
-    val reader = r.schema.map(reader0.schema).getOrElse(reader0)
-    reader.parquet(r.paths: _*)
+    r.schema.map(reader0.schema).getOrElse(reader0).parquet(r.paths: _*)
+  }
+
+  /** One statement's recovery and committed-manifest read: finish a
+    * crashed swap or journaled commit, then read the manifest once.
+    */
+  private def recoverAndRead(dir: Path): Option[LayoutManifest] = {
+    Store.recoverSwap(fs, dir)
+    ScopedCommit.recover(fs, dir)
+    LayoutManifest.read(fs, dir)
   }
 
   /** [[readVersion]]'s resolution step alone: the epoch's file NAMES
@@ -2008,23 +1912,32 @@ class Store(spark: SparkSession, baseDir: String) {
     */
   private[graft] def resolveVersion(rel: String, epoch: Long): Store.ResolvedVersion = {
     val dir = new Path(s"$baseDir/$rel")
-    Store.recoverSwap(fs, dir)
-    ScopedCommit.recover(fs, dir)
+    resolveAt(rel, dir, epoch, recoverAndRead(dir))
+  }
+
+  /** Resolve `epoch` against `current`, the committed manifest that
+    * [[recoverAndRead]] returned for this statement.
+    */
+  private def resolveAt(rel: String, dir: Path, epoch: Long,
+                        current: Option[LayoutManifest]): Store.ResolvedVersion = {
     // epoch <= committed: with immutable commit pointers the committed
     // epoch IS the max snapshot, so this is a consistency bound (a commit
     // racing this resolution stays invisible until re-resolved), not a
     // phantom filter — a v<N> snapshot is a commit by construction
-    val committed = LayoutManifest.read(fs, dir).map(_.epoch).getOrElse(-1L)
-    // one read of the snapshot; missing, empty and non-manifest are all loud
-    val lines =
-      if (epoch > committed) Nil
-      else try LayoutManifest.readLines(fs, LayoutManifest.snapshotPath(dir, epoch))
-      catch { case _: java.io.FileNotFoundException => Nil }
-    if (!lines.exists(_.startsWith("zcols=")))
-      throw new IllegalStateException(
-        s"epoch $epoch of $rel is not readable — vacuumed, never committed, or an " +
-          s"unfinished claim (available: ${listVersions(rel).mkString(", ")})")
-    val m = LayoutManifest.fromLines(lines)
+    val committed = current.map(_.epoch).getOrElse(-1L)
+    // the committed epoch's snapshot is the manifest already read; an older
+    // one is read once — missing, empty and non-manifest are all loud
+    val m = current.filter(_.epoch == epoch).getOrElse {
+      val lines =
+        if (epoch > committed) Nil
+        else try LayoutManifest.readLines(fs, LayoutManifest.snapshotPath(dir, epoch))
+        catch { case _: java.io.FileNotFoundException => Nil }
+      if (!lines.exists(_.startsWith("zcols=")))
+        throw new IllegalStateException(
+          s"epoch $epoch of $rel is not readable — vacuumed, never committed, or an " +
+            s"unfinished claim (available: ${listVersions(rel).mkString(", ")})")
+      LayoutManifest.fromLines(lines)
+    }
     val live = listDataFilesDeep(dir).toSet
     val retired = listRetired(dir).keySet
     val paths = m.allFiles.map { n =>
@@ -2054,6 +1967,14 @@ class Store(spark: SparkSession, baseDir: String) {
     val dir = new Path(s"$baseDir/$rel")
     Store.recoverSwap(fs, dir)
     ScopedCommit.recover(fs, dir)
+    locateNames(rel, epoch, names)
+  }
+
+  /** [[resolveNames]] without its recovery, for a statement that already
+    * recovered (the change feed's per-epoch region reads).
+    */
+  private def locateNames(rel: String, epoch: Long, names: Seq[String]): Seq[String] = {
+    val dir = new Path(s"$baseDir/$rel")
     names.map { n =>
       val livePath = new Path(dir, n)
       if (fs.exists(livePath)) livePath.toString
@@ -2096,23 +2017,15 @@ class Store(spark: SparkSession, baseDir: String) {
     * originals at once; the manifest pins exactly one file set. Use for
     * correctness-critical reads of tables under continuous maintenance.
     */
-  def readSnapshot(rel: String): DataFrame = {
-    val r = resolveSnapshot(rel)
-    val reader0 =
-      if (r.partCols.nonEmpty) spark.read.option("basePath", s"$baseDir/$rel")
-      else spark.read
-    val reader = r.schema.map(reader0.schema).getOrElse(reader0)
-    reader.parquet(r.paths: _*)
-  }
+  def readSnapshot(rel: String): DataFrame = scan(rel, resolveSnapshot(rel))
 
   /** [[readSnapshot]]'s resolution step alone — see [[resolveVersion]]. */
   private[graft] def resolveSnapshot(rel: String): Store.ResolvedVersion = {
     val dir = new Path(s"$baseDir/$rel")
-    Store.recoverSwap(fs, dir)
-    ScopedCommit.recover(fs, dir)
-    val m = LayoutManifest.read(fs, dir).getOrElse(throw new IllegalStateException(
+    val current = recoverAndRead(dir)
+    val m = current.getOrElse(throw new IllegalStateException(
       s"$rel has no layout manifest — readSnapshot needs layout provenance"))
-    resolveVersion(rel, m.epoch)
+    resolveAt(rel, dir, m.epoch, current)
   }
 
   /** ROW-LEVEL CHANGE FEED over the manifest epochs — the Delta CDF role
@@ -2151,18 +2064,18 @@ class Store(spark: SparkSession, baseDir: String) {
                  untilEpoch: Option[Long] = None): DataFrame = {
     require(key.nonEmpty, "changeFeed needs the table's key column(s)")
     val dir = new Path(s"$baseDir/$rel")
-    Store.recoverSwap(fs, dir)
-    ScopedCommit.recover(fs, dir)
-    val current = currentEpoch(rel)
+    val m = recoverAndRead(dir)
+    val current = m.map(_.epoch).getOrElse(throw new IllegalStateException(
+      s"$rel has no layout manifest — epochs need layout provenance"))
     val until = untilEpoch.getOrElse(current)
     require(until <= current,
       s"untilEpoch $until is beyond the current epoch $current of $rel")
     require(sinceEpoch >= -1 && sinceEpoch <= until,
       s"sinceEpoch must be in [-1, $until], got $sinceEpoch")
-    val untilRes = resolveVersion(rel, until)
+    val untilRes = resolveAt(rel, dir, until, m)
     // uniform output schema: the until epoch's own read schema (declared
     // when evolved, else the files' physical schema + partition columns)
-    val outSchema = readVersion(rel, until).schema
+    val outSchema = scan(rel, untilRes).schema
     val missing = key.filterNot(k => outSchema.fieldNames.exists(_.equalsIgnoreCase(k)))
     require(missing.isEmpty,
       s"key column(s) not in $rel: ${missing.mkString(", ")} " +
@@ -2173,13 +2086,8 @@ class Store(spark: SparkSession, baseDir: String) {
       if (names.isEmpty)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
-      else {
-        val r0 =
-          if (untilRes.partCols.nonEmpty)
-            spark.read.option("basePath", s"$baseDir/$rel").schema(outSchema)
-          else spark.read.schema(outSchema)
-        r0.parquet(resolveNames(rel, epoch, names): _*)
-      }
+      else scan(rel, untilRes.copy(paths = locateNames(rel, epoch, names),
+        schema = Some(outSchema)))
     def stamp(df: DataFrame, tpe: String, epoch: Long): DataFrame =
       df.select(outSchema.fieldNames.map(col).toSeq :+
         lit(tpe).as("_change_type") :+
@@ -2398,7 +2306,7 @@ class Store(spark: SparkSession, baseDir: String) {
     val bytesIn = plan.map(_._3).sum
     val kmax = plan.map(_._4).max.toInt
     val totalOut = plan.map(_._4).sum.toInt
-    withEpochClaim(dir, m.epoch + 1, m.epoch, java.util.UUID.randomUUID.toString) {
+    withEpochClaim(dir, m.epoch + 1, m.epoch) {
       val tmp = ScopedCommit.newStageDir(dir)
       ScopedCommit.sweepStages(fs, dir)
       val region = evolvedReader(Some(m)).option("basePath", dir.toString)

@@ -91,8 +91,6 @@ object Scd2 {
     * Scale shape: one hash shuffle of (seed ∪ batch) for the window, one
     * (broadcast at small batch, else shuffled) semi/anti join pair on the
     * history — the history's own rows are never window-sorted again.
-    * [[applyBatchToStore]] adds the storage layout that makes the history
-    * READ O(touched) too.
     */
   def applyBatch(history: DataFrame, batch: DataFrame, key: String,
                  orderCols: Seq[String], trackCols: Seq[String]): DataFrame = {
@@ -157,61 +155,4 @@ object Scd2 {
     untouched.unionByName(closed)
       .unionByName(Scd2.history(merged, key, orderCols, trackCols))
   }
-
-  /** The storage face of [[applyBatch]]: the history lives as parquet
-    * partitioned by `kb = pmod(xxhash64(key), buckets)` — a pure function
-    * of the key — and each batch reads, rebuilds, and atomically swaps
-    * ONLY the buckets its keys hash into (same park-aside/rename + crash
-    * recovery discipline as the streaming upsert sink; untouched buckets'
-    * files are never listed, read, or moved — spec pins byte identity).
-    * Per-batch cost is O(touched buckets), so at 100 TB pick `buckets`
-    * so one bucket ≈ a few GB and a small batch touches a small fraction
-    * of the store; the bucket list itself is bounded by `buckets`, never
-    * by batch size, so the driver round stays O(1).
-    */
-  def applyBatchToStore(batch: DataFrame, tableDir: String, key: String,
-                        orderCols: Seq[String], trackCols: Seq[String],
-                        buckets: Int = 16): Unit = {
-    require(buckets > 0, s"buckets must be positive, got $buckets")
-    val spark = batch.sparkSession
-    val target = new org.apache.hadoop.fs.Path(tableDir)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.io.Store.recoverPartitionSwaps(fs, target)
-    val kb = pmod(xxhash64(col(key)), lit(buckets.toLong)).cast("int")
-    val touchedBuckets = batch.select(kb.as("kb")).distinct()
-      .collect().map(_.getInt(0)) // bounded by `buckets`, not by the batch
-    if (touchedBuckets.isEmpty) return
-    val hasData = fs.exists(target) && fs.listStatus(target).exists { st =>
-      val n = st.getPath.getName
-      !n.startsWith(".") && !n.startsWith("_")
-    }
-    val histSchema = org.apache.spark.sql.types.StructType(
-      batch.select((col(key) +: trackCols.map(col)) ++ Seq(
-        col(orderCols.head).as("valid_from"), col(orderCols.head).as("valid_to"),
-        lit(1L).as("is_current")): _*).schema)
-    val existing =
-      if (hasData)
-        // kb is a partition column: the isin prunes at file-listing time,
-        // so untouched buckets' directories are never enumerated
-        spark.read.parquet(tableDir)
-          .where(col("kb").isin(touchedBuckets.toIndexedSeq: _*)).drop("kb")
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], histSchema)
-    val rebuilt = applyBatch(existing, batch, key, orderCols, trackCols)
-      .withColumn("kb", kb)
-    val tmp = new org.apache.hadoop.fs.Path(target.getParent, s".tmp_${target.getName}")
-    fs.delete(tmp, true)
-    rebuilt.write.mode("overwrite").partitionBy("kb").parquet(tmp.toString)
-    fs.mkdirs(target)
-    touchedBuckets.foreach { b =>
-      graft.io.Store.swapInto(fs,
-        new org.apache.hadoop.fs.Path(tmp, s"kb=$b"),
-        new org.apache.hadoop.fs.Path(target, s"kb=$b"))
-    }
-    fs.delete(tmp, true)
-  }
-
-  /** Read back [[applyBatchToStore]]'s table without the bucket column. */
-  def readStore(spark: org.apache.spark.sql.SparkSession, tableDir: String): DataFrame =
-    spark.read.parquet(tableDir).drop("kb")
 }

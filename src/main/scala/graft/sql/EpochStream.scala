@@ -29,8 +29,7 @@ object GraftEpochOffset {
 /** `spark.readStream.table("graft.t")` over a manifest store — epochs as
   * offsets: each micro-batch is the file DELTA between two committed
   * epochs, read from the manifest snapshots (never a directory listing),
-  * so a batch can neither duplicate nor miss rows and the stream composes
-  * with the exactly-once sink's epoch discipline.
+  * so a batch can neither duplicate nor miss rows.
   *
   * APPEND-ONLY contract, enforced loudly: a rewrite epoch (recluster,
   * COW delete/update, replace, a partition RE-upsert — any epoch that

@@ -297,31 +297,6 @@ object EventStreams {
       graft.ext.TextStats.withCleaned(df, text), text = "clean_text")
       .where(col("dup_fraction") <= maxDupFraction)
 
-  /** Stateless Gopher-rule quality gate for an unbounded feed: x30's
-    * per-rule flags computed over the CLEANED text, keeping only rows
-    * that pass every rule (the flags ride along for downstream auditing).
-    * Pure column expressions — no watermark, no state, and therefore
-    * byte-identical on a batch frame (parity pinned in StreamingSpec);
-    * composes before [[dedupAgainstCorpus]] the same way
-    * [[repetitionFiltered]] does.
-    */
-  def qualityFiltered(df: DataFrame, text: String = "text",
-                      minWords: Int = 30, maxWords: Int = 1000): DataFrame =
-    graft.ext.TextStats.withQualityRules(
-      graft.ext.TextStats.withCleaned(df, text), text = "clean_text",
-      minWords = minWords, maxWords = maxWords)
-      .where(col("keep") === 1)
-
-  /** Stateless lexical-diversity gate (x30b) for an unbounded feed: the
-    * sorted-run fold is a pure per-row expression, so it streams with no
-    * state and stays batch-identical — the property that lets CurateJob's
-    * quality stage and this stream share one definition of "keep".
-    */
-  def diversityFiltered(df: DataFrame, text: String = "text"): DataFrame =
-    graft.ext.TextStats.withLexicalDiversity(
-      graft.ext.TextStats.withCleaned(df, text), text = "clean_text")
-      .where(col("keep") === 1)
-
   case class Session(userId: Long, nEvents: Long, totalValue: Double,
                      startTs: Timestamp, endTs: Timestamp)
   case class SessionState(n: Long, total: Double, startMs: Long, lastMs: Long)
@@ -463,85 +438,6 @@ object EventStreams {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         upsertPartitions(batch.toDF(), tableDir, keys, tsCol)
-      }
-      .start()
-
-  /** Streaming append into a curve-clustered (z-ordered) layout — the
-    * continuous-ingest face of [[graft.io.Store.appendZordered]] plus its
-    * amortized OPTIMIZE: each micro-batch lands as one internally-curve-
-    * clustered append layer via the journaled exactly-once commit
-    * ([[graft.io.Store.appendZorderedExactlyOnce]] — the batch's files
-    * and its committed-batch-id record become visible in one replayable
-    * unit, so a checkpoint-recovery re-delivery is a no-op instead of a
-    * duplicate layer), and every `reclusterEvery` committed batches a
-    * SCOPED recluster folds the accreted layers back into the base
-    * layout — rewriting only eroded files, O(appended + eroded bytes),
-    * never the whole table. Crash windows are the commit journal's:
-    * every layout mutator replays an interrupted commit on entry.
-    *
-    * Scale shape: per batch one quantile sketch + range exchange over
-    * the BATCH only; maintenance cost is paid 1/reclusterEvery of the
-    * time and scoped to erosion. This is the standard lakehouse
-    * streaming-ingest discipline (append cheap + amortized OPTIMIZE)
-    * with the layout, journal, and idempotence in one place.
-    *
-    * Retention: each scoped pass RETIRES the files it rewrites (time
-    * travel), so a long-running sink's retired bytes grow at the
-    * maintenance rewrite rate unless something reclaims them —
-    * `keepVersions > 0` bounds that by vacuuming down to the newest N
-    * epochs on the same cadence as the scoped pass (the only step here
-    * that retires anything). Default 0 = retain everything: physical
-    * deletion of history is an explicit operator opt-in (the lakehouse
-    * norm — nothing auto-vacuums), via this knob, a scheduled
-    * [[graft.io.Store.maintainRetention]], or manual vacuum. A
-    * continuously-maintained sink SHOULD set it (e.g. 8) or pair with
-    * maintainRetention, or retired bytes grow without bound.
-    */
-  def zorderedAppendSink(stream: DataFrame, tableDir: String, zCols: Seq[String],
-                         checkpointDir: String, files: Int = 8, bits: Int = 6,
-                         reclusterEvery: Int = 0, keepVersions: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val dir = new org.apache.hadoop.fs.Path(tableDir)
-        val store = new graft.io.Store(batch.sparkSession, dir.getParent.toString)
-        store.appendZorderedExactlyOnce(
-          batch.toDF(), dir.getName, zCols, batchId, files, bits)
-        // NOT gated on the append having landed: when the boundary batch
-        // is a checkpoint replay (committed before a crash, re-delivered
-        // now), the maintenance it owed must still run — scopedRecluster
-        // is idempotent and near-free when nothing eroded
-        if (reclusterEvery > 0 && (batchId + 1) % reclusterEvery == 0) {
-          store.scopedRecluster(dir.getName)
-          if (keepVersions > 0) store.vacuum(dir.getName, keepVersions)
-        }
-        ()
-      }
-      .start()
-
-  /** Streaming SCD2 maintenance: each micro-batch of keyed observations
-    * folds into the bucket-partitioned dimension-history store via
-    * [[graft.operators.Scd2.applyBatchToStore]] — the streaming face of
-    * x52c. Per batch: O(touched kb= buckets) read + rebuild + atomic
-    * swap; untouched buckets' files never move. State lives in the TABLE
-    * (like [[upsertSink]]), so keys are unbounded and no watermark is
-    * needed; a checkpoint-recovery replay is idempotent because
-    * `applyBatch` treats rows already inside recorded intervals as
-    * no-ops and the per-bucket swap recovers its own crash window.
-    * In-order arrival per key is the contract (the stream IS the
-    * observation order); a contradicting out-of-order row fails the
-    * batch loudly rather than rewriting history.
-    */
-  def scd2Sink(stream: DataFrame, tableDir: String, key: String,
-               orderCols: Seq[String], trackCols: Seq[String],
-               checkpointDir: String, buckets: Int = 16)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.Scd2.applyBatchToStore(batch.toDF(), tableDir, key,
-          orderCols, trackCols, buckets)
       }
       .start()
 

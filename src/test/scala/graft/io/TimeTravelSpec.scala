@@ -263,7 +263,7 @@ class TimeTravelSpec extends AnyFunSuite {
   }
 
   test("epoch claims: a concurrent mutator fails loudly with the table intact; " +
-    "exactly-once replays adopt their own claim; commits release claims") {
+    "commits release claims") {
     val base = Files.createTempDirectory("graft_tt_cas").toString
     val store = new Store(spark, base)
     val df = spark.range(500).select(col("id").as("k"), (col("id") % 100).as("v"))
@@ -285,29 +285,12 @@ class TimeTravelSpec extends AnyFunSuite {
     intercept[java.util.ConcurrentModificationException] {
       store.deleteWhere("tbl", col("k") < 10)
     }
-    intercept[java.util.ConcurrentModificationException] {
-      store.appendZorderedExactlyOnce(batch, "tbl", Seq("k", "v"), batchId = 3L)
-    }
     assert(triples() == before, "losing mutators must leave the table untouched")
     assert(rows(spark.read.parquet(dir.toString)) == rows(store.readVersion("tbl", 0L)))
     // A crashed before committing: the frontier claim releases explicitly
     assert(store.releaseStaleClaims("tbl") == 1)
     store.appendZordered(batch, "tbl", Seq("k", "v"), files = 1)  // epoch 1
     assert(!fs.exists(LayoutManifest.claimPath(dir, 1L)), "commit must release the claim")
-    // exactly-once adoption: a crashed batch-7 writer left its claim; the
-    // checkpoint REPLAY of batch 7 adopts it, any other batch fails loudly
-    val o2 = fs.create(LayoutManifest.claimPath(dir, 2L), false)
-    o2.write("b7".getBytes("UTF-8")); o2.close()
-    intercept[java.util.ConcurrentModificationException] {
-      store.appendZorderedExactlyOnce(
-        spark.range(550, 560).select(col("id").as("k"), (col("id") % 100).as("v")),
-        "tbl", Seq("k", "v"), batchId = 8L)
-    }
-    assert(store.appendZorderedExactlyOnce(
-      spark.range(550, 560).select(col("id").as("k"), (col("id") % 100).as("v")),
-      "tbl", Seq("k", "v"), batchId = 7L), "the replaying batch must adopt its own claim")
-    assert(!fs.exists(LayoutManifest.claimPath(dir, 2L)))
-    assert(spark.read.parquet(dir.toString).count() == 560)
   }
 
   test("a fully-written v<N> snapshot IS a committed epoch (immutable commit " +
@@ -363,12 +346,11 @@ class TimeTravelSpec extends AnyFunSuite {
       store.appendZordered(df, "fresh", Seq("k", "v"), files = 1)
     }
     intercept[java.util.ConcurrentModificationException] {
-      store.appendZorderedExactlyOnce(df, "fresh", Seq("k", "v"), batchId = 0L)
+      store.writeZordered(df, "fresh", Seq("k", "v"), files = 1)
     }
-    // and the first exactly-once commit lands at epoch 0, like every
-    // other first write — one numbering across paths
+    // and the first commit lands at epoch 0 — one numbering across paths
     assert(fs.delete(LayoutManifest.claimPath(fresh, 0L), false))
-    assert(store.appendZorderedExactlyOnce(df, "fresh", Seq("k", "v"), batchId = 0L))
+    store.appendZordered(df, "fresh", Seq("k", "v"), files = 1)
     assert(LayoutManifest.read(fs, fresh).get.epoch == 0L)
     assert(store.listVersions("fresh") == Seq(0L))
   }
@@ -757,4 +739,48 @@ class TimeTravelSpec extends AnyFunSuite {
     assert(liveTriples().size <= baseTriples.size + 2,
       s"thin layers not folded: ${liveTriples().size} files")
   }
+
+  test("a snapshot read and a change feed each recover and resolve the table once") {
+    val base = Files.createTempDirectory("graft_tt_listings").toString
+    val store = new Store(spark, base)
+    store.writeZordered(spark.range(300).select(col("id").as("k"), (col("id") % 7).as("v")),
+      "tbl", Seq("k", "v"), files = 2)                               // epoch 0
+    store.deleteWhere("tbl", col("k") < 10)                          // epoch 1
+    // the same table through a file system that records every listing
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.countfs.impl", classOf[ListingCountingFs].getName)
+    val counted = new Store(spark, s"countfs://$base")
+    val dir = s"$base/tbl"
+    val history = s"$dir/${LayoutManifest.HistoryDirName}"
+    def listings(body: => Unit): Map[String, Int] = {
+      ListingCountingFs.listed.clear()
+      body
+      ListingCountingFs.listed.toArray.toSeq.map(_.toString)
+        .groupBy(identity).map { case (p, ps) => p -> ps.size }
+    }
+    // one recovery lists the journal markers and one manifest read lists
+    // the snapshots; one resolution walks the root for live and retired files
+    val snap = listings(counted.readSnapshot("tbl"))
+    assert(snap.getOrElse(history, 0) == 2 && snap.getOrElse(dir, 0) == 2, snap)
+    // the feed adds versionHistory's three history listings (for the commit
+    // stamps: two manifest reads and the version listing), nothing per epoch
+    val feed = listings(counted.changeFeed("tbl", Seq("k"), sinceEpoch = -1))
+    assert(feed.getOrElse(history, 0) == 5 && feed.getOrElse(dir, 0) == 2, feed)
+  }
+}
+
+/** The local file system under its own `countfs` scheme, recording the
+  * path of every `listStatus` — a statement's metadata-call budget.
+  */
+class ListingCountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "countfs"
+  override def getUri: java.net.URI = java.net.URI.create("countfs:///")
+  override def listStatus(f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    ListingCountingFs.listed.add(f.toUri.getPath)
+    super.listStatus(f)
+  }
+}
+
+object ListingCountingFs {
+  val listed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }

@@ -393,34 +393,6 @@ class Scd2Spec extends AnyFunSuite {
     val h3 = Scd2.applyBatch(once, consistent, "k", Seq("t", "id"), Seq("v"))
     assert(histSet(h3) == histSet(once))
   }
-
-  test("incremental store: only touched kb= buckets are rewritten; read-back equals full rebuild") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_scd2_store").toString
-    val table = s"$dir/hist"
-    val all = (1 to 200).map { i =>
-      ((i % 10).toLong, i.toLong, i.toLong, "s" + (i % 3))
-    }
-    val older = all.filter(_._2 <= 150).toDF("k", "t", "id", "v")
-    val batch = all.filter(_._2 > 150).filter(_._1 == 3L).toDF("k", "t", "id", "v")
-    Scd2.applyBatchToStore(older, table, "k", Seq("t", "id"), Seq("v"), buckets = 16)
-    def bucketFiles(): Map[String, Set[(String, Long, Long)]] =
-      new java.io.File(table).listFiles().filter(_.isDirectory)
-        .filterNot(_.getName.startsWith("."))
-        .map(d => d.getName -> d.listFiles().filter(_.isFile)
-          .filterNot(_.getName.startsWith("."))
-          .map(f => (f.getName, f.length(), f.lastModified())).toSet).toMap
-    val before = bucketFiles()
-    Scd2.applyBatchToStore(batch, table, "k", Seq("t", "id"), Seq("v"), buckets = 16)
-    val after = bucketFiles()
-    // byte-identity law: every bucket k=3 does NOT hash into is untouched
-    val touchedDirs = after.keySet.filterNot(b => before.get(b).contains(after(b)))
-    assert(touchedDirs.size == 1, s"expected exactly 1 rewritten bucket, got $touchedDirs")
-    // content law: the store equals a full rebuild of the combined log
-    val expect = histSet(Scd2.history(
-      older.unionByName(batch), "k", Seq("t", "id"), Seq("v")))
-    assert(histSet(Scd2.readStore(spark, table)
-      .select("k", "v", "valid_from", "valid_to", "is_current")) == expect)
-  }
 }
 
 class RollingSpec extends AnyFunSuite {

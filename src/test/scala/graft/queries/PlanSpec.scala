@@ -36,17 +36,26 @@ class PlanSpec extends AnyFunSuite {
 
   test("optimizer fences: each pair-verify kernel appears once in its optimized plan") {
     // BoundedJaccard (deterministic = false) and the `spark_partition_id() * 0`
-    // terms in the ArrayEqCount/HammingCount columns of ext/Dedup.scala keep
-    // each kernel in ONE Project, with the threshold filter on its attribute. A
+    // terms in the ArrayEqCount/HammingCount columns of ext/Dedup.scala and
+    // the cosine columns of ext/SimSearch.scala keep each kernel in ONE
+    // Project, with the threshold filter on its attribute. A
     // Spark upgrade whose optimizer sees through a fence would substitute
     // the kernel into the filter or join condition and evaluate it again.
-    val kernels = Seq("boundedjaccard", "arrayeqcount", "hammingcount")
+    val kernels = Seq("boundedjaccard", "arrayeqcount", "hammingcount", "floatdotproduct")
     val queries = Seq("x2_dedup_minhash", "x3_dedup_ngram", "x4_dedup_simhash",
+      "x5_embed_neardup", "x5b_neardup_cell_recall",
       "x14_dedup_resolve", "x19_decontaminate", "x20_dedup_incremental",
       "x34_dedup_collapse")
     val plans = queries.map(q =>
       q -> graft.SparkEntry.queries(q)(spark, sf).queryExecution.optimizedPlan.toString).toMap
-    def uses(q: String, k: String) = s"\\b$k\\(".r.findAllMatchIn(plans(q)).size
+    // the pair kernel of the embedding joins is floatdotproduct over two
+    // DIFFERENT attributes; the per-side norms SQRT(floatdotproduct(e, e))
+    // and the centroid dots against literals are not pair kernels
+    val pairDot = """floatdotproduct\((\w+#\d+), (\w+#\d+)\)""".r
+    def uses(q: String, k: String) =
+      if (k == "floatdotproduct")
+        pairDot.findAllMatchIn(plans(q)).count(m => m.group(1) != m.group(2))
+      else s"\\b$k\\(".r.findAllMatchIn(plans(q)).size
     kernels.foreach(k => assert(queries.exists(uses(_, k) > 0), s"no query uses $k"))
     val wrong = for (q <- queries; k <- kernels if uses(q, k) > 1)
       yield s"$q: $k x${uses(q, k)} in\n" +
@@ -252,75 +261,6 @@ class PlanSpec extends AnyFunSuite {
     assert(spark.table("graft_plan_snap_v").count() == n0 + 100,
       "snapshot view broken after scoped rewrite")
     spark.catalog.dropTempView("graft_plan_snap_v")
-  }
-
-  test("point-in-time join against the scd2 STORE prunes history buckets dynamically") {
-    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
-    // the serving-side counterpart of the x52c write path: facts carry
-    // their key's kb (a pure function of the key), and joining them to the
-    // kb-partitioned history store triggers Spark's dynamic partition
-    // pruning — the history scan's PartitionFilters gains a runtime
-    // dynamicpruning IN-subquery over the batch's buckets, so a small fact
-    // batch reads a small fraction of a 100 TB dimension history with no
-    // manual isin plumbing. Pinned: the dpp expression in the scan AND
-    // output identity with the in-memory x52b-style interval join.
-    val dir = java.nio.file.Files.createTempDirectory("graft-scd2-dpp-").toString
-    val obs = graft.Tables.events(spark, sf)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-    graft.operators.Scd2.applyBatchToStore(obs, s"$dir/hist",
-      "user_id", Seq("ts", "event_id"), Seq("event_type"), buckets = 16)
-    val hist = spark.read.parquet(s"$dir/hist")
-    val facts = graft.Tables.events(spark, sf)
-      .where(col("event_id") % 50 === 0)
-      .select(col("event_id"), col("user_id").as("f_user"), col("ts").as("f_ts"))
-      .withColumn("kb", pmod(xxhash64(col("f_user")), lit(16L)).cast("int"))
-    val pit = hist.join(facts, Seq("kb"))
-      .where(col("user_id") === col("f_user") && col("valid_from") <= col("f_ts") &&
-        (col("valid_to").isNull || col("f_ts") < col("valid_to")))
-      .select(col("event_id"), col("f_user"), col("event_type"))
-    val got = pit.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
-    val p = pit.queryExecution.executedPlan.toString
-    assert(p.contains("dynamicpruning"), s"no dynamic partition pruning on the history scan:\n$p")
-    // semantics unchanged by the storage layout: equals the in-memory join
-    val mem = graft.operators.Scd2.history(obs, "user_id", Seq("ts", "event_id"),
-        Seq("event_type"))
-      .join(facts.drop("kb"), col("user_id") === col("f_user") &&
-        col("valid_from") <= col("f_ts") &&
-        (col("valid_to").isNull || col("f_ts") < col("valid_to")))
-      .select(col("event_id"), col("f_user"), col("event_type"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
-    assert(got.nonEmpty && got == mem)
-  }
-
-  test("incremental scd2 store: the history scan is bucket-pruned at file listing") {
-    import org.apache.spark.sql.functions.{col, input_file_name, lit, pmod, xxhash64}
-    // the x52c storage face reads the existing history through
-    // kb isin (touched buckets); that predicate must land in
-    // PartitionFilters (directory enumeration), so untouched buckets of a
-    // 100 TB history are never listed — the read-side half of the
-    // O(touched) contract (the write side is byte-identity, pinned in
-    // Scd2Spec).
-    val dir = java.nio.file.Files.createTempDirectory("graft-scd2-prune-").toString
-    val obs = graft.Tables.events(spark, sf)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-    graft.operators.Scd2.applyBatchToStore(obs, s"$dir/hist",
-      "user_id", Seq("ts", "event_id"), Seq("event_type"), buckets = 16)
-    val touched = Seq(3, 7)
-    val pruned = spark.read.parquet(s"$dir/hist")
-      .where(col("kb").isin(touched: _*))
-    val p = pruned.queryExecution.executedPlan.toString
-    val pf = "PartitionFilters: \\[[^\\]]+\\]".r.findFirstIn(p)
-    assert(pf.exists(_.contains("kb")), s"no partition filter on kb:\n$p")
-    val files = pruned.select(input_file_name()).distinct().collect().map(_.getString(0))
-    assert(files.nonEmpty && files.forall(f => touched.exists(b => f.contains(s"kb=$b"))),
-      files.mkString("\n"))
-    // and the bucket assignment the face prunes BY matches the stored one
-    val mismatch = graft.operators.Scd2.readStore(spark, s"$dir/hist")
-      .withColumn("kb2", pmod(xxhash64(col("user_id")), lit(16L)).cast("int"))
-      .join(spark.read.parquet(s"$dir/hist").select(col("user_id"),
-        col("kb")).distinct(), Seq("user_id"))
-      .where(col("kb") =!= col("kb2")).count()
-    assert(mismatch == 0L)
   }
 
   test("snapshot diff is one keyed full-outer join, never all-pairs") {

@@ -549,53 +549,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streaming quality gate: rule-failing docs drop mid-stream, batch-identical") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val good = "the quick brown fox jumps over a lazy dog near the old stone " +
-      "bridge while birds sing in the warm morning light and children play for " +
-      "hours on the green grass by the river bank today"
-    val bad = "too short to pass the word count rule"
-    val rows = Seq((1L, ts("2024-01-01 10:00:00"), good),
-      (2L, ts("2024-01-01 10:01:00"), bad))
-    val input = MemoryStream[(Long, Timestamp, String)]
-    val q = EventStreams.qualityFiltered(input.toDF().toDF("doc_id", "ts", "text"))
-      .writeStream.outputMode("append").format("memory").queryName("qual_out").start()
-    val streamed = try {
-      input.addData(rows: _*)
-      q.processAllAvailable()
-      spark.table("qual_out").collect()
-        .map(r => (r.getLong(r.fieldIndex("doc_id")), r.getLong(r.fieldIndex("keep"))))
-    } finally q.stop()
-    assert(streamed.toSeq == Seq((1L, 1L)))
-    // the same function on a batch frame selects the same rows
-    val batch = EventStreams.qualityFiltered(
-      rows.toDF("doc_id", "ts", "text")).select("doc_id").collect().map(_.getLong(0))
-    assert(batch.toSeq == Seq(1L))
-  }
-
-  test("streaming diversity gate: low-TTR spam drops mid-stream, batch-identical") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val diverse = (1 to 8).map(i => s"alpha$i beta$i").mkString(" ") // 16 words, all distinct
-    val spam = (1 to 16).map(_ => "buy").mkString(" ")               // ttr 1/16, top 16
-    val rows = Seq((1L, ts("2024-01-01 10:00:00"), diverse),
-      (2L, ts("2024-01-01 10:01:00"), spam))
-    val input = MemoryStream[(Long, Timestamp, String)]
-    val q = EventStreams.diversityFiltered(input.toDF().toDF("doc_id", "ts", "text"))
-      .writeStream.outputMode("append").format("memory").queryName("div_out").start()
-    val streamed = try {
-      input.addData(rows: _*)
-      q.processAllAvailable()
-      spark.table("div_out").collect()
-        .map(r => (r.getLong(r.fieldIndex("doc_id")), r.getLong(r.fieldIndex("keep"))))
-    } finally q.stop()
-    assert(streamed.toSeq == Seq((1L, 1L)))
-    val batch = EventStreams.diversityFiltered(
-      rows.toDF("doc_id", "ts", "text")).select("doc_id").collect().map(_.getLong(0))
-    assert(batch.toSeq == Seq(1L))
-  }
-
   test("streaming and batch sessionization agree on the same events") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -793,63 +746,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(batch == got, s"NTZ stream face diverged from batch: $batch vs $got")
   }
 
-  test("zordered append sink: stream content equals batch appends, replay is a no-op, " +
-    "periodic scoped recluster bounds the layer count") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft_zsink").toString
-    val table = s"$dir/table"
-    val input = MemoryStream[(Long, Long)]
-    val q = EventStreams.zorderedAppendSink(
-      input.toDF().toDF("k", "v"), table, Seq("k", "v"),
-      checkpointDir = s"$dir/ckpt", files = 2, bits = 4, reclusterEvery = 2)
-    var viewRegistered = false
-    try {
-      // 4 batches -> scoped recluster fires after batch ids 1 and 3
-      (0 until 4).foreach { i =>
-        input.addData((0L until 500L).map(j => (i * 500L + j, j % 97)): _*)
-        q.processAllAvailable()
-        if (i == 0) {
-          // a snapshot view pinned after the FIRST committed batch must
-          // follow every later batch's epoch (each exactly-once commit
-          // re-pins it) — streaming ingest composes with the SQL face
-          new graft.io.Store(spark, dir).registerSnapshotView("graft_zsink_v", "table")
-          viewRegistered = true
-          assert(spark.table("graft_zsink_v").count() == 500)
-        }
-      }
-      assert(spark.table("graft_zsink_v").count() == 2000,
-        "snapshot view fell behind the streaming commits")
-    } finally {
-      q.stop()
-      if (viewRegistered) spark.catalog.dropTempView("graft_zsink_v")
-    }
-    val got = spark.read.parquet(table)
-    assert(got.count() == 2000)
-    assert(got.agg(sum("k")).head.getLong(0) == (0L until 2000L).sum,
-      "stream content diverged from the equivalent batch appends")
-    // after the batch-3 recluster no append layers remain: bounded files
-    val fs = new org.apache.hadoop.fs.Path(table)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val m = graft.io.LayoutManifest.read(fs, new org.apache.hadoop.fs.Path(table)).get
-    assert(m.appends.isEmpty && m.lastBatch.contains(3L), m.toString)
-    // a checkpoint-recovery re-delivery of a committed batch is a no-op
-    val store = new graft.io.Store(spark, dir)
-    val dup = (0L until 500L).map(j => (j, j % 97)).toDF("k", "v")
-    assert(!store.appendZorderedExactlyOnce(dup, "table", Seq("k", "v"), batchId = 3L,
-      files = 2, bits = 4))
-    assert(spark.read.parquet(table).count() == 2000, "replayed batch duplicated rows")
-    // ...and the watermark survives a later full recluster too
-    store.recluster("table", Seq("k", "v"), files = 2, bits = 4)
-    assert(!store.appendZorderedExactlyOnce(dup, "table", Seq("k", "v"), batchId = 3L,
-      files = 2, bits = 4))
-    assert(spark.read.parquet(table).count() == 2000)
-    // but the NEXT batch id lands
-    assert(store.appendZorderedExactlyOnce(dup, "table", Seq("k", "v"), batchId = 4L,
-      files = 2, bits = 4))
-    assert(spark.read.parquet(table).count() == 2500)
-  }
-
   test("upsert replay after a crash mid-swap restores the parked table instead of losing it") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_upsert_crash").toString
@@ -889,53 +785,6 @@ class StreamingSpec extends AnyFunSuite {
     val out = spark.read.parquet(table).drop("dt").collect()
       .map(r => r.getTimestamp(0) -> r.getString(1)).toMap
     assert(out == Map(ts("2024-01-01 10:00:00") -> "a1"))
-  }
-
-  test("streaming scd2 sink: micro-batches fold into the history store like a full " +
-    "rebuild; replay is a no-op; untouched buckets never move") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft_scd2_sink").toString
-    val table = s"$dir/hist"
-    val input = MemoryStream[(Long, Long, Long, String)]
-    val q = EventStreams.scd2Sink(input.toDF().toDF("k", "t", "id", "v"),
-      table, "k", Seq("t", "id"), Seq("v"), s"$dir/ckpt", buckets = 16)
-    def bucketFiles(): Map[String, Set[(String, Long, Long)]] =
-      new java.io.File(table).listFiles().filter(_.isDirectory)
-        .filterNot(_.getName.startsWith("."))
-        .map(d => d.getName -> d.listFiles().filter(_.isFile)
-          .filterNot(_.getName.startsWith("."))
-          .map(f => (f.getName, f.length(), f.lastModified())).toSet).toMap
-    try {
-      val b1 = Seq((1L, 10L, 1L, "a"), (1L, 20L, 2L, "b"), (2L, 10L, 3L, "x"))
-      val b2 = Seq((1L, 30L, 4L, "b"), (3L, 30L, 5L, "z")) // k=2 untouched
-      input.addData(b1: _*)
-      q.processAllAvailable()
-      val before = bucketFiles()
-      input.addData(b2: _*)
-      q.processAllAvailable()
-      val after = bucketFiles()
-      // k=2's bucket is untouched by batch 2 — byte-identical files
-      // (k=2 must hash apart from 1 and 3 at 16 buckets: asserted, not assumed)
-      def kb(k: Long) = Seq(k).toDF("k")
-        .select(pmod(xxhash64(col("k")), lit(16L)).cast("int")).head.getInt(0)
-      assert(kb(2L) != kb(1L) && kb(2L) != kb(3L), "fixture keys collide; pick others")
-      val touched = after.keySet.filterNot(b => before.get(b).contains(after(b)))
-      assert(!touched.contains(s"kb=${kb(2L)}"),
-        s"untouched key's bucket was rewritten: $touched")
-      val expect = graft.operators.Scd2.history(
-        (b1 ++ b2).toDF("k", "t", "id", "v"), "k", Seq("t", "id"), Seq("v"))
-        .collect().map(_.toString).sorted.toSeq
-      def stored() = graft.operators.Scd2.readStore(spark, table)
-        .select("k", "v", "valid_from", "valid_to", "is_current")
-        .collect().map(_.toString).sorted.toSeq
-      assert(stored() == expect)
-      // replay: the same micro-batch again (checkpoint recovery) — history
-      // unchanged even though b2 spans k=1's change point
-      input.addData(b2: _*)
-      q.processAllAvailable()
-      assert(stored() == expect)
-    } finally q.stop()
   }
 
   test("partition-day assignment is pinned to the UTC calendar, not the session timezone") {
