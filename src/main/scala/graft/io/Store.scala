@@ -5,19 +5,36 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** Storage layer: reference-parity CSV artifacts plus the partitioned
+/** Storage layer: reference-parity CSV histories plus the partitioned
   * Parquet layout that is the real sink at scale (SURVEY.md §2.1 S6-S8).
   *
   * The reference's CSV is the inter-job IR (`raw_data.py:263`,
-  * `data_engineering.py:130`); we keep it as a faithful export (single
-  * sorted file with header). The scale path is date-partitioned Parquet:
-  * daily increments overwrite only their own `dt=` partitions (dynamic
-  * partition overwrite), so a 100 TB history is never rewritten to upsert
-  * 24 rows.
+  * `data_engineering.py:130`). Each CSV history is a flat directory of
+  * DAY FILES: one headered `part-<yyyy-MM-dd>-<id>.csv` per UTC day, its
+  * rows sorted, so name order is datetime order. Concatenation law: the
+  * header plus every day file's body, in name order, is byte-for-byte the
+  * reference's single sorted file. A daily write replaces only its own
+  * days' files, so adding 24 rows never rewrites the history. The scale
+  * path is date-partitioned Parquet: daily increments overwrite only their
+  * own `dt=` partitions (dynamic partition overwrite), so a 100 TB history
+  * is never rewritten to upsert 24 rows either.
   */
 class Store(spark: SparkSession, baseDir: String) {
 
   private def fs = new Path(baseDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The file system the CSV day files are listed, created and renamed
+    * through: for the local file system, [[NioPermissionFs]] (no checksum
+    * files to create and rename alongside, no forked `chmod`); any other
+    * file system as it is.
+    */
+  private lazy val dayFs: org.apache.hadoop.fs.FileSystem = fs match {
+    case _: org.apache.hadoop.fs.LocalFileSystem =>
+      val local = new NioPermissionFs
+      local.initialize(java.net.URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+      local
+    case other => other
+  }
 
   /** Label the Spark jobs `body` submits (guide §1.5) so the UI and the
     * Profile job timeline attribute every lakehouse mutation's jobs to
@@ -33,37 +50,119 @@ class Store(spark: SparkSession, baseDir: String) {
 
   def exists(rel: String): Boolean = fs.exists(new Path(s"$baseDir/$rel"))
 
-  /** S6: schema'd CSV scan (no inference — SURVEY §1.1). */
+  /** S6: schema'd scan of a whole CSV history (no inference — SURVEY
+    * §1.1). The day-file directory is flat, so the frame has exactly the
+    * schema's columns and building it lists one directory, with no job.
+    */
   def readCsv(rel: String, schema: StructType): DataFrame =
     spark.read.schema(schema).option("header", "true").csv(s"$baseDir/$rel")
 
   /** S7: conditional scan with declared-empty fallback (`data_engineering.py:21-28`). */
   def readCsvOrEmpty(rel: String, schema: StructType): DataFrame =
-    if (exists(rel)) readCsv(rel, schema)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    if (exists(rel)) readCsv(rel, schema) else emptyFrame(schema)
 
-  /** S8: full-overwrite sorted single-file CSV with header
-    * (`raw_data.py:263`, `data_engineering.py:129-130`). One partition
-    * sorted in place matches the reference artifact shape — export path
-    * only, NOT the scale sink — and, unlike a global `orderBy`, submits no
-    * range-partitioning sample job.
-    *
-    * The upsert plans READ the same path they replace, and Spark refuses to
-    * overwrite a path it is reading from — so write to a sibling tmp dir
-    * and atomically swap.
+  private def emptyFrame(schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+
+  /** The day files of CSV history `rel`, by day, from ONE listing that
+    * also finishes any day swap a crash interrupted (see
+    * [[Store.recoverParks]]). Empty when the history does not exist yet.
+    * A visible file that is not a day file — a history in the earlier
+    * single-file layout — fails loudly.
     */
-  def writeCsv(df: DataFrame, rel: String, sortCol: String = "datetime"): Unit = {
+  private[graft] def csvDays(rel: String): Map[String, Store.DayFile] = {
+    val dir = new Path(s"$baseDir/$rel")
+    val names =
+      try dayFs.listStatus(dir).toSeq.map(_.getPath.getName)
+      catch { case _: java.io.FileNotFoundException => return Map.empty }
+    val live = names.filterNot(Store.hidden).map(n => Store.DayFile.parse(n).getOrElse(
+      throw new IllegalStateException(s"$rel holds $n, which is not a day file " +
+        "(part-<yyyy-MM-dd>-<id>.csv): a CSV history in another layout")))
+    val restored = Store.recoverParks(dayFs, dir, names, n => Store.DayFile.parse(n).map(_.day))
+    (live ++ restored.flatMap(Store.DayFile.parse)).map(f => f.day -> f).toMap
+  }
+
+  /** Scan only `files` of CSV history `rel`: one listing of the directory,
+    * narrowed by a file-name filter, so no per-file probe and no listing
+    * job however many days are asked for.
+    */
+  private[graft] def readCsvDays(rel: String, schema: StructType,
+                                 files: Iterable[Store.DayFile]): DataFrame =
+    if (files.isEmpty) emptyFrame(schema)
+    else spark.read.schema(schema).option("header", "true")
+      .option("pathGlobFilter", files.map(_.name).mkString("{", ",", "}"))
+      .csv(s"$baseDir/$rel")
+
+  /** S8: sorted, headered CSV day files (`raw_data.py:263`,
+    * `data_engineering.py:129-130`): the frame's rows land in one file per
+    * UTC day of `sortCol` (a timestamp), each sorted by it, and ONLY the
+    * days present in the frame are replaced — every other day file is
+    * never opened or moved. Each written day gets a fresh write id, the
+    * raw history's per-day watermark (see [[graft.jobs.FeatureEngineeringJob]]).
+    * Export path only, NOT the scale sink.
+    */
+  def writeCsv(df: DataFrame, rel: String, sortCol: String = "datetime"): Unit =
+    writeCsvDays(df, rel, sortCol, _ => Store.newWriteId())
+
+  /** [[writeCsv]] with the id of each written day chosen by `idOf`.
+    *
+    * One Spark job sorts the frame in one partition (unlike a global
+    * `orderBy`, no range-partitioning sample job) and formats each row
+    * with `to_csv`, the CSV writer's own generator, as is the header: a
+    * day file is the single-file writer's output restricted to its day.
+    * The calling process writes the files, through [[dayFs]]: a Spark
+    * `partitionBy` write creates a checksum file and a directory per day
+    * besides the file, and on a Hadoop local file system without native
+    * IO each of those forks a `chmod`, which spent seconds of a 90-day
+    * backfill. The plans writing here may READ the files they replace, so
+    * each day stages in a sibling tmp dir, then swaps in with the
+    * park-aside rename ([[Store.swapOver]]) under its new name. A crash
+    * between a day's two renames leaves that day parked, and the next
+    * [[csvDays]] listing restores it.
+    */
+  private[graft] def writeCsvDays(df: DataFrame, rel: String, sortCol: String,
+                                  idOf: String => String): Unit = {
     val target = new Path(s"$baseDir/$rel")
     // tmp is a SIBLING of the leaf (dot-prefix on the last path segment
     // only), so a nested rel like "a/b.csv" stays inside its parent dir
     // instead of creating a stray ".tmp_a/" tree.
     val tmp = new Path(target.getParent, s".tmp_${target.getName}")
-    df.repartition(1)
-      .sortWithinPartitions(col(sortCol))
-      .write.mode("overwrite").option("header", "true")
-      .csv(tmp.toString)
-    Store.swapInto(fs, tmp, target)
+    val current = csvDays(rel)
+    val lines = df.withColumn(Store.DayCol, Store.utcDay(col(sortCol)).cast("string"))
+      .repartition(1)
+      .sortWithinPartitions(col(Store.DayCol), col(sortCol))
+      .select(col(Store.DayCol), to_csv(struct(df.columns.map(c => col(s"`$c`")).toIndexedSeq: _*)))
+      .collect()
+    val header = Store.csvHeader(df.schema, spark.conf.get("spark.sql.session.timeZone"))
+    val days = lines.toSeq.groupBy(r => String.valueOf(r.getString(0))).toSeq.map { case (day, rows) =>
+      val file = Store.DayFile(day, idOf(day))
+      require(Store.DayFile.parse(file.name).contains(file),
+        s"writeCsv($rel): rows whose $sortCol has no day, or a bad id (${file.name})")
+      file -> rows.map(_.getString(1))
+    }
+    dayFs.delete(tmp, true)
+    dayFs.mkdirs(target)
+    dayFs.mkdirs(tmp)
+    days.foreach { case (file, rows) =>
+      val staged = new Path(tmp, file.name)
+      val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
+        dayFs.create(staged, false), java.nio.charset.StandardCharsets.UTF_8))
+      try {
+        out.write(header)
+        rows.foreach { r => out.write(r); out.write('\n') }
+      } finally out.close()
+      Store.swapOver(dayFs, staged, new Path(target, file.name),
+        current.get(file.day).map(f => new Path(target, f.name)))
+    }
+    dayFs.delete(tmp, true)
   }
+
+  /** Rename day file `from` of CSV history `rel` to `to`: one atomic
+    * rename, for a watermark that moves while the rows stay the same.
+    */
+  private[graft] def renameCsvDay(rel: String, from: Store.DayFile, to: Store.DayFile): Unit =
+    if (!dayFs.rename(new Path(s"$baseDir/$rel/${from.name}"), new Path(s"$baseDir/$rel/${to.name}")))
+      throw new IllegalStateException(s"rename of $rel/${from.name} to ${to.name} failed")
 
   /** Scale sink: Parquet partitioned by day. With dynamic partition
     * overwrite, writing a delta touches only the delta's partitions.
@@ -418,10 +517,7 @@ class Store(spark: SparkSession, baseDir: String) {
   /** Non-hidden data files of a table directory (what a Spark scan lists). */
   private def listDataFiles(dir: Path): Seq[String] =
     fs.listStatus(dir).toSeq
-      .filter(st => st.isFile && {
-        val n = st.getPath.getName
-        !n.startsWith(".") && !n.startsWith("_")
-      })
+      .filter(st => st.isFile && !Store.hidden(st.getPath.getName))
       .map(_.getPath.getName).sorted
 
   /** [[listDataFiles]] recursing through non-hidden subdirectories —
@@ -431,11 +527,10 @@ class Store(spark: SparkSession, baseDir: String) {
     * staging) are skipped at every level.
     */
   private def listDataFilesDeep(dir: Path): Seq[String] = {
-    def visible(n: String) = !n.startsWith(".") && !n.startsWith("_")
     def walk(d: Path, prefix: String): Seq[String] =
       fs.listStatus(d).toSeq.flatMap { st =>
         val n = st.getPath.getName
-        if (!visible(n)) Nil
+        if (Store.hidden(n)) Nil
         else if (st.isFile) Seq(prefix + n)
         else walk(st.getPath, s"$prefix$n/")
       }
@@ -1652,14 +1747,31 @@ class Store(spark: SparkSession, baseDir: String) {
   /** The file NAMES of manifest `epoch` — no existence resolution (the
     * streaming face diffs epochs by name; a vacuumed snapshot stays loud).
     */
-  private[graft] def versionFileNames(rel: String, epoch: Long): Seq[String] = {
-    val hp = LayoutManifest.snapshotPath(new Path(s"$baseDir/$rel"), epoch)
-    if (fs.exists(hp))
-      LayoutManifest.fromLines(LayoutManifest.readLines(fs, hp)).allFiles
-    else throw new IllegalStateException(
+  private[graft] def versionFileNames(rel: String, epoch: Long): Seq[String] =
+    snapshotAt(rel, new Path(s"$baseDir/$rel"), epoch).allFiles
+
+  /** Epoch `epoch`'s history snapshot, read once; missing, empty and
+    * non-manifest are all loud.
+    */
+  private def snapshotAt(rel: String, dir: Path, epoch: Long): LayoutManifest = {
+    val lines =
+      try LayoutManifest.readLines(fs, LayoutManifest.snapshotPath(dir, epoch))
+      catch { case _: java.io.FileNotFoundException => Nil }
+    if (!lines.exists(_.startsWith("zcols="))) notReadable(rel, epoch)
+    LayoutManifest.fromLines(lines)
+  }
+
+  private def notReadable(rel: String, epoch: Long): Nothing =
+    throw new IllegalStateException(
       s"epoch $epoch of $rel is not readable — vacuumed, never committed, or an " +
         s"unfinished claim (available: ${listVersions(rel).mkString(", ")})")
-  }
+
+  /** Snapshot `sm`'s commit wall-clock: its `committed_at` stamp, or the
+    * file mtime for a pre-stamp legacy snapshot.
+    */
+  private def commitStamp(dir: Path, epoch: Long, sm: LayoutManifest): Long =
+    sm.committedAt.getOrElse(
+      fs.getFileStatus(LayoutManifest.snapshotPath(dir, epoch)).getModificationTime)
 
   /** One readable epoch's metadata, for history listings. `committedAtMs`
     * is the commit wall-clock STAMPED INTO the snapshot at commit time
@@ -1683,11 +1795,9 @@ class Store(spark: SparkSession, baseDir: String) {
       // a vacuum racing this listing may drop a snapshot mid-iteration:
       // skip that row rather than list an unreadable epoch
       try {
-        val p = LayoutManifest.snapshotPath(dir, e)
-        val sm = LayoutManifest.fromLines(LayoutManifest.readLines(fs, p))
-        Some(VersionInfo(e,
-          sm.committedAt.getOrElse(fs.getFileStatus(p).getModificationTime),
-          sm.allFiles.size, e == current))
+        val sm = LayoutManifest.fromLines(
+          LayoutManifest.readLines(fs, LayoutManifest.snapshotPath(dir, e)))
+        Some(VersionInfo(e, commitStamp(dir, e, sm), sm.allFiles.size, e == current))
       } catch { case _: java.io.FileNotFoundException => None }
     }
   }
@@ -1927,17 +2037,8 @@ class Store(spark: SparkSession, baseDir: String) {
     val committed = current.map(_.epoch).getOrElse(-1L)
     // the committed epoch's snapshot is the manifest already read; an older
     // one is read once — missing, empty and non-manifest are all loud
-    val m = current.filter(_.epoch == epoch).getOrElse {
-      val lines =
-        if (epoch > committed) Nil
-        else try LayoutManifest.readLines(fs, LayoutManifest.snapshotPath(dir, epoch))
-        catch { case _: java.io.FileNotFoundException => Nil }
-      if (!lines.exists(_.startsWith("zcols=")))
-        throw new IllegalStateException(
-          s"epoch $epoch of $rel is not readable — vacuumed, never committed, or an " +
-            s"unfinished claim (available: ${listVersions(rel).mkString(", ")})")
-      LayoutManifest.fromLines(lines)
-    }
+    val m = current.filter(_.epoch == epoch).getOrElse(
+      if (epoch > committed) notReadable(rel, epoch) else snapshotAt(rel, dir, epoch))
     val live = listDataFilesDeep(dir).toSet
     val retired = listRetired(dir).keySet
     val paths = m.allFiles.map { n =>
@@ -2003,7 +2104,7 @@ class Store(spark: SparkSession, baseDir: String) {
           if (n == LayoutManifest.RetiredDirName)
             fs.listStatus(st.getPath).foreach(f =>
               if (f.isFile) out += (prefix + f.getPath.getName) -> f)
-          else if (!n.startsWith(".") && !n.startsWith("_"))
+          else if (!Store.hidden(n))
             walk(st.getPath, s"$prefix$n/")
         }
       }
@@ -2072,7 +2173,10 @@ class Store(spark: SparkSession, baseDir: String) {
       s"untilEpoch $until is beyond the current epoch $current of $rel")
     require(sinceEpoch >= -1 && sinceEpoch <= until,
       s"sinceEpoch must be in [-1, $until], got $sinceEpoch")
-    val untilRes = resolveAt(rel, dir, until, m)
+    // each snapshot the feed needs is read once (the committed one is `m`):
+    // its file names give the per-epoch deltas, its stamp the commit time
+    val untilM = m.filter(_.epoch == until).getOrElse(snapshotAt(rel, dir, until))
+    val untilRes = resolveAt(rel, dir, until, Some(untilM))
     // uniform output schema: the until epoch's own read schema (declared
     // when evolved, else the files' physical schema + partition columns)
     val outSchema = scan(rel, untilRes).schema
@@ -2080,8 +2184,9 @@ class Store(spark: SparkSession, baseDir: String) {
     require(missing.isEmpty,
       s"key column(s) not in $rel: ${missing.mkString(", ")} " +
         s"(schema: ${outSchema.fieldNames.mkString(", ")})")
-    val commitTs: Map[Long, Long] =
-      versionHistory(rel).map(v => v.epoch -> v.committedAtMs).toMap
+    val snaps = (math.max(sinceEpoch, 0L) until until).map(e => e -> snapshotAt(rel, dir, e))
+      .toMap + (until -> untilM)
+    val commitTs: Map[Long, Long] = snaps.map { case (e, sm) => e -> commitStamp(dir, e, sm) }
     def readNames(epoch: Long, names: Seq[String]): DataFrame =
       if (names.isEmpty)
         spark.createDataFrame(
@@ -2095,9 +2200,8 @@ class Store(spark: SparkSession, baseDir: String) {
         lit(new java.sql.Timestamp(commitTs.getOrElse(epoch, 0L))).as("_commit_ts"): _*)
     // per-epoch file deltas, resolved once (driver metadata only)
     val deltas = ((sinceEpoch + 1) to until).map { e =>
-      val prevNames =
-        if (e == 0L) Set.empty[String] else versionFileNames(rel, e - 1).toSet
-      val eNames = versionFileNames(rel, e)
+      val prevNames = if (e == 0L) Set.empty[String] else snaps(e - 1).allFiles.toSet
+      val eNames = snaps(e).allFiles
       (e, eNames.filterNot(prevNames), (prevNames -- eNames).toSeq.sorted)
     }
     // the pre/post pairing is only defined on unique keys — validate over
@@ -2718,9 +2822,71 @@ object Store {
     }
   }
 
+  /** The column a CSV history is split into day files by. */
+  private[io] val DayCol = "graft_day"
+
+  /** The UTC calendar day of timestamp `ts`: whole days of the raw epoch
+    * instant (`cast(ts as long)` is timezone-independent), never
+    * `to_date`, whose result follows `spark.sql.session.timeZone`. This is
+    * the ONE day rule of every day-keyed layout — the CSV histories' day
+    * files and the streaming upsert's `dt=` partitions — because a
+    * session-zoned day would let a restart under a different TZ map
+    * a near-midnight key to a DIFFERENT day than it was stored under: a
+    * day-scoped merge would then never read the old day and leave a stale
+    * twin, invisible to any key check because the key itself never
+    * changed. A string `ts` is parsed as a timestamp first.
+    */
+  def utcDay(ts: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    date_add(to_date(lit("1970-01-01")),
+      floor(ts.cast("timestamp").cast("long").cast("double") / 86400d).cast("int"))
+
+  /** One day file of a CSV history, `part-<yyyy-MM-dd>-<id>.csv`. The
+    * fixed-width day leads the name, so name order is day order. `id`
+    * names the write that made the file: a raw day gets a fresh id per
+    * write, and an engineered day is named with the id of the raw file it
+    * was derived from — the explicit per-day watermark that
+    * [[graft.jobs.FeatureEngineeringJob]] reads its candidate days from.
+    * Being part of the name, it survives every copy (a `Versioning` pull
+    * drops hidden files, so a hidden marker would not).
+    */
+  final case class DayFile(day: String, id: String) {
+    def name: String = s"part-$day-$id.csv"
+  }
+
+  object DayFile {
+    private val Name = """part-(\d{4}-\d{2}-\d{2})-([0-9a-z]+)\.csv""".r
+    def parse(name: String): Option[DayFile] = name match {
+      case Name(day, id) => Some(DayFile(day, id))
+      case _ => None
+    }
+  }
+
+  /** The header line (with its line separator) the CSV writer puts atop
+    * each file of `schema`: written by the writer's generator, so it is
+    * quoted exactly as the writer quotes it.
+    */
+  private[io] def csvHeader(schema: StructType, timeZone: String): String = {
+    val w = new java.io.StringWriter()
+    val gen = new org.apache.spark.sql.catalyst.csv.UnivocityGenerator(schema, w,
+      new org.apache.spark.sql.catalyst.csv.CSVOptions(Map("header" -> "true"), true, timeZone))
+    gen.writeHeaders()
+    gen.flush()
+    w.toString
+  }
+
+  /** A fresh write id for a day file. */
+  private[io] def newWriteId(): String =
+    java.util.UUID.randomUUID().toString.replace("-", "").take(16)
+
+  /** Names Spark scans skip: dot- and underscore-prefixed. */
+  private[io] def hidden(name: String): Boolean = name.startsWith(".") || name.startsWith("_")
+
+  private def parkOf(p: Path): Path = new Path(p.getParent, s".old_${p.getName}")
+
   /** Park-aside/rename swap of a fully-written `tmp` directory into
-    * `target` — the shared durability discipline of [[Store.writeCsv]],
-    * the unmanaged [[Store.recluster]], and the streaming upsert sinks:
+    * `target` — the shared durability discipline of the unmanaged
+    * [[Store.recluster]] and the streaming upsert sinks ([[swapOver]], its
+    * second half, also swaps [[Store.writeCsv]]'s day files):
     * the old data is parked aside (never deleted first), so a failed swap
     * rolls back with the target intact, and nothing reads and overwrites
     * the same files in one plan. The park path is dot-prefixed, so Spark
@@ -2736,29 +2902,39 @@ object Store {
     * sinks) must call [[recoverSwap]] first, so a replay merges against
     * the real stored table instead of a phantom empty one and never
     * reaches this method's `fs.delete(old)` with the parked copy as the
-    * only surviving data. Full-overwrite callers (writeCsv) need no
-    * recovery: their tmp is a complete replacement by construction, so
-    * deleting a parked crash leftover is the intended outcome.
+    * only surviving data.
     */
   private[graft] def swapInto(fs: org.apache.hadoop.fs.FileSystem,
                               tmp: Path, target: Path): Unit = {
-    val old = new Path(target.getParent, s".old_${target.getName}")
-    fs.delete(old, true)
-    val targetExisted = fs.exists(target)
-    val hadTarget = targetExisted && fs.rename(target, old)
-    // If parking the old data FAILED but the target still exists, the next
-    // rename would succeed by moving tmp INSIDE the existing directory
-    // (Hadoop rename-into-existing-dir semantics) — readers would keep the
-    // stale rows and the fresh data would be buried where nobody looks.
-    // Fail loudly instead; nothing has been destroyed at this point.
-    if (targetExisted && !hadTarget && fs.exists(target))
+    fs.delete(parkOf(target), true)
+    swapOver(fs, tmp, target, Some(target).filter(fs.exists))
+  }
+
+  /** [[swapInto]]'s two renames, with the entry being replaced named by
+    * the caller: `replaced` (the current file or directory, if any) parks
+    * aside as `.old_<its name>`, `tmp` renames to `target` — which may
+    * carry a different name, as a CSV day file whose write id changed
+    * does — and the park is deleted. A crash between the renames leaves
+    * the old entry parked; [[recoverParks]] restores it when nothing live
+    * took its key, and deletes it when the swap completed.
+    */
+  private[graft] def swapOver(fs: org.apache.hadoop.fs.FileSystem, tmp: Path,
+                              target: Path, replaced: Option[Path]): Unit = {
+    val parked = replaced.filter(r => fs.rename(r, parkOf(r)))
+    // If parking the old data FAILED but it still exists, a rename onto
+    // the same name would succeed by moving tmp INSIDE the existing
+    // directory (Hadoop rename-into-existing-dir semantics) — readers
+    // would keep the stale rows and the fresh data would be buried where
+    // nobody looks. Fail loudly instead; nothing has been destroyed yet.
+    replaced.filter(r => parked.isEmpty && fs.exists(r)).foreach { r =>
       throw new IllegalStateException(
-        s"could not park $target aside as $old; aborting swap with data intact")
+        s"could not park $r aside as ${parkOf(r)}; aborting swap with data intact")
+    }
     if (!fs.rename(tmp, target)) {
-      if (hadTarget) fs.rename(old, target) // roll back
+      parked.foreach(r => fs.rename(parkOf(r), r)) // roll back
       throw new IllegalStateException(s"rename $tmp -> $target failed")
     }
-    fs.delete(old, true)
+    parked.foreach(r => fs.delete(parkOf(r), true))
   }
 
   /** Repair [[swapInto]]'s crash window before reading `target`: the
@@ -2774,7 +2950,7 @@ object Store {
     */
   private[graft] def recoverSwap(fs: org.apache.hadoop.fs.FileSystem,
                                  target: Path): Boolean = {
-    val old = new Path(target.getParent, s".old_${target.getName}")
+    val old = parkOf(target)
     if (fs.exists(old) && !fs.exists(target)) {
       if (!fs.rename(old, target))
         throw new IllegalStateException(
@@ -2787,22 +2963,56 @@ object Store {
     * table root: one listing of the root finds crash leftovers
     * (`.old_<part>` children), restores each whose partition directory is
     * missing, and disposes of stale parks whose swap DID complete. Called
-    * by the partition-scoped upsert sink before its pruned read — it
-    * repairs ALL days, not just the replaying batch's, because the
-    * interrupted batch may have touched days the replay does not.
+    * by the partition-scoped upsert before its pruned read — it repairs
+    * ALL days, not just the replaying batch's, because the interrupted
+    * batch may have touched days the replay does not.
     */
   private[graft] def recoverPartitionSwaps(fs: org.apache.hadoop.fs.FileSystem,
-                                           root: Path): Int = {
-    if (!fs.exists(root)) return 0
-    var restored = 0
-    fs.listStatus(root).foreach { st =>
-      val name = st.getPath.getName
-      if (name.startsWith(".old_")) {
-        val part = new Path(root, name.stripPrefix(".old_"))
-        if (recoverSwap(fs, part)) restored += 1
-        else fs.delete(st.getPath, true) // swap completed; park is stale
+                                           root: Path): Int =
+    if (!fs.exists(root)) 0
+    else recoverParks(fs, root, fs.listStatus(root).toSeq.map(_.getPath.getName), Some(_)).size
+
+  /** Finish the swaps a crash interrupted under `root`, from `names`, a
+    * listing the caller already made: each park (`.old_<name>`) whose key
+    * no live entry holds is renamed back — the crash hit between its
+    * swap's two renames, and the parked copy is the only one — and every
+    * other park is deleted, since its swap completed. `keyOf` says which
+    * entries stand for the same thing: a partition directory is its own
+    * key, a CSV day file is keyed by its day, whatever its write id.
+    * Returns the names restored.
+    */
+  private[graft] def recoverParks(fs: org.apache.hadoop.fs.FileSystem, root: Path,
+                                  names: Seq[String],
+                                  keyOf: String => Option[String]): Seq[String] = {
+    val held = scala.collection.mutable.Set(names.filterNot(hidden).flatMap(keyOf): _*)
+    names.filter(_.startsWith(".old_")).flatMap { park =>
+      val name = park.stripPrefix(".old_")
+      if (keyOf(name).forall(k => !held.add(k))) {
+        fs.delete(new Path(root, park), true)
+        None
+      } else {
+        if (!fs.rename(new Path(root, park), new Path(root, name)))
+          throw new IllegalStateException(
+            s"crash recovery: could not restore parked ${new Path(root, park)}")
+        Some(name)
       }
     }
-    restored
+  }
+}
+
+/** Hadoop's raw local file system, setting permissions with a system call.
+  * Without native IO, [[org.apache.hadoop.fs.RawLocalFileSystem]] forks a
+  * `chmod` process for every file and directory it creates — about 3 ms
+  * each, more than writing a CSV day file takes.
+  */
+private[io] final class NioPermissionFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def setPermission(p: Path, permission: org.apache.hadoop.fs.permission.FsPermission): Unit = {
+    import scala.jdk.CollectionConverters._
+    val bits = permission.toShort
+    // PosixFilePermission lists owner, group, others read/write/execute: bits 8 down to 0
+    val perms = java.nio.file.attribute.PosixFilePermission.values.toSeq.zipWithIndex
+      .collect { case (pp, i) if (bits & (1 << (8 - i))) != 0 => pp }
+    try java.nio.file.Files.setPosixFilePermissions(pathToFile(p).toPath, perms.toSet.asJava)
+    catch { case _: UnsupportedOperationException => super.setPermission(p, permission) }
   }
 }

@@ -60,12 +60,25 @@ object CollectJob {
       .localCheckpoint()
 
     qualityGate(merged)
+    upsert(spark, store, merged, runDate)
+  }
 
-    // D1 upsert-keep-newest into the historical store (raw_data.py:241-269)
-    val existing = store.readCsvOrEmpty(rawFile, Schemas.raw)
+  /** D1 upsert-keep-newest of `runDate`'s collected rows into the raw
+    * history (`raw_data.py:241-269`). The rows all fall on `runDate` in
+    * the session time zone, so only the day files of the UTC days that
+    * date spans are read, merged and replaced — one file under a UTC
+    * session; the rest of the history is never opened. Returns the whole
+    * post-upsert history.
+    */
+  def upsert(spark: SparkSession, store: Store, merged: DataFrame,
+             runDate: LocalDate): DataFrame = {
+    val zone = java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))
+    val days = Seq(runDate.atStartOfDay(zone), runDate.plusDays(1).atStartOfDay(zone).minusNanos(1))
+      .map(_.withZoneSameInstant(java.time.ZoneOffset.UTC).toLocalDate.toString).toSet
+    val stored = store.csvDays(rawFile)
+    val existing = store.readCsvDays(rawFile, Schemas.raw, days.flatMap(stored.get))
     val combined = Upsert.keepNewest(existing, merged, Seq("datetime"))
-    val ordered = combined.transform(Schemas.project(_, Schemas.raw))
-    store.writeCsv(ordered, rawFile)
+    store.writeCsv(combined.transform(Schemas.project(_, Schemas.raw)), rawFile)
     // re-read: the lazy plan above still references the pre-swap file
     store.readCsv(rawFile, Schemas.raw)
   }

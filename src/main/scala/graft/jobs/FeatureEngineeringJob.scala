@@ -13,12 +13,21 @@ import graft.pipeline.Schemas
   * DELTA only, the reference's semantics — SURVEY §7.5(4)) -> keep-first
   * dedup against previous output -> sorted write.
   *
-  * The whole run is O(delta), not O(history): only rows absent from the
-  * previous output are transformed, which is the reference's one real
-  * big-data optimization and the property that matters at 100 TB. The
-  * delta is materialized once with `localCheckpoint()`: the emptiness
-  * check, the scaler fit and the write all read it, and each would
-  * otherwise re-scan both CSV tables and re-run the anti-join.
+  * The whole run is O(delta), not O(history). Only rows absent from the
+  * previous output are transformed — the reference's one real big-data
+  * optimization — and the anti-join itself runs only over CANDIDATE DAYS:
+  * raw day files that have not been engineered yet. The watermark is
+  * explicit, in the file names: an engineered day file carries the write
+  * id of the raw day file it was derived from ([[graft.io.Store.DayFile]]),
+  * and a raw day file gets a new id whenever it is rewritten. A raw day
+  * whose engineered file carries its id has all its rows engineered
+  * already, so its rows cannot be in the delta, and the delta over the
+  * candidate days equals the reference's anti-join over the whole
+  * history. A steady-state run reads the run day's raw file and (if any)
+  * its engineered file, and replaces only the candidate days' engineered
+  * files. The delta is materialized once with `localCheckpoint()`: the
+  * emptiness check, the scaler fit and the write all read it, and each
+  * would otherwise re-read both CSV days and re-run the anti-join.
   */
 object FeatureEngineeringJob {
 
@@ -36,23 +45,32 @@ object FeatureEngineeringJob {
     Schemas.project(chained, Schemas.engineered)
   }
 
+  /** Engineer the candidate days; returns the whole engineered history. */
   def run(spark: SparkSession, store: Store): DataFrame = {
-    val raw = store.readCsvOrEmpty(CollectJob.rawFile, Schemas.raw)
-    val prev = store.readCsvOrEmpty(engineeredFile, Schemas.engineered)
+    val raw = store.csvDays(CollectJob.rawFile)
+    val eng = store.csvDays(engineeredFile)
+    val candidates = raw.values.filterNot(r => eng.get(r.day).exists(_.id == r.id))
+    if (candidates.nonEmpty) {
+      val ids = candidates.map(c => c.day -> c.id).toMap
+      val prevFiles = candidates.flatMap(c => eng.get(c.day))
+      val prev = store.readCsvDays(engineeredFile, Schemas.engineered, prevFiles)
 
-    // P7/J4: the incremental delta (data_engineering.py:107)
-    val delta = raw.join(prev.select("datetime"), Seq("datetime"), "left_anti")
-      .localCheckpoint()
+      // P7/J4: the incremental delta (data_engineering.py:107)
+      val delta = store.readCsvDays(CollectJob.rawFile, Schemas.raw, candidates)
+        .join(prev.select("datetime"), Seq("datetime"), "left_anti")
+        .localCheckpoint()
 
-    if (delta.isEmpty) return prev // P8 short-circuit (data_engineering.py:113-115)
-
-    val engineered = engineer(delta)
-
-    // J5+D2: previous rows win on key collision (data_engineering.py:123-127)
-    val finalDf = Upsert.keepFirst(prev, engineered, Seq("datetime"))
-      .transform(Schemas.project(_, Schemas.engineered))
-    store.writeCsv(finalDf, engineeredFile)
-    // re-read: the lazy plan above still references the pre-swap file
-    store.readCsv(engineeredFile, Schemas.engineered)
+      if (delta.isEmpty) // P8 short-circuit (data_engineering.py:113-115): the
+        // candidates' engineered rows stand as they are; only their watermark moves
+        prevFiles.foreach(p => store.renameCsvDay(engineeredFile, p, p.copy(id = ids(p.day))))
+      else {
+        // J5+D2: previous rows win on key collision (data_engineering.py:123-127)
+        val finalDf = Upsert.keepFirst(prev, engineer(delta), Seq("datetime"))
+          .transform(Schemas.project(_, Schemas.engineered))
+        store.writeCsvDays(finalDf, engineeredFile, "datetime", ids)
+      }
+    }
+    // re-read: the lazy plans above still reference the pre-swap files
+    store.readCsvOrEmpty(engineeredFile, Schemas.engineered)
   }
 }

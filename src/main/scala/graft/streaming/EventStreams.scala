@@ -423,10 +423,10 @@ object EventStreams {
     * rewritten, or moved (StreamingSpec pins byte-level file identity
     * across a batch), so per-batch cost is O(touched days), not O(table).
     *
-    * Correctness requires `dt` (the UTC day of `tsCol` — see [[dtOf]]) to
-    * be a FUNCTION of the merge key — i.e. `tsCol` must be one of `keys`
-    * (the reference's D1
-    * call site keys on the datetime itself, so this holds there). If a
+    * Correctness requires `dt` (the UTC day of `tsCol` — see
+    * [[graft.io.Store.utcDay]]) to be a FUNCTION of the merge key — i.e.
+    * `tsCol` must be one of `keys` (the reference's D1 call site keys on
+    * the datetime itself, so this holds there). If a
     * key could move between partitions, a partition-scoped merge would
     * leave its stale twin behind in a day the batch never read; the
     * require fails loudly instead.
@@ -446,25 +446,11 @@ object EventStreams {
     * operation). Semantics: the stored table after the call equals
     * [[graft.operators.Upsert.keepNewest]](stored, batch, keys) — proven
     * as a spec law — but only the batch's own `dt=` partitions are read
-    * (partition-pruned `isin` scan) and swapped (per-partition
-    * park-aside/rename, so a crash mid-swap never leaves partial data; a
-    * replay repairs any partially-applied batch because the merge is
-    * idempotent).
+    * (the `isin` on the partition column prunes which files are read) and
+    * swapped (per-partition park-aside/rename, so a crash mid-swap never
+    * leaves partial data; a replay repairs any partially-applied batch
+    * because the merge is idempotent).
     */
-  /** Partition-day assignment, pinned to the UTC calendar: whole days of
-    * the raw epoch instant (`cast(ts as long)` is timezone-independent),
-    * never `to_date`, whose result follows `spark.sql.session.timeZone`.
-    * A session-zoned dt would let a driver restart under a different TZ
-    * map a near-midnight key to a DIFFERENT day than it was stored under
-    * — the partition-scoped merge would then never read the old day and
-    * leave a stale twin, the exact hazard the keys-contains-tsCol require
-    * exists to prevent, invisible to that guard because the key itself
-    * never changed.
-    */
-  private def dtOf(ts: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    date_add(to_date(lit("1970-01-01")),
-      floor(ts.cast("long").cast("double") / 86400d).cast("int"))
-
   def upsertPartitions(batch: DataFrame, tableDir: String, keys: Seq[String],
                        tsCol: String): Unit = {
     require(keys.contains(tsCol),
@@ -481,7 +467,7 @@ object EventStreams {
     graft.io.Store.recoverPartitionSwaps(fs, target)
     // the touched-partition list is bounded by the batch's DISTINCT DAYS —
     // a handful of rows on the driver, never the batch itself
-    val days = batch.select(dtOf(col(tsCol)).as("dt")).distinct()
+    val days = batch.select(graft.io.Store.utcDay(col(tsCol)).as("dt")).distinct()
       .collect().map(_.getDate(0))
     if (days.isEmpty) return
     require(!days.contains(null),
@@ -496,19 +482,20 @@ object EventStreams {
     }
     val existing =
       if (hasData)
-        // dt is a partition column, so the isin prunes at FILE LISTING
-        // time: only the touched days' directories are ever enumerated
+        // dt is a partition column, so the isin prunes which FILES are
+        // read; Spark's file index still lists every dt= directory when
+        // this frame is built
         spark.read.parquet(tableDir)
           .where(col("dt").isin(days.toIndexedSeq: _*)).drop("dt")
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
     val merged = graft.operators.Upsert.keepNewest(existing, batch, keys)
-      .withColumn("dt", dtOf(col(tsCol)))
+      .withColumn("dt", graft.io.Store.utcDay(col(tsCol)))
     val tmp = new org.apache.hadoop.fs.Path(target.getParent, s".tmp_${target.getName}")
     fs.delete(tmp, true)
     // full merged write lands in tmp first (stored files still intact and
     // readable by the merge plan during this job), then each touched day
-    // swaps independently — untouched days are never listed, read, or moved
+    // swaps independently — untouched days are never read or moved
     merged.write.mode("overwrite").partitionBy("dt").parquet(tmp.toString)
     fs.mkdirs(target)
     days.foreach { d =>

@@ -747,40 +747,28 @@ class TimeTravelSpec extends AnyFunSuite {
       "tbl", Seq("k", "v"), files = 2)                               // epoch 0
     store.deleteWhere("tbl", col("k") < 10)                          // epoch 1
     // the same table through a file system that records every listing
-    spark.sparkContext.hadoopConfiguration.set(
-      "fs.countfs.impl", classOf[ListingCountingFs].getName)
+    ListingCountingFs.register(spark)
     val counted = new Store(spark, s"countfs://$base")
     val dir = s"$base/tbl"
     val history = s"$dir/${LayoutManifest.HistoryDirName}"
     def listings(body: => Unit): Map[String, Int] = {
-      ListingCountingFs.listed.clear()
+      ListingCountingFs.clear()
       body
       ListingCountingFs.listed.toArray.toSeq.map(_.toString)
         .groupBy(identity).map { case (p, ps) => p -> ps.size }
     }
+    def snapshotsOpened(): Map[String, Int] =
+      ListingCountingFs.opened.toArray.toSeq.map(_.toString)
+        .filter(_.startsWith(s"$history/v")).groupBy(identity).map { case (p, ps) => p -> ps.size }
     // one recovery lists the journal markers and one manifest read lists
     // the snapshots; one resolution walks the root for live and retired files
     val snap = listings(counted.readSnapshot("tbl"))
     assert(snap.getOrElse(history, 0) == 2 && snap.getOrElse(dir, 0) == 2, snap)
-    // the feed adds versionHistory's three history listings (for the commit
-    // stamps: two manifest reads and the version listing), nothing per epoch
+    assert(snapshotsOpened() == Map(s"$history/v1" -> 1), snapshotsOpened())
+    // the feed lists no more than the snapshot read: the commit stamps come
+    // from the snapshots its delta loop reads, and it reads each one once
     val feed = listings(counted.changeFeed("tbl", Seq("k"), sinceEpoch = -1))
-    assert(feed.getOrElse(history, 0) == 5 && feed.getOrElse(dir, 0) == 2, feed)
+    assert(feed.getOrElse(history, 0) == 2 && feed.getOrElse(dir, 0) == 2, feed)
+    assert(snapshotsOpened() == Map(s"$history/v0" -> 1, s"$history/v1" -> 1), snapshotsOpened())
   }
-}
-
-/** The local file system under its own `countfs` scheme, recording the
-  * path of every `listStatus` — a statement's metadata-call budget.
-  */
-class ListingCountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
-  override def getScheme: String = "countfs"
-  override def getUri: java.net.URI = java.net.URI.create("countfs:///")
-  override def listStatus(f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
-    ListingCountingFs.listed.add(f.toUri.getPath)
-    super.listStatus(f)
-  }
-}
-
-object ListingCountingFs {
-  val listed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }

@@ -198,6 +198,41 @@ class VersioningSpec extends AnyFunSuite {
     assert(v.status(FeatureEngineeringJob.engineeredFile) == Versioning.UpToDate)
   }
 
+  test("runChain over day files: each daily push copies one day blob and the manifest") {
+    val ws = tmp("vws"); val rawRemote = tmp("vraw"); val engRemote = tmp("veng")
+    def objects(remote: String): Set[java.nio.file.Path] = {
+      val root = Paths.get(remote, "md5")
+      if (!Files.exists(root)) Set.empty
+      else {
+        val s = Files.walk(root)
+        try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path]).filter(Files.isRegularFile(_)).toSet
+        finally s.close()
+      }
+    }
+    var seen = Map(rawRemote -> Set.empty[java.nio.file.Path], engRemote -> Set.empty[java.nio.file.Path])
+    for (i <- 0 until 3) {
+      val d = runDate.plusDays(i.toLong)
+      val steps = VersionedPipeline.runChain(spark, new FixtureApiClient(Payloads.all(d)), d,
+        ws, rawRemote, engRemote)
+      assert(steps.forall(_.ok), steps.mkString("; "))
+      for ((remote, rel) <- Seq(rawRemote -> CollectJob.rawFile,
+                                engRemote -> FeatureEngineeringJob.engineeredFile)) {
+        val added = objects(remote) -- seen(remote)
+        val (manifests, blobs) = added.partition(_.getFileName.toString.endsWith(".dir"))
+        // the one new blob is the run day's file, byte for byte
+        val dayFile = {
+          val s = Files.list(Paths.get(ws, rel))
+          try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+            .filter(_.getFileName.toString.startsWith(s"part-$d-")) finally s.close()
+        }
+        assert(manifests.size == 1 && blobs.size == 1 && dayFile.size == 1, s"$rel day $i: $added")
+        assert(java.util.Arrays.equals(Files.readAllBytes(blobs.head), Files.readAllBytes(dayFile.head)),
+          s"$rel day $i pushed more than its own day")
+        seen += remote -> objects(remote)
+      }
+    }
+  }
+
   test("collectWorkflow pull restores prior history so day-2 upsert sees day-1 rows") {
     val rawRemote = tmp("vraw"); val engRemote = tmp("veng")
     val d2 = runDate.plusDays(1)

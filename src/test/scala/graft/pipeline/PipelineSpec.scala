@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.io.Store
+import graft.io.{ListingCountingFs, Store}
 import graft.jobs.{CollectJob, FeatureEngineeringJob}
 import graft.sources.FixtureApiClient
 
@@ -228,6 +228,40 @@ class PipelineSpec extends AnyFunSuite {
     }
     val out = FeatureEngineeringJob.run(spark, store)
     assert(out.isEmpty) // no raw data -> empty engineered frame, no crash
+  }
+
+  test("one EP1+EP2 op lists and reads the same at 3 and at 30 days of history") {
+    // the op touches the run day's files only: its listings and bytes read
+    // do not grow with the history (a whole-history rewrite reads ~10x
+    // more at 30 days than at 3)
+    ListingCountingFs.register(spark)
+    def op(historyDays: Int): (Map[String, Int], Long, Long) = {
+      val base = Files.createTempDirectory("graft_budget").toString
+      val store = new Store(spark, s"countfs://$base")
+      val days = (1 to historyDays).map(i => runDate.minusDays(i.toLong))
+      store.writeCsv(RawDays.rows(spark, days), CollectJob.rawFile)
+      FeatureEngineeringJob.run(spark, store)
+      ListingCountingFs.clear()
+      val read0 = ListingCountingFs.bytesRead
+      collect(store)
+      FeatureEngineeringJob.run(spark, store)
+      val read = ListingCountingFs.bytesRead - read0
+      // listings by directory, relative to the store (tmp dir names vary)
+      val listed = ListingCountingFs.listed.toArray.toSeq.map(_.toString.stripPrefix(base))
+        .map(_.replaceAll("[0-9a-f]{8,}", "X").replaceAll("[0-9]+", "N"))
+        .groupBy(identity).map { case (p, ps) => p -> ps.size }
+      val dayFile = Seq(CollectJob.rawFile, FeatureEngineeringJob.engineeredFile).map { rel =>
+        val s = Files.list(java.nio.file.Paths.get(base, rel))
+        try s.toArray.toSeq.map(p => Files.size(p.asInstanceOf[java.nio.file.Path])).max finally s.close()
+      }.max
+      (listed, read, dayFile)
+    }
+    val (listed3, read3, file3) = op(3)
+    val (listed30, read30, file30) = op(30)
+    assert(listed3.values.sum == listed30.values.sum,
+      s"listings at 3 days: $listed3; at 30 days: $listed30")
+    assert(math.abs(read30 - read3) <= math.max(file3, file30),
+      s"bytes read at 3 days: $read3; at 30 days: $read30")
   }
 
   test("EP2 no-op when no new rows (P8 short-circuit)") {
