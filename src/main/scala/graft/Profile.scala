@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
@@ -11,8 +12,12 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: `Profile <sfDir> <queryName> [queryName ...]` — runs each query
   * once unmeasured (JIT/codegen warm), then once measured, and prints one
-  * line per query: wall, #jobs, summed job span, inter-job idle, and the
-  * executor CPU total (listener-fed, bus drained).
+  * line per query: wall, #jobs, summed job span, inter-job idle, the
+  * executor CPU total (listener-fed, bus drained), and the classes Spark
+  * compiled during the measured run. The warm run filled Spark's codegen
+  * cache, so a nonzero `compiles` means the query's plans vary from run to
+  * run (a literal written into generated code) or need more classes than
+  * the cache holds (`spark.sql.codegen.cache.maxEntries`, 100 by default).
   */
 object Profile {
   def main(args: Array[String]): Unit = {
@@ -72,9 +77,11 @@ object Profile {
       run(name); clear() // warm
       org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
       jobs.clear(); jobDescs.clear(); cpu.set(0); stages.clear()
+      val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.currentTimeMillis()
       run(name)
       val t1 = System.currentTimeMillis()
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
       org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
       clear()
       import scala.jdk.CollectionConverters._
@@ -88,7 +95,7 @@ object Profile {
       val wall = t1 - t0
       println(f"$name%-28s wall=${wall / 1000.0}%6.2fs jobs=${spans.size}%3d " +
         f"job_span=${covered / 1000.0}%6.2fs driver_gap=${(wall - covered) / 1000.0}%6.2fs " +
-        f"cpu=${cpu.get / 1e9}%6.2fs")
+        f"cpu=${cpu.get / 1e9}%6.2fs compiles=$compiles%4d")
       // per-job timeline: start offset into the measured window, duration,
       // driver gap SINCE THE PREVIOUS JOB'S END, and the job's call site /
       // description — the view that attributes the inter-job idle to a

@@ -2965,12 +2965,17 @@ object Store {
     * missing, and disposes of stale parks whose swap DID complete. Called
     * by the partition-scoped upsert before its pruned read — it repairs
     * ALL days, not just the replaying batch's, because the interrupted
-    * batch may have touched days the replay does not.
+    * batch may have touched days the replay does not. Returns the names of
+    * the root's visible entries after the repair (empty when the root does
+    * not exist), so the caller needs no second listing.
     */
   private[graft] def recoverPartitionSwaps(fs: org.apache.hadoop.fs.FileSystem,
-                                           root: Path): Int =
-    if (!fs.exists(root)) 0
-    else recoverParks(fs, root, fs.listStatus(root).toSeq.map(_.getPath.getName), Some(_)).size
+                                           root: Path): Seq[String] =
+    if (!fs.exists(root)) Nil
+    else {
+      val names = fs.listStatus(root).toSeq.map(_.getPath.getName)
+      names.filterNot(hidden) ++ recoverParks(fs, root, names, Some(_))
+    }
 
   /** Finish the swaps a crash interrupted under `root`, from `names`, a
     * listing the caller already made: each park (`.old_<name>`) whose key

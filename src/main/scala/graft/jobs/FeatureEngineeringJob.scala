@@ -27,7 +27,11 @@ import graft.pipeline.Schemas
   * its engineered file, and replaces only the candidate days' engineered
   * files. The delta is materialized once with `localCheckpoint()`: the
   * emptiness check, the scaler fit and the write all read it, and each
-  * would otherwise re-read both CSV days and re-run the anti-join.
+  * would otherwise re-read both CSV days and re-run the anti-join. When no
+  * candidate day has an engineered file yet (the daily case), the delta
+  * cannot be empty and has nothing to keep-first against, so that run
+  * checks neither: it submits no emptiness job, and its plan has no
+  * keep-first window whose classes Spark would compile and cache.
   */
 object FeatureEngineeringJob {
 
@@ -60,14 +64,19 @@ object FeatureEngineeringJob {
         .join(prev.select("datetime"), Seq("datetime"), "left_anti")
         .localCheckpoint()
 
-      if (delta.isEmpty) // P8 short-circuit (data_engineering.py:113-115): the
+      if (prevFiles.isEmpty)
+        // days never engineered (the daily case): the delta is all their
+        // rows, not empty as a day file holds at least one, and the
+        // keep-first has no previous row to keep (the raw history is
+        // unique on `datetime`)
+        store.writeCsvDays(engineer(delta), engineeredFile, "datetime", ids)
+      else if (delta.isEmpty) // P8 short-circuit (data_engineering.py:113-115): the
         // candidates' engineered rows stand as they are; only their watermark moves
         prevFiles.foreach(p => store.renameCsvDay(engineeredFile, p, p.copy(id = ids(p.day))))
       else {
         // J5+D2: previous rows win on key collision (data_engineering.py:123-127)
-        val finalDf = Upsert.keepFirst(prev, engineer(delta), Seq("datetime"))
-          .transform(Schemas.project(_, Schemas.engineered))
-        store.writeCsvDays(finalDf, engineeredFile, "datetime", ids)
+        store.writeCsvDays(Upsert.keepFirst(prev, engineer(delta), Seq("datetime")),
+          engineeredFile, "datetime", ids)
       }
     }
     // re-read: the lazy plans above still reference the pre-swap files

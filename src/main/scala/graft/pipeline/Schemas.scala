@@ -96,9 +96,10 @@ object Schemas {
       StructField("value_inc_vat", DoubleType, nullable = true)))), nullable = true)))
 
   /** Project a frame to exactly a schema's columns, in order (backtick-
-    * quoted: `%`/`£` names). ONE definition for the four call sites in
+    * quoted: `%`/`£` names). ONE definition for the call sites in
     * CollectJob/FeatureEngineeringJob — a projection tweak must not be
-    * applied to three of four copies.
+    * applied to some of the copies only. The keep-newest/keep-first
+    * upserts need none: their output has the columns of the stored side.
     */
   def project(df: org.apache.spark.sql.DataFrame,
               schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =

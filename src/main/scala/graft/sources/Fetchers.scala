@@ -2,7 +2,7 @@ package graft.sources
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.Schemas
@@ -17,6 +17,15 @@ import graft.pipeline.Schemas
   * Date parameters ("yesterday") are INJECTED (`runDate`), never wall-clock:
   * the reference recomputes now() in six places (`raw_data.py:16-17,83-84,
   * 203,250,275,309`), which makes runs irreproducible — SURVEY §7.5(7).
+  *
+  * The run date must not reach generated code as a constant. Spark
+  * compiles each whole-stage pipeline to a Java class and caches it by its
+  * source text, and a daily job that runs again tomorrow should hit that
+  * cache. A filter `to_date(ts) = DATE'…'` is rewritten by the optimizer
+  * into a range over `ts` whose bounds are `long` literals written into
+  * the source, so each day would compile its own classes. [[onDay]]
+  * compares strings instead: a string literal is passed to the class as a
+  * reference object, and the source is the same on every day.
   */
 object Fetchers {
 
@@ -26,16 +35,22 @@ object Fetchers {
   val generationMixUrl = "https://api.carbonintensity.org.uk/generation"
   val octopusProductsUrl = "https://api.octopus.energy/v1/products/"
 
-  private def payloadDF(spark: SparkSession, json: String): DataFrame = {
+  private def payloadDF(spark: SparkSession, json: String*): DataFrame = {
     import spark.implicits._
-    Seq(json).toDF("j")
+    json.toDF("j")
   }
+
+  /** `ts` falls on `day` in the session time zone (pandas `.dt.date ==`),
+    * with the day as a string literal so it stays out of generated code.
+    */
+  def onDay(ts: Column, day: LocalDate): Column =
+    date_format(ts, "yyyy-MM-dd") === lit(day.toString)
 
   /** pandas `to_datetime(errors="coerce")` parity: null on unparseable input,
     * accepting the formats the five APIs actually emit — ISO seconds, and
     * the carbon API's minute-precision `2018-01-20T12:00Z`.
     */
-  private def coerceTs(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  private def coerceTs(c: Column): Column =
     coalesce(
       try_to_timestamp(c),
       try_to_timestamp(c, lit("yyyy-MM-dd'T'HH:mmX")),
@@ -86,7 +101,9 @@ object Fetchers {
   /** S3 carbon intensity (`raw_data.py:81-134`): two date URLs with per-URL
     * failure tolerance, null-safe struct flattening, coerce-to-null
     * timestamp parse, filter to `runDate`. Returns the declared empty frame
-    * when both URLs fail (`raw_data.py:102-111`).
+    * when both URLs fail (`raw_data.py:102-111`). The fetched payloads are
+    * the rows of ONE frame, parsed by one plan: a union of one plan per
+    * payload would compile each branch as its own class.
     */
   def fetchCarbonIntensity(spark: SparkSession, client: ApiClient,
                            runDate: LocalDate): DataFrame = {
@@ -99,35 +116,35 @@ object Fetchers {
     if (payloads.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType(Schemas.raw.filter(f => outCols.contains(f.name))))
-    val frames = payloads.map { p =>
-      payloadDF(spark, p)
-        .select(explode(from_json(col("j"), Schemas.carbonIntensity).getField("data")).as("r"))
-        .where(col("r.from").isNotNull && col("r.from") =!= "") // raw_data.py:116-117
-        .select(
-          coerceTs(col("r.from")).as("datetime"), // unparseable -> null (coerce)
-          col("r.intensity.actual").as("carbon_intensity_actual"),
-          col("r.intensity.forecast").as("carbon_intensity_forecast"),
-          col("r.intensity.index").as("carbon_index"))
-    }
-    frames.reduce(_ unionByName _)
-      .where(to_date(col("datetime")) === lit(runDate.toString).cast("date")) // raw_data.py:132
+    payloadDF(spark, payloads: _*)
+      .select(explode(from_json(col("j"), Schemas.carbonIntensity).getField("data")).as("r"))
+      .where(col("r.from").isNotNull && col("r.from") =!= "") // raw_data.py:116-117
+      .select(
+        coerceTs(col("r.from")).as("datetime"), // unparseable -> null (coerce)
+        col("r.intensity.actual").as("carbon_intensity_actual"),
+        col("r.intensity.forecast").as("carbon_intensity_forecast"),
+        col("r.intensity.index").as("carbon_index"))
+      .where(onDay(col("datetime"), runDate)) // raw_data.py:132
   }
 
   /** S4 generation-mix snapshot (`raw_data.py:138-154`): list of
-    * {fuel, perc} -> one wide row via normalize + whitelist + pivot.
+    * {fuel, perc} -> one wide row via normalize + whitelist + pivot. The
+    * snapshot is one record, so the pivot is a projection of its array:
+    * each whitelisted fuel takes the `perc` of its first entry (null when
+    * absent), and a snapshot with no whitelisted fuel yields no row. Over
+    * the one-row payload the optimizer evaluates it while planning, so it
+    * costs no job and no shuffle.
     */
   def fetchGenerationMix(spark: SparkSession, client: ApiClient): DataFrame = {
     val whitelist = Seq("biomass", "imports", "gas", "nuclear", "solar", "wind")
-    val parsed = payloadDF(spark, client.get(generationMixUrl))
+    def fuel(m: Column): Column = lower(regexp_replace(m.getField("fuel"), " ", "_")) // raw_data.py:149
+    val mix = col("d.generationmix")
+    payloadDF(spark, client.get(generationMixUrl))
       .select(from_json(col("j"), Schemas.generationMix).getField("data").as("d"))
-      .select(coerceTs(col("d.from")).as("datetime"),
-        explode(col("d.generationmix")).as("m"))
-      .withColumn("fuel", lower(regexp_replace(col("m.fuel"), " ", "_"))) // raw_data.py:149
-      .where(col("fuel").isin(whitelist: _*)) // raw_data.py:151
-    val pivoted = parsed.groupBy("datetime")
-      .pivot("fuel", whitelist)
-      .agg(first(col("m.perc")))
-    whitelist.foldLeft(pivoted)((df, f) => df.withColumnRenamed(f, s"uk_gen_${f}_%"))
+      .where(exists(mix, m => fuel(m).isin(whitelist: _*))) // raw_data.py:151
+      .select(coerceTs(col("d.from")).as("datetime") +: whitelist.map(f =>
+        try_element_at(filter(mix, m => fuel(m) === f), lit(1)).getField("perc")
+          .as(s"uk_gen_${f}_%")): _*)
   }
 
   /** S5 Octopus Agile prices (`raw_data.py:158-206`): product-list filter
@@ -174,6 +191,6 @@ object Fetchers {
       .select(
         coerceTs(col("r.valid_from")).as("datetime"),
         (col("r.value_inc_vat") / 100).as("retail_price_£_per_kWh")) // raw_data.py:200
-      .where(to_date(col("datetime")) === lit(runDate.toString).cast("date")) // raw_data.py:203-204
+      .where(onDay(col("datetime"), runDate)) // raw_data.py:203-204
   }
 }

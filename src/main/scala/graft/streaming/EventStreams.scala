@@ -445,11 +445,12 @@ object EventStreams {
     * law StreamingSpec pins, and a batch backfill wants exactly this
     * operation). Semantics: the stored table after the call equals
     * [[graft.operators.Upsert.keepNewest]](stored, batch, keys) — proven
-    * as a spec law — but only the batch's own `dt=` partitions are read
-    * (the `isin` on the partition column prunes which files are read) and
-    * swapped (per-partition park-aside/rename, so a crash mid-swap never
-    * leaves partial data; a replay repairs any partially-applied batch
-    * because the merge is idempotent).
+    * as a spec law — but only the batch's own `dt=` partitions are listed,
+    * read and swapped (per-partition park-aside/rename, so a crash mid-swap
+    * never leaves partial data; a replay repairs any partially-applied
+    * batch because the merge is idempotent). Its metadata work does not
+    * grow with the number of stored days: one listing of the table root,
+    * then a read of the batch's day directories alone.
     */
   def upsertPartitions(batch: DataFrame, tableDir: String, keys: Seq[String],
                        tsCol: String): Unit = {
@@ -462,9 +463,9 @@ object EventStreams {
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // a crash between a day's two swap renames leaves that day parked and
     // its dt= directory missing — restore every such day FIRST (one root
-    // listing), or the replay's pruned read would see the day as empty and
-    // the re-swap's park cleanup would destroy the only surviving copy
-    graft.io.Store.recoverPartitionSwaps(fs, target)
+    // listing), or the replay's read would see the day as empty and the
+    // re-swap's park cleanup would destroy the only surviving copy
+    val live = graft.io.Store.recoverPartitionSwaps(fs, target).toSet
     // the touched-partition list is bounded by the batch's DISTINCT DAYS —
     // a handful of rows on the driver, never the batch itself
     val days = batch.select(graft.io.Store.utcDay(col(tsCol)).as("dt")).distinct()
@@ -472,21 +473,16 @@ object EventStreams {
     if (days.isEmpty) return
     require(!days.contains(null),
       s"upsertPartitions: null $tsCol cannot be partition-assigned — drop or key such rows upstream")
-    // mkdirs below runs before the first-ever swap, so a crash in that
-    // window leaves target existing but EMPTY — reading it would fail
-    // parquet schema inference on every replay. Any visible child means
-    // real data; none means treat as first write.
-    val hasData = fs.exists(target) && fs.listStatus(target).exists { st =>
-      val n = st.getPath.getName
-      !n.startsWith(".") && !n.startsWith("_")
-    }
+    // only the batch's days that are stored are read, each by its own path
+    // (`basePath` keeps `dt` a partition column), so Spark lists those
+    // directories and never the others. None stored — a first write, or
+    // the empty root a crash right after mkdirs below leaves — reads nothing.
+    val stored = days.map(d => s"dt=$d").filter(live)
     val existing =
-      if (hasData)
-        // dt is a partition column, so the isin prunes which FILES are
-        // read; Spark's file index still lists every dt= directory when
-        // this frame is built
-        spark.read.parquet(tableDir)
-          .where(col("dt").isin(days.toIndexedSeq: _*)).drop("dt")
+      if (stored.nonEmpty)
+        spark.read.option("basePath", tableDir)
+          .parquet(stored.map(n => new org.apache.hadoop.fs.Path(target, n).toString).toIndexedSeq: _*)
+          .drop("dt")
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
     val merged = graft.operators.Upsert.keepNewest(existing, batch, keys)

@@ -3,6 +3,7 @@ package graft.pipeline
 import java.nio.file.Files
 import java.time.LocalDate
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -262,6 +263,23 @@ class PipelineSpec extends AnyFunSuite {
       s"listings at 3 days: $listed3; at 30 days: $listed30")
     assert(math.abs(read30 - read3) <= math.max(file3, file30),
       s"bytes read at 3 days: $read3; at 30 days: $read30")
+  }
+
+  test("a warm daily op finds its generated classes in Spark's codegen cache") {
+    // the cache is JVM-wide (100 entries by default, keyed by class loader
+    // and source text), so after one op the next day's op should compile
+    // almost nothing: it recompiles when its plans inline the run date or
+    // need more classes than the cache holds
+    val store = freshStore()
+    def compiles(d: LocalDate): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      collect(store, d)
+      FeatureEngineeringJob.run(spark, store)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    compiles(runDate)
+    val warm = compiles(runDate.plusDays(1))
+    assert(warm <= 15, s"the next day's op compiled $warm classes")
   }
 
   test("EP2 no-op when no new rows (P8 short-circuit)") {

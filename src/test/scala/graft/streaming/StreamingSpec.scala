@@ -787,6 +787,28 @@ class StreamingSpec extends AnyFunSuite {
     assert(out == Map(ts("2024-01-01 10:00:00") -> "a1"))
   }
 
+  test("a partition-scoped upsert batch lists the same with 3 or 12 days stored") {
+    // only the batch's own days are listed and read: a read of the whole
+    // table would list every stored dt= directory
+    import spark.implicits._
+    graft.io.ListingCountingFs.register(spark)
+    def batchListings(storedDays: Int): Int = {
+      val table = s"countfs://${Files.createTempDirectory("graft_upsert_listing")}/table"
+      val history = (1 to storedDays).map(d => (ts(f"2024-01-$d%02d 10:00:00"), s"a$d"))
+      EventStreams.upsertPartitions(history.toDF("ts", "v"), table, keys = Seq("ts"), tsCol = "ts")
+      graft.io.ListingCountingFs.clear()
+      EventStreams.upsertPartitions(Seq((ts("2024-01-02 10:00:00"), "b2")).toDF("ts", "v"),
+        table, keys = Seq("ts"), tsCol = "ts")
+      val listed = graft.io.ListingCountingFs.listed.size
+      val out = spark.read.parquet(table).drop("dt").collect()
+        .map(r => r.getTimestamp(0) -> r.getString(1)).toMap
+      assert(out == history.toMap + (ts("2024-01-02 10:00:00") -> "b2"))
+      listed
+    }
+    val (at3, at12) = (batchListings(3), batchListings(12))
+    assert(at3 == at12, s"listings per batch: $at3 with 3 days stored, $at12 with 12")
+  }
+
   test("partition-day assignment is pinned to the UTC calendar, not the session timezone") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_upsert_tz").toString
