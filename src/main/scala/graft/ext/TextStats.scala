@@ -179,14 +179,6 @@ object TextStats {
       "|\\([0-9]{2,4}\\)[- ]?[0-9]{3,4}[- ]?[0-9]{3,4}" +
       "|[0-9]{2,4}-[0-9]{3,4}-[0-9]{3,4}"
 
-  /** Text cleaning / redaction for a training corpus: URLs, emails, and
-    * phone numbers replaced with typed placeholders (URLs first — they can
-    * embed `@` and digits; emails before phones so digit-bearing local
-    * parts are already gone), whitespace runs collapsed, edges trimmed;
-    * per-doc redaction counts (over the ORIGINAL text) ride along for
-    * filtering/auditing. Pure codegen'd column expressions — shuffle-free,
-    * linear, no driver state.
-    */
   /** IPv4 dotted quads, octets 0-255, word-bounded on both sides so
     * version-like "1.2.3.4.5" runs and digit substrings of longer tokens
     * never redact. `\b` and bounded alternations only — no lookaround, so
@@ -196,19 +188,53 @@ object TextStats {
     "\\b(?:(?:25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])\\.){3}" +
       "(?:25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])\\b"
 
+  /** Text cleaning / redaction for a training corpus: URLs, emails, phone
+    * numbers and IPv4 addresses replaced with typed placeholders (URLs
+    * first — they can embed `@` and digits; emails before phones so
+    * digit-bearing local parts are already gone), whitespace runs
+    * collapsed, edges trimmed; per-doc redaction counts (over the ORIGINAL
+    * text) ride along for filtering/auditing. Pure codegen'd column
+    * expressions — shuffle-free, linear, no driver state.
+    *
+    * Every match of a pattern contains a literal: `://` for [[urlPattern]],
+    * `@` for [[emailPattern]], an ASCII digit for [[phonePattern]] and
+    * [[ipPattern]]. Each replacement and each count runs only when the
+    * ORIGINAL text contains its literal; otherwise the text passes through
+    * and the count is 0, so a doc with no URL, email or digit pays two
+    * substring checks and one digit scan instead of eight pattern scans.
+    * Testing the original text is sound because no earlier placeholder
+    * (`<URL>`, `<EMAIL>`, `<PHONE>`) adds an `@` or a digit. The guards
+    * are `when(!has, ...)`: a null text makes the guard null and takes the
+    * unguarded branch, so null gives exactly the unguarded values. Each guard is computed once
+    * as a hidden column, and each replacement is its own projection — it
+    * reads the previous text twice (guarded and passed through), which
+    * keeps the optimizer from inlining the chain into one expression that
+    * doubles at every step.
+    */
   def withCleaned(df: DataFrame, text: String = "text"): DataFrame = {
-    val redacted = regexp_replace(regexp_replace(regexp_replace(
-      regexp_replace(col(text), urlPattern, "<URL>"), emailPattern, "<EMAIL>"),
-      phonePattern, "<PHONE>"), ipPattern, "<IP>")
-    df.withColumn("n_urls",
-        size(regexp_extract_all(col(text), lit(urlPattern), lit(0))).cast("long"))
-      .withColumn("n_emails",
-        size(regexp_extract_all(col(text), lit(emailPattern), lit(0))).cast("long"))
-      .withColumn("n_phones",
-        size(regexp_extract_all(col(text), lit(phonePattern), lit(0))).cast("long"))
-      .withColumn("n_ips",
-        size(regexp_extract_all(col(text), lit(ipPattern), lit(0))).cast("long"))
-      .withColumn("clean_text", trim(regexp_replace(redacted, "\\s+", " ")))
+    val t = col(text)
+    val passes = Seq(
+      ("n_urls", urlPattern, "<URL>", "__has_url"),
+      ("n_emails", emailPattern, "<EMAIL>", "__has_at"),
+      ("n_phones", phonePattern, "<PHONE>", "__has_digit"),
+      ("n_ips", ipPattern, "<IP>", "__has_digit"))
+    val guarded = df
+      .withColumn("__has_url", t.contains("://"))
+      .withColumn("__has_at", t.contains("@"))
+      .withColumn("__has_digit", t.rlike("[0-9]"))
+    val counted = passes.foldLeft(guarded) { case (d, (n, pattern, _, has)) =>
+      d.withColumn(n, when(!col(has), lit(0L))
+        .otherwise(size(regexp_extract_all(t, lit(pattern), lit(0))).cast("long")))
+    }
+    val redacted = passes.foldLeft(counted.withColumn("__redacted", t)) {
+      case (d, (_, pattern, tag, has)) =>
+        val prev = col("__redacted")
+        d.withColumn("__redacted",
+          when(!col(has), prev).otherwise(regexp_replace(prev, pattern, tag)))
+    }
+    redacted
+      .withColumn("clean_text", trim(regexp_replace(col("__redacted"), "\\s+", " ")))
+      .drop("__has_url", "__has_at", "__has_digit", "__redacted")
   }
 
   /** Top-k characteristic terms per document by TF-IDF

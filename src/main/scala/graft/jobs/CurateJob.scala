@@ -61,12 +61,20 @@ case class CurateParams(
   * stages see only survivors; the corpus sides contribute one row per doc
   * to every join ([[Dedup.ngramJaccardPairsBetween]] explodes only the
   * bounded batch); the budget totals are a broadcast; packing is
-  * `nBuckets` parallel windows. The corpus is deliberately NOT
-  * checkpointed — its two consumers (train/eval) re-run only a map-side
-  * regex scan each, cheaper at 100 TB than materializing the cleaned
-  * corpus. The bounded batch IS lazily checkpointed at each stage
-  * boundary (rep, qual, exactKept, batchKept, cleanKept, plus the two
-  * pair-decision frames): eight decision branches re-read those frames,
+  * `nBuckets` parallel windows. The corpus is cleaned ONCE per call and
+  * materialized with an eager `localCheckpoint` of its narrow projection
+  * (doc_id, clean_text, n_clean_chars, split). Three reads share it: the
+  * exact tier's content-hash groupBy and the near tier's pairs over the
+  * train split, and the decontamination pairs over the eval split.
+  * Without it each read re-ran the redaction chain over the whole corpus
+  * and compiled its own generated class for that chain, on the driver and
+  * in a task, on every call. The cost is one narrow copy of the corpus text
+  * in the block manager for the life of the call's frames. Measured
+  * together with the regex prefilter in [[TextStats.withCleaned]] on the
+  * `curate_batches` benchmark (4-core host, 10 alternating pairs):
+  * executor CPU per op 3.42 -> 2.18 s. The bounded batch IS lazily
+  * checkpointed at each stage boundary (rep, qual, exactKept, batchKept,
+  * cleanKept, plus the two pair-decision frames): eight decision branches re-read those frames,
   * and without the cuts each branch replays the regex/hash chain from
   * the last checkpoint — measured ~25% of x27's runtime at sf0.1.
   */
@@ -115,29 +123,17 @@ object CurateJob {
           transform(sort_array(collect_list(struct(col("__pu"), col("doc_id")))),
             x => x.getField("doc_id").cast("string")), ",").as("doc_ids"))
 
-  /** Decisions AND per-sequence manifests from ONE stage chain — the shape
-    * a production run wants (it always emits both artifacts). The manifest
-    * side aggregates the packed keep-frame directly instead of filtering
-    * `action = 'keep'` back out of the 9-branch decision union, so a
-    * manifests-only consumer (x36) never evaluates the drop branches at
-    * all, and a both-artifacts consumer shares every checkpointed stage.
-    */
-  def curateWithManifests(batch: DataFrame, corpus: DataFrame,
-                          p: CurateParams = CurateParams()): (DataFrame, DataFrame) = {
-    val (decisions, packed) = stages(batch, corpus, p)
-    (decisions, manifests(packed, p.packSalt))
-  }
-
   /** Manifests WITHOUT the decision frame — the trainer-facing fast path
-    * (x36). Values are identical to `curateWithManifests(...)._2` (pinned
-    * by CurateJobSpec's invariance law), but the chain runs with
+    * (x36). The manifest aggregates the packed keep-frame directly instead
+    * of filtering `action = 'keep'` back out of the 9-branch decision
+    * union, so the drop branches are never evaluated. Values are identical
+    * to [[manifests]] over the `keep` rows of [[curate]] (pinned by
+    * CurateJobSpec's invariance law), but the chain runs with
     * `needDrops = false`: the contamBest checkpoint exists solely so the
     * dropContam branch of the decision union can re-read that frame — on
     * the keep-only spine it has exactly ONE downstream consumer, so
     * skipping it folds the decontamination join into cleanKept's own
-    * materialization instead of a separate blocking round. A caller that
-    * will evaluate BOTH artifacts must use `curateWithManifests`, where
-    * the checkpoint pays for itself.
+    * materialization instead of a separate blocking round.
     */
   def manifestsOnly(batch: DataFrame, corpus: DataFrame,
                     p: CurateParams = CurateParams()): DataFrame =
@@ -152,8 +148,7 @@ object CurateJob {
     * qual and dedup frames are re-read by keep-spine stages regardless,
     * see their site comments) — the returned decision frame is still
     * correct, but evaluating it would recompute the decontamination join
-    * once for the dropContam branch; keep the default when both artifacts
-    * will be evaluated.
+    * once for the dropContam branch; [[curate]] keeps the default.
     */
   private def stages(batch: DataFrame, corpus: DataFrame,
                      p: CurateParams,
@@ -167,19 +162,27 @@ object CurateJob {
     // NULL <= x are both false) — without an explicit branch such a doc
     // would fall out of EVERY stage and the one-decision-row-per-doc
     // contract would silently break. It gets its own first-drop reason.
-    // spread (stats-gated repartition) BEFORE the clean chain: a
-    // small-file input arrives as one row group = one partition, and
-    // because every checkpointed stage frame inherits its plan's
-    // partitioning, that single partition would serialize the regex
-    // clean/quality chain — the chain's heaviest per-row work — across the
-    // whole pipeline. At 100 TB the scan has thousands of splits and the
-    // gate skips the shuffle entirely; at fixture scale it trades one tiny
-    // raw-text shuffle for 32-way execution of everything downstream.
+    // The batch is cleaned where it stands: it is bounded, and the rep
+    // checkpoint below materializes its clean chain once.
     val bAll = withCleanCols(batch)
     val dropInvalid = bAll.where(col("text").isNull)
     val b = bAll.where(col("text").isNotNull)
-    val c = withCleanCols(corpus)
-    val cSplit = Sampling.withSplit(c, "doc_id", p.trainFrac, p.valFrac, p.splitSalt)
+    // The corpus is cleaned once, for its three reads (exact tier + train
+    // pairs, eval pairs), and materialized eagerly as a narrow projection.
+    // Spread (stats-gated hash repartition on doc_id) BEFORE the clean: a
+    // small-file corpus arrives as one split, and the checkpoint keeps its
+    // plan's partitioning, so without it the clean and every pair join's
+    // corpus side would run in one task. The pair joins' own spread still
+    // re-shuffles what it reads of the checkpoint (the checkpoint keeps the
+    // plan's size estimate), an exchange of the narrow projection only.
+    // At 100 TB the scan has thousands of splits and neither gate adds a
+    // shuffle.
+    val cSplit = Sampling.withSplit(
+      TextStats.withCleaned(Dedup.spread(corpus, col("doc_id"))),
+      "doc_id", p.trainFrac, p.valFrac, p.splitSalt)
+      .select(col("doc_id"), col("clean_text"),
+        length(col("clean_text")).cast("long").as("n_clean_chars"), col("split"))
+      .localCheckpoint(true)
     val trainCorpus = cSplit.where(col("split") =!= "test")
     val evalDocs = cSplit.where(col("split") === "test")
 

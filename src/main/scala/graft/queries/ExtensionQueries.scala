@@ -1533,7 +1533,8 @@ object ExtensionQueries {
     // query never evaluates the drop branches at all — and (round 11) the
     // chain skips the three checkpoints that exist solely for those drop
     // branches, removing their blocking materialization rounds too.
-    // Values identical to curateWithManifests(...)._2 (CurateJobSpec law).
+    // Values identical to manifests over curate(...)'s keep rows
+    // (CurateJobSpec law).
     "x36_training_sequences" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       CurateJob.manifestsOnly(docs.where(col("doc_id") % 7 === 0),

@@ -1847,6 +1847,63 @@ class TextStatsSpec extends AnyFunSuite {
     assert(out(4L) == (("url <URL> hides its ip", 1L)))
   }
 
+  /** The redaction chain before the literal guards: every regex runs on
+    * every doc. The reference [[TextStats.withCleaned]] must equal.
+    */
+  private def unguardedCleaned(df: org.apache.spark.sql.DataFrame, text: String = "text") = {
+    import TextStats.{emailPattern, ipPattern, phonePattern, urlPattern}
+    val redacted = regexp_replace(regexp_replace(regexp_replace(
+      regexp_replace(col(text), urlPattern, "<URL>"), emailPattern, "<EMAIL>"),
+      phonePattern, "<PHONE>"), ipPattern, "<IP>")
+    df.withColumn("n_urls",
+        size(regexp_extract_all(col(text), lit(urlPattern), lit(0))).cast("long"))
+      .withColumn("n_emails",
+        size(regexp_extract_all(col(text), lit(emailPattern), lit(0))).cast("long"))
+      .withColumn("n_phones",
+        size(regexp_extract_all(col(text), lit(phonePattern), lit(0))).cast("long"))
+      .withColumn("n_ips",
+        size(regexp_extract_all(col(text), lit(ipPattern), lit(0))).cast("long"))
+      .withColumn("clean_text", trim(regexp_replace(redacted, "\\s+", " ")))
+  }
+
+  test("cleaning: the literal-guarded chain equals the unguarded one on every column") {
+    val adversarial = Seq(
+      null, "", "   ", " \t\n ",
+      "plain words only, no digits or at signs",
+      "a :// with no scheme and ftp://host/x and ://123",
+      "http://user@host.com/a?b=c@d.org only inside a url",
+      "https://example.com/2023-01-15/192.168.0.1/+44-20-7946 digits in a url",
+      "mail 2020-2021-2022@example.com and bob123@test.org has digits",
+      "call +44 20 7946 0958 or (020) 7946-0958 or 020-7123-4567",
+      "ip 192.168.0.1, 10.0.0.255, 999.1.2.3, 1.2.3.256, v1.2.3.4.5",
+      "years 2020 2021 and iso 2023-01-15 and 20240115",
+      "only zeros: 0.0.0.0 and 00-000-0000 and +0 00 000 0000",
+      "runs  of\t\twhitespace \n\n here   ",
+      "at@ but no domain, and @@ twice",
+      "\u00e9t\u00e9 \u0663\u0664 non-ascii digits \uff11\uff12")
+    val frags = Array("word", "the", "://", "http://a.b/c", "https://x.io/p?q=1", "@",
+      "bob@test.org", "a.b@c.de", "user@host", "7", "2024", "+44", "(020)", "7946-0958",
+      "020-7123-4567", "192.168.0.1", "1.2.3", "256.1.1.1", ".", "-", "(", ")", " ", "  ",
+      "\t", "\n", "\u00e9", "<URL>")
+    val rnd = new java.util.SplittableRandom(20261019L)
+    val random = Seq.fill(400)(
+      (0 until rnd.nextInt(12)).map(_ => frags(rnd.nextInt(frags.length)))
+        .mkString(if (rnd.nextBoolean()) " " else ""))
+    val df = (adversarial ++ random).zipWithIndex
+      .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    val guarded = TextStats.withCleaned(df)
+    val reference = unguardedCleaned(df)
+    assert(guarded.columns.toSeq == reference.columns.toSeq)
+    val g = guarded.collect().map(r => r.getLong(0) -> r.toSeq).toMap
+    val r = reference.collect().map(r => r.getLong(0) -> r.toSeq).toMap
+    assert(g.size == df.count())
+    val diff = r.keys.toSeq.sorted.filter(k => g(k) != r(k))
+    assert(diff.isEmpty, diff.take(5).map(k => s"\n  guarded ${g(k)}\n  reference ${r(k)}").mkString)
+    // the fixture exercises every pattern, so equality checked something
+    Seq("n_urls", "n_emails", "n_phones", "n_ips").foreach(c =>
+      assert(guarded.where(col(c) > 0).count() > 0, s"no text matched $c"))
+  }
+
   test("repetition: repeated phrases raise dup_fraction; distinct prose scores 0") {
     val df = Seq(
       (1L, "buy now " * 10 + "limited offer"),       // heavy phrase repeats

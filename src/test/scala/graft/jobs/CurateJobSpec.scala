@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.io.ListingCountingFs
 import graft.ext.Sampling
 
 /** End-to-end curation golden: a synthetic batch engineered to hit every
@@ -77,28 +78,41 @@ class CurateJobSpec extends AnyFunSuite {
     assert(out(1009L) == (("drop_batch_neardup", Some(1006L), true, true)))
   }
 
-  test("curateWithManifests: manifest rows == decision-frame keep rows re-aggregated") {
+  test("manifestsOnly: manifest rows == manifests over the decision frame's keep rows") {
     // the x36 invariance law: aggregating the packed keep-frame straight
-    // off the stage chain must yield byte-identical manifests to filtering
-    // action = 'keep' out of the decision union and re-deriving them — the
-    // r10 fast path cannot change a single manifest cell
+    // off the stage chain (with the drop-only checkpoint skipped) must
+    // yield byte-identical manifests to filtering action = 'keep' out of
+    // the decision union and re-deriving them
     val p = CurateParams(budgetTokens = 1e9)
-    val (decisions, manifests) = CurateJob.curateWithManifests(batch, corpus, p)
-    val fromDecisions = decisions.where(col("action") === "keep")
-      .withColumn("__pu", Sampling.hashUnit(col("doc_id"), p.packSalt))
-      .groupBy("bucket", "seq_id")
-      .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("seq_tokens"),
-        array_join(
-          transform(sort_array(collect_list(struct(col("__pu"), col("doc_id")))),
-            x => x.getField("doc_id").cast("string")), ",").as("doc_ids"))
-    val a = manifests.collect().map(_.toSeq).toSet
+    val fromDecisions = CurateJob.manifests(
+      CurateJob.curate(batch, corpus, p).where(col("action") === "keep"), p.packSalt)
+    val a = CurateJob.manifestsOnly(batch, corpus, p).collect().map(_.toSeq).toSet
     val b = fromDecisions.collect().map(_.toSeq).toSet
     assert(a == b, s"manifest mismatch:\n  chain: $a\n  union: $b")
     assert(a.nonEmpty, "fixture produced no kept sequences — law checked nothing")
-    // and the r11 checkpoint-skipping fast path (x36) must be cell-identical
-    // to the both-artifacts chain — checkpoints may never change values
-    val c = CurateJob.manifestsOnly(batch, corpus, p).collect().map(_.toSeq).toSet
-    assert(c == a, s"manifestsOnly diverged from curateWithManifests:\n  $c\n  $a")
+  }
+
+  test("curate and manifestsOnly each scan the corpus once") {
+    // the corpus is cleaned once per call and its three reads (exact tier,
+    // train pairs, eval pairs) share one checkpoint; counted as opens of
+    // the corpus's files relative to one plain scan of its text
+    ListingCountingFs.register(spark)
+    val dir = Files.createTempDirectory("graft_curate_scans").toString
+    corpus.repartition(3).write.parquet(s"$dir/corpus")
+    val stored = spark.read.parquet(s"countfs://$dir/corpus")
+    def opens(run: => Unit): Int = {
+      ListingCountingFs.clear()
+      run
+      ListingCountingFs.opened.toArray.count(_.toString.startsWith(s"$dir/corpus/"))
+    }
+    val plain = opens(stored.agg(sum(length(col("text")))).collect())
+    assert(plain > 0, "the plain scan opened no corpus file")
+    val p = CurateParams(budgetTokens = 1e9)
+    val curated = opens(CurateJob.curate(batch, stored, p).collect())
+    val manifested = opens(CurateJob.manifestsOnly(batch, stored, p).collect())
+    assert(curated == plain && manifested == plain,
+      s"corpus scans per call: curate ${curated.toDouble / plain}, " +
+        s"manifestsOnly ${manifested.toDouble / plain}")
   }
 
   test("curate: a null-text doc gets a drop_invalid decision, never vanishes") {
