@@ -33,9 +33,12 @@ object Dedup {
     * The split-count decision reads the OPTIMIZER's size estimate
     * (`optimizedPlan.stats.sizeInBytes` vs. target × maxPartitionBytes) —
     * logical-plan-only, so unlike a `df.rdd.getNumPartitions` probe it
-    * never forces a second physical planning of the frame. Frames with no
-    * estimate (e.g. checkpointed intermediates, which already carry their
-    * shuffle's partitioning) default to Long.MaxValue and are left alone.
+    * never forces a second physical planning of the frame. A checkpointed
+    * frame is NOT exempt: a `localCheckpoint` keeps its plan's size
+    * estimate, so a small checkpoint is re-shuffled here even when it
+    * already carries a hash partitioning on `cols`. With no `cols` the
+    * spread is round-robin — the even split a pure per-row map wants,
+    * since its values do not depend on placement.
     */
   private[graft] def spread(df: DataFrame, cols: Column*): DataFrame = {
     val sess = df.sparkSession
@@ -528,25 +531,6 @@ object Dedup {
       .head.getAs[Array[Byte]](0)
   }
 
-  /** OR-merge of two [[corpusBloom]] sketches — the corpus-APPEND path.
-    * Bloom filters with identical (numBits, numHashes) geometry merge by
-    * bitwise OR into the filter of the union, so corpus growth is
-    * sketch-merge only: build a filter over each new batch and fold it in,
-    * never re-reading old data (the same maintenance contract as the
-    * persisted ANN indexes' append path, `io/Store.appendIndex`). Uses the
-    * public `org.apache.spark.util.sketch.BloomFilter` codec, i.e. exactly
-    * the bytes [[corpusBloom]] emits. Geometry mismatch throws — callers
-    * must build batch filters with the same (expectedItems, fpp).
-    */
-  def mergeBloom(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    import org.apache.spark.util.sketch.BloomFilter
-    val fa = BloomFilter.readFrom(new java.io.ByteArrayInputStream(a))
-    val fb = BloomFilter.readFrom(new java.io.ByteArrayInputStream(b))
-    val out = new java.io.ByteArrayOutputStream()
-    fa.mergeInPlace(fb).writeTo(out)
-    out.toByteArray
-  }
-
   /** `might_contain` probe of a [[corpusBloom]] sketch — a codegen'd row
     * predicate (Spark's `BloomFilterMightContain`, fed the same
     * `xxhash64(text)` the build side used) with the serialized filter as a
@@ -582,10 +566,10 @@ object Dedup {
     * every round.
     *
     * Scale shape: corpus is read ONCE per sketch refresh (partial-agg'd
-    * bloom build, appendable across batches by OR-merge); each incoming
-    * batch is a scan + codegen'd predicate — no shuffle, no join, no
-    * skew surface at all. At 1000 executors the probe is embarrassingly
-    * parallel and the sketch rides task broadcast (~MBs).
+    * bloom build); each incoming batch is a scan + codegen'd predicate —
+    * no shuffle, no join, no skew surface at all. At 1000 executors the
+    * probe is embarrassingly parallel and the sketch rides task broadcast
+    * (~MBs).
     */
   def bloomDedup(incoming: DataFrame, corpus: DataFrame,
                  text: String = "text", id: String = "doc_id",

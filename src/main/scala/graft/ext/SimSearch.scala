@@ -31,26 +31,6 @@ object SimSearch {
     */
   def dot(a: Column, b: Column): Column = graft.functions.FloatDotProduct(a, b)
 
-  /** Spread a corpus across all cores ONLY when its scan provides fewer
-    * partitions than the session's parallelism (fixture corpora arrive as
-    * one parquet split, which would serialize the per-row hashing/dot
-    * loops because broadcast joins inherit probe-side partitioning). At
-    * real scale the scan already has plenty of splits and NO shuffle is
-    * added. Explicit-count repartition = REPARTITION_BY_NUM, which AQE
-    * never coalesces away. The decision reads the optimizer's size
-    * estimate (logical-plan stats vs. target × maxPartitionBytes) instead
-    * of probing `df.rdd`, so the frame is never physically planned twice;
-    * estimate-free frames (checkpointed intermediates) stay untouched.
-    */
-  private def spread(df: DataFrame, key: Column): DataFrame = {
-    val sess = df.sparkSession
-    val target = sess.sparkContext.defaultParallelism
-    val maxSplit = sess.sessionState.conf.filesMaxPartitionBytes
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes < BigInt(maxSplit) * target)
-      df.repartition(target, key)
-    else df
-  }
-
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
@@ -77,15 +57,9 @@ object SimSearch {
     Seq.fill(nBits)(Array.fill(dim)(rnd.nextGaussian()))
   }
 
-  /** Sign-bit bucket id from `nBits` hyperplanes (as one long) — a custom
-    * codegen'd expression; the equivalent literal expression tree (nBits x
-    * dim multiply-add nodes) costs seconds of plan compilation.
-    */
-  def lshBucket(vec: Column, planes: Seq[Array[Double]]): Column =
-    graft.functions.HyperplaneBucket(vec, planes)
-
-  /** All per-table bucket ids at once (see [[graft.functions.HyperplaneBuckets]]):
-    * value-identical to `array(<16 lshBucket nodes>)` but one generated
+  /** All per-table sign-bit bucket ids at once (see
+    * [[graft.functions.HyperplaneBuckets]]): value-identical to an array
+    * of 16 [[graft.functions.HyperplaneBucket]] nodes but one generated
     * hashing loop instead of 16 — the 16-node form's generated-class size
     * made its COLD first execution ~50x the actual hashing work.
     */
@@ -153,9 +127,9 @@ object SimSearch {
 
   /** The persistent LSH index layout: one (table, bucket) row per corpus
     * vector per table, norms precomputed. In a deployment this is built
-    * ONCE and written bucketed by (tbl, bucket)
-    * (`Store.writeBucketed(index, "lsh_idx", Seq("tbl", "bucket"))`), so
-    * every later query batch probes a pre-shuffled, co-located table
+    * ONCE and written bucketed by (tbl, bucket) (Spark's
+    * `bucketBy(n, "tbl", "bucket").saveAsTable`), so every later query
+    * batch probes a pre-shuffled, co-located table
     * instead of re-hashing 100 TB of corpus — the parameters (nBits,
     * nTables, dim, seed) ARE the index identity and must match at query
     * time.
@@ -166,7 +140,7 @@ object SimSearch {
     val tables = hyperplanes(nBits * nTables, dim, seed).grouped(nBits).toSeq
     // spread BEFORE the explode so the nTables x nBits x dim hashing loop
     // uses every core even on a single-split fixture corpus
-    spread(corpus, col(cId))
+    Dedup.spread(corpus, col(cId))
       .withColumn("__cn", norm(col(cVec)))
       .select(col(cId), col(cVec), col("__cn"),
         posexplode(lshBuckets(col(cVec), tables, nBits))
@@ -245,7 +219,7 @@ object SimSearch {
     // by lloydIters. MEMORY_AND_DISK so a corpus bigger than executor
     // memory degrades to local disk re-reads, still far cheaper than
     // re-scanning remote storage per round.
-    val spreadCorpus = spread(clean.select(col(cId), col(cVec)), col(cId))
+    val spreadCorpus = Dedup.spread(clean.select(col(cId), col(cVec)), col(cId))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val sampled = spreadCorpus
@@ -339,7 +313,7 @@ object SimSearch {
     val centroids = trainCentroids(corpus, nCells, lloydIters, cId, cVec)
     // same partitioning-inheritance fix as lshTopK: spread the corpus so
     // cell assignment + candidate dot products use every core
-    val cells = spread(corpus, col(cId))
+    val cells = Dedup.spread(corpus, col(cId))
       .withColumn("cell", graft.functions.NearestCentroid(col(cVec), centroids))
       .withColumn("__cn", norm(col(cVec)))
     import spark.implicits._
@@ -421,7 +395,7 @@ object SimSearch {
                         nBits: Int = 8, nTables: Int = 16, dim: Int = 64, seed: Long = 42L,
                         cId: String = "vec_id", cVec: String = "embedding"): DataFrame = {
     val tables = hyperplanes(nBits * nTables, dim, seed).grouped(nBits).toSeq
-    spread(quantizeInt8(corpus, cVec, "__code", "__cscale"), col(cId))
+    Dedup.spread(quantizeInt8(corpus, cVec, "__code", "__cscale"), col(cId))
       .withColumn("__cn", norm(col(cVec)))
       .select(col(cId), col("__code"), col("__cscale"), col("__cn"),
         posexplode(lshBuckets(col(cVec), tables, nBits))
@@ -458,11 +432,11 @@ object SimSearch {
       corpus, k, rerankFactor, nBits, nTables, dim, seed, qId, qVec, cId, cVec)
 
   /** Probe a PREBUILT [[lshIndexQuantized]] — the deployment path: the
-    * index is built once (persisted bucketed by (tbl, bucket) via
-    * [[graft.io.Store.writeBucketed]]; new batches append under the same
-    * bucket spec), query batches probe it without re-hashing or
-    * re-quantizing the corpus, and only the exact re-rank touches the
-    * primary `corpus` store for float vectors. The (nBits, nTables, dim,
+    * index is built once (persisted with Spark's `bucketBy` on (tbl,
+    * bucket); new batches append under the same bucket spec), query
+    * batches probe it without re-hashing or re-quantizing the corpus, and
+    * only the exact re-rank touches the primary `corpus` store for float
+    * vectors. The (nBits, nTables, dim,
     * seed) parameters are the index identity and must match build time.
     */
   def quantizedTopKFromIndex(queries: DataFrame, index: DataFrame, corpus: DataFrame,
@@ -655,7 +629,7 @@ object SimSearch {
     * at these k, without m·nCells codebook state.
     *
     * Index rows are (cell, id, pq_code); persisted bucketed by `cell`
-    * (Store.writeBucketed) the probe reads only its cells' buckets.
+    * (Spark's `bucketBy`) the probe reads only its cells' buckets.
     */
   def ivfPqTopK(queries: DataFrame, corpus: DataFrame, k: Int,
                 nCells: Int = 16, nProbe: Int = 8, lloydIters: Int = 2,
@@ -667,7 +641,7 @@ object SimSearch {
     val centroids = trainCentroids(corpus, nCells, lloydIters, cId, cVec)
     val codebooks = pqTrain(corpus, m, ksub, pqIters, sampleN, cId, cVec)
     // the compressed cell index: one map-only pass over the corpus
-    val codes = spread(corpus, col(cId))
+    val codes = Dedup.spread(corpus, col(cId))
       .select(graft.functions.NearestCentroid(col(cVec), centroids).as("cell"),
         col(cId), graft.functions.PqEncode(col(cVec), codebooks).as("pq_code"))
       .where(col("pq_code").isNotNull && col("cell").isNotNull)
@@ -722,7 +696,7 @@ object SimSearch {
                    id: String = "vec_id", vec: String = "embedding"): DataFrame = {
     val withNorm = df.withColumn("__n", norm(col(vec)))
     // probe-side spread = parallelism of the per-pair dot-product loop
-    val a = spread(withNorm, col(id)).as("a")
+    val a = Dedup.spread(withNorm, col(id)).as("a")
     val b = withNorm.as("b")
     a.join(b, col(s"a.$blockCol") === col(s"b.$blockCol") && col(s"a.$id") < col(s"b.$id"))
       // optimizer fence, arithmetic form — see Dedup.minhashPairs: one
@@ -769,7 +743,7 @@ object SimSearch {
                          nAssign: Int = 4, lloydIters: Int = 2,
                          id: String = "vec_id", vec: String = "embedding"): DataFrame = {
     val centroids = trainCentroids(df, nCells, lloydIters, id, vec)
-    val assigned = spread(df, col(id))
+    val assigned = Dedup.spread(df, col(id))
       .withColumn("__n", norm(col(vec)))
       .withColumn("cell", explode(topCells(col(vec), centroids, nAssign)))
     val a = assigned.as("a")

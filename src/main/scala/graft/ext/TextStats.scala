@@ -15,24 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object TextStats {
 
-  /** Same contract as [[Dedup]]'s spread: fan a CPU-heavy, byte-tiny frame
-    * across all cores when the optimizer's size estimate says the scan
-    * would arrive in fewer splits than the session's parallelism (fixture
-    * corpora are one parquet file — a per-char rolling hash then runs on
-    * ONE core). Logical-stats decision, no second physical planning; at
-    * real scale the estimate is large and no shuffle is added.
-    */
-  private def spread(df: DataFrame): DataFrame = {
-    val sess = df.sparkSession
-    val target = sess.sparkContext.defaultParallelism
-    val maxSplit = sess.sessionState.conf.filesMaxPartitionBytes
-    // round-robin (no key): the consumer is a pure per-row map, so even
-    // distribution beats any hash key, and values don't depend on placement
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes < BigInt(maxSplit) * target)
-      df.repartition(target)
-    else df
-  }
-
   /** Minimal per-language stopword lists for the n-gram/stopword-ratio
     * language heuristic. Kept tiny and deterministic on purpose — the
     * operator shape (per-doc token scan vs K language profiles) is what
@@ -403,7 +385,7 @@ object TextStats {
     // the rolling k-gram pass is the heaviest per-row expression in this
     // file — a single-split fixture scan serializes it (measured ~2.5x on
     // the sf0.1 bench), so spread first
-    spread(df).withColumn("__mm", graft.functions.KgramHashMinMax(norm, k))
+    Dedup.spread(df).withColumn("__mm", graft.functions.KgramHashMinMax(norm, k))
       .withColumn("fp_min", col("__mm").getItem(0))
       .withColumn("fp_max", col("__mm").getItem(1))
       .withColumn("fp_full", xxhash64(norm))
@@ -441,7 +423,7 @@ object TextStats {
   def frequentSpans(df: DataFrame, k: Int = 3, minCount: Long = 5,
                     eps: Double = 1e-4, confidence: Double = 0.99,
                     text: String = "text", id: String = "doc_id"): DataFrame = {
-    val spans = spread(df)
+    val spans = Dedup.spread(df)
       .select(col(id), posexplode(Dedup.shingleHashesAll(col(text), k))
         .as(Seq("__p0", "__h")))
     val sketch = graft.functions.CmsEstimate.sketchOf(spans, col("__h"), eps, confidence)
@@ -489,7 +471,7 @@ object TextStats {
   private[graft] def boilerplateCandidates(df: DataFrame, k: Int = 3, minDocs: Long = 5,
                                            eps: Double = 1e-4, confidence: Double = 0.99,
                                            text: String = "text", id: String = "doc_id"): DataFrame = {
-    val exploded = spread(df)
+    val exploded = Dedup.spread(df)
       .select(col(id), posexplode(Dedup.shingleHashesAll(col(text), k))
         .as(Seq("__p0", "__h")))
       .select(col(id), (col("__p0") + 1).as("__pos"), col("__h"))

@@ -78,7 +78,7 @@ class Store(spark: SparkSession, baseDir: String) {
     val live = names.filterNot(Store.hidden).map(n => Store.DayFile.parse(n).getOrElse(
       throw new IllegalStateException(s"$rel holds $n, which is not a day file " +
         "(part-<yyyy-MM-dd>-<id>.csv): a CSV history in another layout")))
-    val restored = Store.recoverParks(dayFs, dir, names, n => Store.DayFile.parse(n).map(_.day))
+    val restored = Store.recoverParks(dayFs, dir, names)
     (live ++ restored.flatMap(Store.DayFile.parse)).map(f => f.day -> f).toMap
   }
 
@@ -168,7 +168,7 @@ class Store(spark: SparkSession, baseDir: String) {
     * overwrite, writing a delta touches only the delta's partitions.
     */
   def writePartitioned(df: DataFrame, rel: String, tsCol: String = "datetime"): Unit =
-    df.withColumn("dt", to_date(col(tsCol)))
+    df.withColumn("dt", Store.utcDay(col(tsCol)))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("dt")
@@ -206,7 +206,7 @@ class Store(spark: SparkSession, baseDir: String) {
       val current = if (fs.exists(dir)) listDataFilesDeep(dir) else Nil
       val tmp = ScopedCommit.newStageDir(dir)
       ScopedCommit.sweepStages(fs, dir)
-      val stagedDf = df.withColumn("dt", to_date(col(tsCol)))
+      val stagedDf = df.withColumn("dt", Store.utcDay(col(tsCol)))
       stagedDf.write.mode("overwrite").partitionBy("dt").parquet(tmp.toString)
       var staged = listDataFilesDeep(tmp)
       // an EMPTY replace stages zero files (partitionBy writers open files
@@ -255,7 +255,7 @@ class Store(spark: SparkSession, baseDir: String) {
     // exists to prevent). The batch's day set is computed once, lazily —
     // only a conflicted retry pays the one distinct-scan job.
     val batchParts = new Store.Lazily(
-      df.select(to_date(col(tsCol)).cast("string")).distinct()
+      df.select(Store.utcDay(col(tsCol)).cast("string")).distinct()
         .collect().map(r => s"dt=${r.getString(0)}").toSet)
     Store.retryDisjointCas(rel, s"$baseDir/$rel", fs,
       overlap = changedParts =>
@@ -280,13 +280,13 @@ class Store(spark: SparkSession, baseDir: String) {
     require(m0.isDefined || current.forall(_.contains('/')),
       s"$rel holds root-level data files — not a partitioned layout; " +
         "writePartitionedManaged replaces it wholesale instead")
-    validateAgainstDeclared(df.withColumn("dt", to_date(col(tsCol))).schema, m0, rel)
+    val dayed = df.withColumn("dt", Store.utcDay(col(tsCol)))
+    validateAgainstDeclared(dayed.schema, m0, rel)
     val epoch = m0.map(_.epoch + 1).getOrElse(0L)
     withEpochClaim(dir, epoch, m0.map(_.epoch).getOrElse(-1L)) {
       val tmp = ScopedCommit.newStageDir(dir)
       ScopedCommit.sweepStages(fs, dir)
-      df.withColumn("dt", to_date(col(tsCol)))
-        .write.mode("overwrite").partitionBy("dt").parquet(tmp.toString)
+      dayed.write.mode("overwrite").partitionBy("dt").parquet(tmp.toString)
       val staged = listDataFilesDeep(tmp)
       // an EMPTY batch touches no partition: commit nothing, release the
       // claim this pass took (a zero-file manifest on a fresh table would
@@ -309,9 +309,7 @@ class Store(spark: SparkSession, baseDir: String) {
           // foreign files) declares the batch schema for inference-free
           // reads — an adopted one keeps inference until a replace
           schemaJson = m0.flatMap(_.schemaJson).orElse(
-            if (current.isEmpty)
-              Some(Store.nullableSchemaJson(
-                df.withColumn("dt", to_date(col(tsCol))).schema))
+            if (current.isEmpty) Some(Store.nullableSchemaJson(dayed.schema))
             else None))
         // adopted (manifest-less) tables have no prior epoch to serve, so
         // their replaced files delete; tracked tables retire them
@@ -1261,8 +1259,7 @@ class Store(spark: SparkSession, baseDir: String) {
     // the locate semi-join's scan and the NOT-MATCHED anti-join's
     // existing-side scan prune to those partitions (PartitionFilters on
     // the scan — PlanSpec pins it): the insert path stops paying a
-    // full-table scan on day-keyed merges, the same trick the streaming
-    // upsert sink uses. The distinct-value collect is bounded by the
+    // full-table scan on day-keyed merges. The distinct-value collect is bounded by the
     // BATCH's partition values (a CDC feed's few days), never the table.
     // Distinct-value probe is CAPPED: pruning only pays when the source
     // touches few partitions (days of a CDC feed). Past the cap the
@@ -2458,20 +2455,6 @@ class Store(spark: SparkSession, baseDir: String) {
   private[graft] def isPartitionedStore(rel: String): Boolean =
     LayoutManifest.read(fs, new Path(s"$baseDir/$rel")).exists(_.isPartitioned)
 
-  /** Bucketed managed table: pre-shuffles ONCE at write time so every later
-    * equi-join/aggregation on `bucketCols` is co-located — Catalyst plans a
-    * SortMergeJoin with NO Exchange on either side. This is the 100 TB
-    * answer to "this join shuffles every run": pay the shuffle once,
-    * amortize it over every downstream query.
-    */
-  def writeBucketed(df: DataFrame, table: String, bucketCols: Seq[String],
-                    buckets: Int = 32): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .option("path", s"$baseDir/$table")
-      .saveAsTable(table)
-
   /** Catalog face for the layout sinks: register a path-addressed
     * clustered/z-ordered/partitioned store as an EXTERNAL parquet table
     * in the session catalog, so pure-SQL consumers (`spark.table`,
@@ -2829,7 +2812,7 @@ object Store {
     * instant (`cast(ts as long)` is timezone-independent), never
     * `to_date`, whose result follows `spark.sql.session.timeZone`. This is
     * the ONE day rule of every day-keyed layout — the CSV histories' day
-    * files and the streaming upsert's `dt=` partitions — because a
+    * files and the partitioned stores' `dt=` partitions — because a
     * session-zoned day would let a restart under a different TZ map
     * a near-midnight key to a DIFFERENT day than it was stored under: a
     * day-scoped merge would then never read the old day and leave a stale
@@ -2884,9 +2867,9 @@ object Store {
   private def parkOf(p: Path): Path = new Path(p.getParent, s".old_${p.getName}")
 
   /** Park-aside/rename swap of a fully-written `tmp` directory into
-    * `target` — the shared durability discipline of the unmanaged
-    * [[Store.recluster]] and the streaming upsert sinks ([[swapOver]], its
-    * second half, also swaps [[Store.writeCsv]]'s day files):
+    * `target` — the durability discipline of the unmanaged
+    * [[Store.recluster]] ([[swapOver]], its second half, also swaps
+    * [[Store.writeCsv]]'s day files):
     * the old data is parked aside (never deleted first), so a failed swap
     * rolls back with the target intact, and nothing reads and overwrites
     * the same files in one plan. The park path is dot-prefixed, so Spark
@@ -2898,8 +2881,8 @@ object Store {
     * rename(tmp, target) leaves the table parked under the dot-prefixed
     * park path with the target missing — in-process rollback only runs
     * when the process survives to see the second rename fail. Every
-    * caller that READS the target before merging (recluster, the upsert
-    * sinks) must call [[recoverSwap]] first, so a replay merges against
+    * caller that READS the target before merging (recluster) must call
+    * [[recoverSwap]] first, so a replay merges against
     * the real stored table instead of a phantom empty one and never
     * reaches this method's `fs.delete(old)` with the parked copy as the
     * only surviving data.
@@ -2915,8 +2898,9 @@ object Store {
     * aside as `.old_<its name>`, `tmp` renames to `target` — which may
     * carry a different name, as a CSV day file whose write id changed
     * does — and the park is deleted. A crash between the renames leaves
-    * the old entry parked; [[recoverParks]] restores it when nothing live
-    * took its key, and deletes it when the swap completed.
+    * the old entry parked: [[recoverSwap]] restores a parked directory,
+    * and [[recoverParks]] a parked day file when no live file holds its
+    * day, deleting the park when the swap completed.
     */
   private[graft] def swapOver(fs: org.apache.hadoop.fs.FileSystem, tmp: Path,
                               target: Path, replaced: Option[Path]): Unit = {
@@ -2959,36 +2943,17 @@ object Store {
     } else false
   }
 
-  /** [[recoverSwap]] over every partition directory of a partitioned
-    * table root: one listing of the root finds crash leftovers
-    * (`.old_<part>` children), restores each whose partition directory is
-    * missing, and disposes of stale parks whose swap DID complete. Called
-    * by the partition-scoped upsert before its pruned read — it repairs
-    * ALL days, not just the replaying batch's, because the interrupted
-    * batch may have touched days the replay does not. Returns the names of
-    * the root's visible entries after the repair (empty when the root does
-    * not exist), so the caller needs no second listing.
-    */
-  private[graft] def recoverPartitionSwaps(fs: org.apache.hadoop.fs.FileSystem,
-                                           root: Path): Seq[String] =
-    if (!fs.exists(root)) Nil
-    else {
-      val names = fs.listStatus(root).toSeq.map(_.getPath.getName)
-      names.filterNot(hidden) ++ recoverParks(fs, root, names, Some(_))
-    }
-
-  /** Finish the swaps a crash interrupted under `root`, from `names`, a
-    * listing the caller already made: each park (`.old_<name>`) whose key
-    * no live entry holds is renamed back — the crash hit between its
-    * swap's two renames, and the parked copy is the only one — and every
-    * other park is deleted, since its swap completed. `keyOf` says which
-    * entries stand for the same thing: a partition directory is its own
-    * key, a CSV day file is keyed by its day, whatever its write id.
-    * Returns the names restored.
+  /** Finish the day swaps a crash interrupted in CSV history `root`, from
+    * `names`, a listing the caller already made: each park (`.old_<name>`)
+    * whose day no live day file holds is renamed back — the crash hit
+    * between its swap's two renames, and the parked copy is the only one —
+    * and every other park is deleted, since its swap completed. A day file
+    * is keyed by its day, whatever its write id. Returns the names
+    * restored.
     */
   private[graft] def recoverParks(fs: org.apache.hadoop.fs.FileSystem, root: Path,
-                                  names: Seq[String],
-                                  keyOf: String => Option[String]): Seq[String] = {
+                                  names: Seq[String]): Seq[String] = {
+    def keyOf(name: String) = DayFile.parse(name).map(_.day)
     val held = scala.collection.mutable.Set(names.filterNot(hidden).flatMap(keyOf): _*)
     names.filter(_.startsWith(".old_")).flatMap { park =>
       val name = park.stripPrefix(".old_")

@@ -28,7 +28,6 @@ object AsofJoin {
   sealed trait Direction
   case object Nearest extends Direction
   case object Backward extends Direction
-  case object Forward extends Direction
 
   /** Nearest-within-tolerance as-of join, pandas `merge_asof` parity.
     *
@@ -46,10 +45,6 @@ object AsofJoin {
   def backward(left: DataFrame, right: DataFrame, on: String,
                toleranceSeconds: Long, leftKey: Seq[String]): DataFrame =
     asof(left, right, on, toleranceSeconds, leftKey, Backward)
-
-  def forward(left: DataFrame, right: DataFrame, on: String,
-              toleranceSeconds: Long, leftKey: Seq[String]): DataFrame =
-    asof(left, right, on, toleranceSeconds, leftKey, Forward)
 
   def asof(left0: DataFrame, right0: DataFrame, on: String,
            toleranceSeconds: Long, leftKey: Seq[String],
@@ -86,14 +81,12 @@ object AsofJoin {
     val inTol: Column = direction match {
       case Nearest  => abs(lt - rt) <= tolMicros
       case Backward => rt <= lt && (lt - rt) <= tolMicros
-      case Forward  => rt >= lt && (rt - lt) <= tolMicros
     }
     // unmatched left rows carry a null right time: nulls sort last
     val ordering: Seq[Column] = direction match {
       // pandas tie-break: equidistant -> earlier (backward) right row wins.
       case Nearest  => Seq(abs(lt - rt).asc_nulls_last, rt.asc_nulls_last)
       case Backward => Seq(rt.desc_nulls_last)
-      case Forward  => Seq(rt.asc_nulls_last)
     }
 
     val cand = lTagged.join(rExp,

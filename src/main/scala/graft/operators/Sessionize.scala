@@ -4,10 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Batch gap-based sessionization — the batch twin of
-  * [[graft.streaming.EventStreams]]' stateful sessionizer: a new session
-  * starts when the gap to the previous event of the same key exceeds
-  * `gapSeconds`.
+/** Batch gap-based sessionization: a new session starts when the gap to
+  * the previous event of the same key exceeds `gapSeconds`.
   *
   * Scale shape: ONE shuffle end-to-end. Gap detection (lag), session
   * numbering (running sum), and the per-session rollup all ride the same

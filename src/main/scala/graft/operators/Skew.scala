@@ -3,22 +3,15 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Skew-mitigation utilities (SURVEY.md §4 / the 100 TB checklist).
+/** Skew mitigation (SURVEY.md §4 / the 100 TB checklist).
   *
-  * AQE's skew-join handling covers sort-merge joins at runtime; these
-  * helpers cover the two cases it does not:
-  *
-  *   - [[saltedAggregate]]: a groupBy whose key distribution is so hot that
-  *     even map-side combine leaves one reducer with most of the data
-  *     (e.g. counting events per type when one type is 90% of traffic).
-  *     Two phases: aggregate on (key, salt) — spreading each hot key over
-  *     `salts` reducers — then re-aggregate on key. Works for any algebraic
-  *     aggregate (sum/count/min/max; avg = sum+count).
-  *
-  *   - [[saltedJoin]]: a large-x-small equi-join where a handful of keys
-  *     dominate the large side and the small side is too big to broadcast.
-  *     The big side gets a random salt in [0, salts); the small side is
-  *     exploded `salts` times so every (key, salt) bucket can match.
+  * AQE's skew-join handling covers sort-merge joins at runtime, not
+  * aggregations. [[saltedAggregate]] covers a groupBy whose key
+  * distribution is so hot that even map-side combine leaves one reducer
+  * with most of the data (e.g. counting events per type when one type is
+  * 90% of traffic). Two phases: aggregate on (key, salt) — spreading each
+  * hot key over `salts` reducers — then re-aggregate on key. Works for any
+  * algebraic aggregate (sum/count/min/max; avg = sum+count).
   *
   * Salting uses a HASH of the row's own columns, not rand(): deterministic,
   * retry-safe, and identically distributed.
@@ -51,24 +44,5 @@ object Skew {
     val by = if (saltBy.nonEmpty) saltBy else df.columns.toSeq
     saltedAggregate(df, keys, salts, by,
       Map("n" -> (count(lit(1)), (c: String) => sum(col(c)))))
-  }
-
-  /** Skew-safe large-x-small equi-join: salt the big side, replicate the
-    * small side once per salt value. Result equals `big.join(small, keys)`.
-    *
-    * `saltBy` picks the columns hashed into the salt (default: all of
-    * `big`'s columns). Because the salt is a deterministic row hash,
-    * byte-identical duplicate rows land in the SAME salt bucket — if the
-    * hot key's rows are exact duplicates, pass a unique column (row id,
-    * offset) as `saltBy`, or dedup-with-count first; a rand() salt would
-    * spread them but breaks task-retry determinism, so we refuse it here.
-    */
-  def saltedJoin(big: DataFrame, small: DataFrame, keys: Seq[String],
-                 salts: Int = 16, saltBy: Seq[String] = Seq.empty): DataFrame = {
-    val by = if (saltBy.nonEmpty) saltBy else big.columns.toSeq
-    val b = big.withColumn("__salt", salt(salts, by.map(col)))
-    val s = small.withColumn("__salt",
-      explode(array((0 until salts).map(lit): _*)))
-    b.join(s, keys :+ "__salt").drop("__salt")
   }
 }

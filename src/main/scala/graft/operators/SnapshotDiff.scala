@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   * and a nightly full rebuild.
   *
   * Scale shape: one full-outer equi-join on the key — both sides shuffle
-  * on the key once; snapshots persisted bucketed on the key (see
-  * [[graft.io.Store.writeBucketed]]) co-locate and the join plans with NO
-  * exchange on either side. Column comparison happens on two packed
+  * on the key once; snapshots persisted bucketed on the key (Spark's
+  * `bucketBy`) co-locate and the join plans with NO exchange on either
+  * side. Column comparison happens on two packed
   * structs with Spark's null-safe `<=>`, so the per-row work is one
   * comparison regardless of column count and nulls never fake a change
   * (`null <=> null` is true). Nothing driver-side, nothing all-pairs.

@@ -353,8 +353,7 @@ object ReferenceQueries {
           round(sum("value").over(w.rowsBetween(Window.unboundedPreceding, 0)), 2))
         .select("event_id", "user_id", "rn", "cum_value")
     }),
-    // Batch sessionization (the batch twin of streaming/EventStreams
-    // sessionize): a session breaks after a >30 min gap; session id =
+    // Batch sessionization: a session breaks after a >30 min gap; session id =
     // running count of breaks. Tied timestamps are safe: both engines use
     // the RANGE-to-current-row default frame, so peer rows share the
     // running sum, and a tie's gap is 0 regardless of intra-tie order.

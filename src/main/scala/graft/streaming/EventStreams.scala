@@ -1,10 +1,7 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming formulations of the pipeline's streaming-shaped
   * concerns (SURVEY.md §2.9). The reference is batch-only — its late-data
@@ -16,13 +13,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *     windowed aggregation (late rows within the watermark update their
   *     window; rows later than that are dropped — the streaming analogue of
   *     the reference's bounded re-collection window).
-  *   - [[dedupByKey]]: streaming `dropDuplicates` on the time key — the
-  *     exactly-once-ish idempotence the reference gets from D1/D2.
-  *   - [[sessionize]]: `flatMapGroupsWithState` sessionization per user —
-  *     the custom-state escape hatch for semantics windows can't express.
+  *   - [[intervalJoin]]: a watermarked stream-stream interval join.
+  *   - [[asofEnrich]]: J2's nearest-within-tolerance as-of join as a
+  *     stream-static join.
+  *   - [[dedupAgainstCorpusSketch]]: x39's Bloom-sketch corpus dedup on an
+  *     unbounded document feed.
   *
-  * State scale: all three partition by key (window/user), so state is
-  * hash-distributed across executors; watermarks and timeouts bound it.
+  * Each runs the same plan on a batch frame; the declared queries st1-st4
+  * oracle-check those batch faces. State scale: every stateful operator
+  * here partitions by key (window, join key or content hash), so state is
+  * hash-distributed across executors, and watermarks bound it.
   */
 object EventStreams {
 
@@ -40,16 +40,6 @@ object EventStreams {
         round(sum("value"), 2).as("sum_value"))
       .select(col("w.start").as("hour"), col("event_type"), col("n"),
         col("avg_value"), col("sum_value"))
-
-  /** Streaming key-dedup: first arrival wins within the watermark horizon
-    * (the reference's D2; D1 keep-newest has no streaming analogue because
-    * a sink row, once emitted, is immutable — late updates become new
-    * versions downstream instead).
-    */
-  def dedupByKey(df: DataFrame, keyCol: String = "event_id",
-                 watermarkDelay: String = "2 hours"): DataFrame =
-    df.withWatermark("ts", watermarkDelay)
-      .dropDuplicatesWithinWatermark(keyCol)
 
   /** Watermarked stream-STREAM interval join: pair each left event with
     * the right-stream events of the same key whose timestamp falls in
@@ -159,23 +149,12 @@ object EventStreams {
         rCols.map(c => col(s"__best.payload.$c").as(c)): _*)
   }
 
-  /** Streaming incremental exact dedup: the streaming face of
-    * [[graft.ext.Dedup.incrementalDedup]]'s exact tier — documents
-    * arriving on a stream are dropped when their content hash (a) already
-    * appeared on the stream within the watermark horizon, or (b) exists
-    * in a STATIC corpus snapshot. The corpus side reduces to one 64-byte
-    * hash row per distinct text (broadcast-able for dimension-sized
-    * corpora; shuffle-hash stream-static join beyond that). Stream-left /
-    * static-right left ANTI is in Structured Streaming's supported-join
-    * matrix (only anti joins with the STREAM on the right are rejected),
-    * so the delta is expressed directly.
-    */
   /** Within-feed first-arrival dedup with a BATCH face: streaming frames
     * get `dropDuplicatesWithinWatermark` (watermark-bounded state);
     * batch frames get plain `dropDuplicates` — Spark rejects the
     * watermark variant outright on batch plans (unlike `withWatermark`,
-    * which is a silent no-op), so the operators below could otherwise
-    * never run batch-materialized the way st1/st2 do. Batch semantics:
+    * which is a silent no-op), so [[dedupAgainstCorpusSketch]] could
+    * otherwise never run batch-materialized the way st1/st2 do. Batch semantics:
     * one arbitrary survivor per key, exactly what a whole-feed watermark
     * horizon degenerates to — deterministic iff the feed is key-unique
     * (the declared st3 feed is; its scaladoc explains why).
@@ -211,43 +190,24 @@ object EventStreams {
         .where(col("__rn") === 1).drop("__rn")
     }
 
-  def dedupAgainstCorpus(stream: DataFrame, corpus: DataFrame,
-                         text: String = "text",
-                         watermarkDelay: String = "2 hours"): DataFrame = {
-    val corpusHash = corpus.select(sha2(col(text), 256).as("__h")).distinct()
-    // null text is dropped UP FRONT, loudly documented: sha2(null) is a
-    // null key, and the within-stream dedup state would otherwise collapse
-    // every distinct null-text row onto one state entry (silently dropping
-    // the rest as "duplicates" of each other) — content dedup of
-    // contentless rows is undefined; run the P6 guard / drop_invalid stage
-    // upstream if such rows must be preserved elsewhere.
-    dropDupFeed(
-      stream
-        .where(col(text).isNotNull)
-        .withColumn("__h", sha2(col(text), 256))
-        .withWatermark("ts", watermarkDelay), "__h")
-      .join(corpusHash, Seq("__h"), "left_anti")
-      .drop("__h")
-  }
-
-  /** Sketch-probe variant of [[dedupAgainstCorpus]]: the corpus side is a
-    * prebuilt [[graft.ext.Dedup.corpusBloom]] filter instead of a
-    * stream-static join. The probe is a pure codegen'd predicate, so the
-    * corpus contributes NO join state, no per-microbatch static-side
-    * rescan, and no broadcast — the sketch rides the query plan as a
-    * constant, the right cost model when the corpus is 100 TB but its
-    * membership sketch is megabytes. Error is one-sided ([[graft.ext
-    * .Dedup.bloomDedup]]): a corpus duplicate is never emitted; a unique
-    * doc is lost with p <= the build fpp. Within-stream repeats are still
-    * dropped exactly (sha2 keys in watermark-bounded state). Corpus
-    * APPENDS between sketch refreshes are the one semantic gap vs the
-    * join — fold per-batch filters in with [[graft.ext.Dedup.mergeBloom]]
-    * and restart the query (same static-snapshot caveat as
-    * [[dedupAgainstCorpus]], whose static side is also fixed at start).
-    * NULL-text rows are DROPPED by both faces, explicitly and up front:
-    * content-dedup of contentless rows is undefined, and leaving them in
-    * would collapse every distinct null-text row onto the single null
-    * dedup key (silently "deduplicating" unrelated rows against each
+  /** Streaming corpus dedup: documents arriving on a stream are dropped
+    * when their text (a) already appeared on the stream within the
+    * watermark horizon, or (b) probes positive in a prebuilt
+    * [[graft.ext.Dedup.corpusBloom]] sketch of a static corpus, instead of
+    * a stream-static join against the corpus. The probe is a pure
+    * codegen'd predicate, so the corpus contributes NO join state, no
+    * per-microbatch static-side rescan, and no broadcast — the sketch
+    * rides the query plan as a constant, the right cost model when the
+    * corpus is 100 TB but its membership sketch is megabytes. Error is
+    * one-sided ([[graft.ext.Dedup.bloomDedup]]): a corpus duplicate is
+    * never emitted; a unique doc is lost with p <= the build fpp.
+    * Within-stream repeats are still dropped exactly (sha2 keys in
+    * watermark-bounded state). The sketch is fixed when the query starts:
+    * corpus appends after that are not seen until the sketch is rebuilt
+    * and the query restarted. NULL-text rows are DROPPED, explicitly and
+    * up front: content-dedup of contentless rows is undefined, and leaving
+    * them in would collapse every distinct null-text row onto the single
+    * null dedup key (silently "deduplicating" unrelated rows against each
     * other). The curation chain gives such rows an explicit drop_invalid
     * decision before this stage; do the same upstream if they must be
     * accounted for.
@@ -257,248 +217,9 @@ object EventStreams {
                                watermarkDelay: String = "2 hours"): DataFrame =
     dropDupFeed(
       stream
-        .where(col(text).isNotNull) // same null-text rule as dedupAgainstCorpus
+        .where(col(text).isNotNull)
         .withColumn("__h", sha2(col(text), 256))
         .withWatermark("ts", watermarkDelay), "__h")
       .where(!graft.ext.Dedup.bloomMightContain(corpusBloom, col(text)))
       .drop("__h")
-
-  /** Streaming ingestion curation: the stateless front half of
-    * [[graft.jobs.CurateJob]] applied to an unbounded document feed —
-    * clean/redact (x17's chain), the within-doc repetition filter (x22),
-    * then the stateful exact-dedup tier ([[dedupAgainstCorpus]]) on the
-    * CLEANED text, mirroring CurateJob's stage order (a doc that cleans
-    * to a corpus doc's cleaned text is the same doc). The corpus side is
-    * cleaned with the same expressions, reduced to one hash row per
-    * distinct cleaned text.
-    *
-    * The clean/repetition stages are pure column expressions, so they run
-    * identically on a batch frame (parity pinned in StreamingSpec); only
-    * the dedup tier is streaming-stateful (watermark-bounded).
-    * Emits the surviving documents with clean_text, redaction counts,
-    * and repetition stats attached.
-    */
-  def curateStream(stream: DataFrame, corpus: DataFrame,
-                   maxDupFraction: Double = 0.3,
-                   text: String = "text",
-                   watermarkDelay: String = "2 hours"): DataFrame = {
-    val kept = repetitionFiltered(stream, maxDupFraction, text)
-    val cleanCorpus = graft.ext.TextStats.withCleaned(corpus, text)
-    dedupAgainstCorpus(kept, cleanCorpus, text = "clean_text",
-      watermarkDelay = watermarkDelay)
-  }
-
-  /** The stateless stage of [[curateStream]], shared verbatim by the
-    * batch-parity test: clean + repetition-score + filter.
-    */
-  def repetitionFiltered(df: DataFrame, maxDupFraction: Double = 0.3,
-                         text: String = "text"): DataFrame =
-    graft.ext.TextStats.withRepetition(
-      graft.ext.TextStats.withCleaned(df, text), text = "clean_text")
-      .where(col("dup_fraction") <= maxDupFraction)
-
-  case class Session(userId: Long, nEvents: Long, totalValue: Double,
-                     startTs: Timestamp, endTs: Timestamp)
-  case class SessionState(n: Long, total: Double, startMs: Long, lastMs: Long)
-
-  /** Gap-based sessionization: a user's session closes after `gapMinutes`
-    * of event-time inactivity. Emits one row per closed session — either
-    * when a later event of the same user arrives past the gap, or when the
-    * WATERMARK passes the gap deadline (event-time timeout; deterministic
-    * and replayable, unlike processing-time timeouts, and it never spins
-    * empty micro-batches).
-    *
-    * `events` needs columns (user_id: long, ts: timestamp, value: double).
-    */
-  def sessionize(events: DataFrame, gapMinutes: Int = 30,
-                 watermarkDelay: String = "10 minutes"): Dataset[Session] = {
-    import events.sparkSession.implicits._
-    events.withWatermark("ts", watermarkDelay)
-      .select(col("user_id").cast("long"), col("ts"), col("value").cast("double"))
-      .as[(Long, Timestamp, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[SessionState, Session](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        case (userId, rows, state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(Session(userId, s.n, s.total,
-              new Timestamp(s.startMs), new Timestamp(s.lastMs)))
-          } else {
-            val sorted = rows.toSeq.sortBy(_._2.getTime)
-            var st = state.getOption.getOrElse(
-              SessionState(0, 0.0, sorted.head._2.getTime, sorted.head._2.getTime))
-            val closed = Seq.newBuilder[Session]
-            sorted.foreach { case (_, ts, v) =>
-              if (st.n > 0 && ts.getTime - st.lastMs > gapMinutes * 60000L) {
-                closed += Session(userId, st.n, st.total,
-                  new Timestamp(st.startMs), new Timestamp(st.lastMs))
-                st = SessionState(0, 0.0, ts.getTime, ts.getTime)
-              } else if (st.n > 0 && st.startMs - ts.getTime > gapMinutes * 60000L) {
-                // stray cross-batch late event, older than the OPEN session
-                // by more than the gap: batch semantics put it in its own
-                // earlier session, so merging (which the min/max update
-                // would do) would weld two sessions across a super-gap
-                // interval. Emit it as a closed singleton and leave the
-                // open session untouched. Bounded deviation from batch:
-                // two such stray events of the SAME old session arriving
-                // in DIFFERENT micro-batches emit as two singletons where
-                // batch emits one pair — same-batch strays sort together
-                // and merge correctly.
-                closed += Session(userId, 1, v, ts, ts)
-              }
-              if (st.n == 0 || st.startMs - ts.getTime <= gapMinutes * 60000L) {
-                // min/max, not blind assignment: sorting is batch-LOCAL, so
-                // a cross-batch late event (within the watermark but older
-                // than the session's last event) must extend the session
-                // bounds, never rewind lastMs — a rewind would shift the
-                // end timestamp back, fire the event-time timeout early,
-                // and make a following event mis-measure the gap
-                st = SessionState(st.n + 1, st.total + v,
-                  math.min(st.startMs, ts.getTime), math.max(st.lastMs, ts.getTime))
-              }
-            }
-            state.update(st)
-            state.setTimeoutTimestamp(st.lastMs + gapMinutes * 60000L)
-            closed.result().iterator
-          }
-      }
-  }
-
-  /** Streaming keep-newest upsert sink — the reference's daily D1 upsert
-    * (`raw_data.py:257-261`) run continuously: each micro-batch merges
-    * into the stored parquet table via [[graft.operators.Upsert.keepNewest]],
-    * so incoming rows replace stored rows on key collision. State lives
-    * in the TABLE, not in streaming state — no watermark, unbounded key
-    * space — and a checkpoint-recovery REPLAY of a micro-batch is
-    * harmless because the merge is idempotent (UpsertSpec law: upserting
-    * the same batch twice changes nothing).
-    *
-    * Durability: the merged table is fully written to a `.tmp_` sibling
-    * (while the stored files are still intact — the merge plan reads
-    * them during that write) and then swapped in with
-    * [[graft.io.Store.swapInto]]'s park-aside/rename discipline. An
-    * executor loss or crash mid-merge leaves the stored table untouched;
-    * a crash mid-swap rolls back or is repaired by the micro-batch
-    * replay. (The previous face overwrote in place behind an eager
-    * localCheckpoint — checkpoint blocks are not fault-tolerant, so a
-    * failure after the delete started could destroy the table.)
-    *
-    * Scale shape: this face rewrites the whole (fixture-sized) table per
-    * batch; [[upsertSinkPartitioned]] is the 100-TB face — same merge,
-    * date-partitioned store, only the partitions the batch's keys land
-    * in are read, merged, and swapped.
-    */
-  def upsertSink(stream: DataFrame, tableDir: String, keys: Seq[String],
-                 checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val target = new org.apache.hadoop.fs.Path(tableDir)
-        val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // a hard crash between swapInto's two renames leaves the table
-        // parked and the target missing; restore FIRST, or this replay
-        // would merge against a phantom empty table and the next swap's
-        // park cleanup would destroy the only surviving copy
-        graft.io.Store.recoverSwap(fs, target)
-        val existing =
-          if (fs.exists(target)) spark.read.parquet(tableDir)
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
-        val tmp = new org.apache.hadoop.fs.Path(target.getParent, s".tmp_${target.getName}")
-        graft.operators.Upsert.keepNewest(existing, batch.toDF(), keys)
-          .write.mode("overwrite").parquet(tmp.toString)
-        graft.io.Store.swapInto(fs, tmp, target)
-        ()
-      }
-      .start()
-
-  /** Partition-scoped streaming keep-newest upsert — [[upsertSink]]'s
-    * 100-TB face: the store is the date-partitioned parquet layout
-    * ([[graft.io.Store.writePartitioned]]'s `dt=` scheme), and each
-    * micro-batch reads, merges, and swaps ONLY the `dt=` partitions its
-    * keys land in. An untouched partition's files are never opened,
-    * rewritten, or moved (StreamingSpec pins byte-level file identity
-    * across a batch), so per-batch cost is O(touched days), not O(table).
-    *
-    * Correctness requires `dt` (the UTC day of `tsCol` — see
-    * [[graft.io.Store.utcDay]]) to be a FUNCTION of the merge key — i.e.
-    * `tsCol` must be one of `keys` (the reference's D1 call site keys on
-    * the datetime itself, so this holds there). If a
-    * key could move between partitions, a partition-scoped merge would
-    * leave its stale twin behind in a day the batch never read; the
-    * require fails loudly instead.
-    */
-  def upsertSinkPartitioned(stream: DataFrame, tableDir: String, keys: Seq[String],
-                            tsCol: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        upsertPartitions(batch.toDF(), tableDir, keys, tsCol)
-      }
-      .start()
-
-  /** The batch-side merge of [[upsertSinkPartitioned]] (public: it is the
-    * law StreamingSpec pins, and a batch backfill wants exactly this
-    * operation). Semantics: the stored table after the call equals
-    * [[graft.operators.Upsert.keepNewest]](stored, batch, keys) — proven
-    * as a spec law — but only the batch's own `dt=` partitions are listed,
-    * read and swapped (per-partition park-aside/rename, so a crash mid-swap
-    * never leaves partial data; a replay repairs any partially-applied
-    * batch because the merge is idempotent). Its metadata work does not
-    * grow with the number of stored days: one listing of the table root,
-    * then a read of the batch's day directories alone.
-    */
-  def upsertPartitions(batch: DataFrame, tableDir: String, keys: Seq[String],
-                       tsCol: String): Unit = {
-    require(keys.contains(tsCol),
-      s"partition-scoped upsert needs dt=utc_day($tsCol) to be a function of the merge key " +
-        s"(got keys=${keys.mkString(",")}) — otherwise a colliding key in another day's " +
-        "partition would survive as a stale twin")
-    val spark = batch.sparkSession
-    val target = new org.apache.hadoop.fs.Path(tableDir)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a crash between a day's two swap renames leaves that day parked and
-    // its dt= directory missing — restore every such day FIRST (one root
-    // listing), or the replay's read would see the day as empty and the
-    // re-swap's park cleanup would destroy the only surviving copy
-    val live = graft.io.Store.recoverPartitionSwaps(fs, target).toSet
-    // the touched-partition list is bounded by the batch's DISTINCT DAYS —
-    // a handful of rows on the driver, never the batch itself
-    val days = batch.select(graft.io.Store.utcDay(col(tsCol)).as("dt")).distinct()
-      .collect().map(_.getDate(0))
-    if (days.isEmpty) return
-    require(!days.contains(null),
-      s"upsertPartitions: null $tsCol cannot be partition-assigned — drop or key such rows upstream")
-    // only the batch's days that are stored are read, each by its own path
-    // (`basePath` keeps `dt` a partition column), so Spark lists those
-    // directories and never the others. None stored — a first write, or
-    // the empty root a crash right after mkdirs below leaves — reads nothing.
-    val stored = days.map(d => s"dt=$d").filter(live)
-    val existing =
-      if (stored.nonEmpty)
-        spark.read.option("basePath", tableDir)
-          .parquet(stored.map(n => new org.apache.hadoop.fs.Path(target, n).toString).toIndexedSeq: _*)
-          .drop("dt")
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
-    val merged = graft.operators.Upsert.keepNewest(existing, batch, keys)
-      .withColumn("dt", graft.io.Store.utcDay(col(tsCol)))
-    val tmp = new org.apache.hadoop.fs.Path(target.getParent, s".tmp_${target.getName}")
-    fs.delete(tmp, true)
-    // full merged write lands in tmp first (stored files still intact and
-    // readable by the merge plan during this job), then each touched day
-    // swaps independently — untouched days are never read or moved
-    merged.write.mode("overwrite").partitionBy("dt").parquet(tmp.toString)
-    fs.mkdirs(target)
-    days.foreach { d =>
-      graft.io.Store.swapInto(fs,
-        new org.apache.hadoop.fs.Path(tmp, s"dt=$d"),
-        new org.apache.hadoop.fs.Path(target, s"dt=$d"))
-    }
-    fs.delete(tmp, true)
-  }
 }

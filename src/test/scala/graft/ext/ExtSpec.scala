@@ -111,22 +111,27 @@ class DedupSpec extends AnyFunSuite {
     // Spark's BloomFilterAggregate clamps to the runtime-join-filter confs
     // (4M items / 67M bits by default); graft's BloomBuildAgg takes its
     // geometry as constructor values, so a build above those caps must
-    // come back full-size and merge with a same-geometry empty build —
+    // come back full-size, with the same geometry as an empty build —
     // with NO session confs touched (r9 inflated them around the build;
     // r10 removed that)
+    import org.apache.spark.util.sketch.BloomFilter
     val items = 5000000L // > the 4M default clamp
     val corpus = Seq((1L, "seen doc")).toDF("doc_id", "text")
     val built = Dedup.corpusBloom(corpus, expectedItems = items, fpp = 0.01)
     val emptyBf = Dedup.corpusBloom(
       Seq.empty[(Long, String)].toDF("doc_id", "text"),
       expectedItems = items, fpp = 0.01)
-    // pre-fix this threw IncompatibleMergeException (clamped vs unclamped)
-    val merged = Dedup.mergeBloom(built, emptyBf)
+    def filter(bf: Array[Byte]) = BloomFilter.readFrom(new java.io.ByteArrayInputStream(bf))
+    // the Bloom formula's bit count for the REQUESTED item count; a build
+    // clamped to 4M items would size for fewer bits
+    val wantBits = math.ceil(-items * math.log(0.01) / (math.log(2) * math.log(2))).toLong
+    assert(filter(built).bitSize() >= wantBits, s"bits=${filter(built).bitSize()} < $wantBits")
+    assert(filter(built).isCompatible(filter(emptyBf)), "clamped vs unclamped geometry")
     val probe = Seq((1L, "seen doc"), (2L, "never seen")).toDF("doc_id", "text")
     val out = probe.select(col("doc_id"),
-        Dedup.bloomMightContain(merged, col("text")).as("hit"))
+        Dedup.bloomMightContain(built, col("text")).as("hit"))
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    assert(out(1L), "merged filter lost the corpus doc")
+    assert(out(1L), "filter lost the corpus doc")
   }
 
   test("BloomBuildAgg: distributed build == single-threaded reference build, byte for byte") {
@@ -261,24 +266,6 @@ class DedupSpec extends AnyFunSuite {
     assert(TextStats.frequentSpans(empty, k = 3, minCount = 1).count() == 0L)
     val short = Seq((1L, "one two")).toDF("doc_id", "text") // < k words: no spans
     assert(TextStats.frequentSpans(short, k = 3, minCount = 1).count() == 0L)
-  }
-
-  test("mergeBloom: probing a merged sketch == probing the union-built sketch") {
-    val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
-    val c1 = docs.where(col("doc_id") % 3 === 0)
-    val c2 = docs.where(col("doc_id") % 3 === 1)
-    val merged = Dedup.mergeBloom(Dedup.corpusBloom(c1), Dedup.corpusBloom(c2))
-    val whole = Dedup.corpusBloom(c1.unionByName(c2))
-    val probes = docs.select("doc_id", "text")
-    def verdicts(bf: Array[Byte]) = probes
-      .select(col("doc_id"), Dedup.bloomMightContain(bf, col("text")).as("hit"))
-      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    assert(verdicts(merged) == verdicts(whole))
-    // and the merged sketch actually contains both halves
-    val got = verdicts(merged)
-    docs.select("doc_id").collect().map(_.getLong(0)).foreach { id =>
-      if (id % 3 != 2) assert(got(id), s"doc $id lost by merge")
-    }
   }
 
   test("bloomDedup: a true duplicate is NEVER kept, even with a tiny sketch") {
@@ -503,9 +490,9 @@ class SimSearchSpec extends AnyFunSuite {
 
     // the deployment path: index persisted bucketed by (tbl, bucket), so
     // query batches probe co-located buckets with no corpus re-hash
-    val store = new graft.io.Store(spark,
-      java.nio.file.Files.createTempDirectory("graft_lsh_idx").toString)
-    store.writeBucketed(idx, "lsh_idx", Seq("tbl", "bucket"), buckets = 8)
+    idx.write.mode("overwrite").bucketBy(8, "tbl", "bucket").sortBy("tbl", "bucket")
+      .option("path", java.nio.file.Files.createTempDirectory("graft_lsh_idx").toString)
+      .saveAsTable("lsh_idx")
     assert(asSet(SimSearch.lshTopKFromIndex(q, spark.table("lsh_idx"), k = 3)) == direct)
   }
 
@@ -515,9 +502,9 @@ class SimSearchSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     // corpus indexed yesterday; today's batch appended WITHOUT re-hashing it
     val base = java.nio.file.Files.createTempDirectory("graft_lsh_append").toString
-    val store = new graft.io.Store(spark, base)
-    store.writeBucketed(SimSearch.lshIndex(e.where(col("vec_id") >= 10)),
-      "lsh_idx_m", Seq("tbl", "bucket"), buckets = 8)
+    SimSearch.lshIndex(e.where(col("vec_id") >= 10)).write.mode("overwrite")
+      .bucketBy(8, "tbl", "bucket").sortBy("tbl", "bucket")
+      .option("path", s"$base/lsh_idx_m").saveAsTable("lsh_idx_m")
     // same bucket spec as the original write
     SimSearch.lshIndex(e.where(col("vec_id") < 10)).write.mode("append")
       .bucketBy(8, "tbl", "bucket").sortBy("tbl", "bucket")
@@ -588,9 +575,9 @@ class SimSearchSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val direct = asSet(SimSearch.ivfTopK(q, e, k = 3, nCells = 16, nProbe = 4))
     val (cells, centroids) = SimSearch.ivfIndex(e, nCells = 16)
-    val store = new graft.io.Store(spark,
-      java.nio.file.Files.createTempDirectory("graft_ivf_idx").toString)
-    store.writeBucketed(cells, "ivf_cells", Seq("cell"), buckets = 8)
+    cells.write.mode("overwrite").bucketBy(8, "cell").sortBy("cell")
+      .option("path", java.nio.file.Files.createTempDirectory("graft_ivf_idx").toString)
+      .saveAsTable("ivf_cells")
     assert(asSet(SimSearch.ivfTopKFromIndex(
       q, spark.table("ivf_cells"), centroids, k = 3, nProbe = 4)) == direct)
   }
@@ -602,10 +589,10 @@ class SimSearchSpec extends AnyFunSuite {
     def asSet(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val direct = asSet(SimSearch.quantizedTopK(q, e, k = 3))
-    val store = new graft.io.Store(spark,
-      java.nio.file.Files.createTempDirectory("graft_q_idx").toString)
-    store.writeBucketed(SimSearch.lshIndexQuantized(e), "q_idx", Seq("tbl", "bucket"),
-      buckets = 8)
+    SimSearch.lshIndexQuantized(e).write.mode("overwrite")
+      .bucketBy(8, "tbl", "bucket").sortBy("tbl", "bucket")
+      .option("path", java.nio.file.Files.createTempDirectory("graft_q_idx").toString)
+      .saveAsTable("q_idx")
     assert(asSet(SimSearch.quantizedTopKFromIndex(
       q, spark.table("q_idx"), e, k = 3)) == direct)
   }

@@ -320,4 +320,35 @@ class PartitionedManifestSpec extends AnyFunSuite {
     assert(stats.rowsInserted == 1L, stats)
     assert(store.readSnapshot("tbl").count() == 101)
   }
+
+  test("partition-day assignment is pinned to the UTC calendar, not the session timezone") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_pm_tz").toString
+    val store = new Store(spark, base)
+    def dayDirs(rel: String) = {
+      val dir = new org.apache.hadoop.fs.Path(s"$base/$rel")
+      dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(dir)
+        .map(_.getPath.getName).filter(_.startsWith("dt=")).toSet
+    }
+    // 2024-01-01T23:30Z — a near-midnight instant whose LOCAL date under a
+    // +14 session zone is already 2024-01-02
+    val nearMidnight = java.sql.Timestamp.from(java.time.Instant.parse("2024-01-01T23:30:00Z"))
+    def batch(v: String) = Seq((nearMidnight, v)).toDF("datetime", "v")
+    val prevTz = spark.conf.get("spark.sql.session.timeZone")
+    try {
+      spark.conf.set("spark.sql.session.timeZone", "Pacific/Kiritimati")
+      store.writePartitioned(batch("a1"), "plain")
+      store.writePartitionedManaged(batch("a1"), "replaced")
+      store.upsertPartitionsManaged(batch("a1"), "tbl")
+    } finally spark.conf.set("spark.sql.session.timeZone", prevTz)
+    // a replay under a DIFFERENT session zone maps the same key to the
+    // same partition and replaces it: no stale twin in another day
+    store.upsertPartitionsManaged(batch("a2"), "tbl")
+    val out = store.readSnapshot("tbl").select("datetime", "v").as[(java.sql.Timestamp, String)]
+      .collect().toSeq
+    assert(out == Seq(nearMidnight -> "a2"), s"stale twin survived: $out")
+    Seq("plain", "replaced", "tbl").foreach { rel =>
+      assert(dayDirs(rel) == Set("dt=2024-01-01"), s"$rel stored its key under the session-local day")
+    }
+  }
 }

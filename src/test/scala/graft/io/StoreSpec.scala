@@ -635,31 +635,4 @@ class StoreSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(p.contains("PushedFilters") && p.contains("IsNotNull(doc_id)"), p)
   }
-
-  test("bucketed tables: equi-join on the bucket key plans without a shuffle") {
-    val store = new Store(spark, Files.createTempDirectory("graft_bucket").toString)
-    val sf = "/root/testdata/sf0.001"
-    store.writeBucketed(Tables.lineitem(spark, sf), "li_bucketed", Seq("l_orderkey"), 8)
-    store.writeBucketed(
-      Tables.orders(spark, sf).withColumnRenamed("o_orderkey", "l_orderkey"),
-      "ord_bucketed", Seq("l_orderkey"), 8)
-
-    // force a non-broadcast join so bucketing is what saves the shuffle
-    // (at real scale neither side broadcasts anyway)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = spark.table("li_bucketed")
-        .join(spark.table("ord_bucketed"), Seq("l_orderkey"))
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"expected shuffle-free co-located join, got:\n$plan")
-      assert(plan.contains("SortMergeJoin"))
-      // and it is still correct
-      val expected = Tables.lineitem(spark, sf)
-        .join(Tables.orders(spark, sf).withColumnRenamed("o_orderkey", "l_orderkey"),
-          Seq("l_orderkey")).count()
-      assert(joined.count() == expected)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
 }

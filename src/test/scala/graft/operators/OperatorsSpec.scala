@@ -106,11 +106,12 @@ class AsofJoinSpec extends AnyFunSuite {
     assert(out.getDouble(0) == 1.0)
   }
 
-  test("backward / forward directions with tolerance") {
+  test("backward direction: latest right row at or before the left one wins") {
     val l = left("2024-01-01 10:00:00")
-    val r = right("2024-01-01 09:59:00" -> 1.0, "2024-01-01 10:01:00" -> 2.0)
+    // the later row is nearer, so only the direction picks the earlier one
+    val r = right("2024-01-01 09:58:00" -> 1.0, "2024-01-01 10:01:00" -> 2.0)
     assert(AsofJoin.backward(l, r, "t", 600L, Seq("id")).select("v").head().getDouble(0) == 1.0)
-    assert(AsofJoin.forward(l, r, "t", 600L, Seq("id")).select("v").head().getDouble(0) == 2.0)
+    assert(AsofJoin.nearest(l, r, "t", 600L, Seq("id")).select("v").head().getDouble(0) == 2.0)
   }
 
   test("left-total: null-key and null-`on` rows each come back once with a null match") {
@@ -120,7 +121,7 @@ class AsofJoinSpec extends AnyFunSuite {
       (Some(1L), at10), (Some(2L), None), (Some(3L), None),
       (None, at10), (None, at10), (None, None)).toDF("id", "t")
     val r = right("2024-01-01 10:00:00" -> 1.0)
-    for (asof <- Seq(AsofJoin.nearest _, AsofJoin.backward _, AsofJoin.forward _)) {
+    for (asof <- Seq(AsofJoin.nearest _, AsofJoin.backward _)) {
       val out = asof(l, r, "t", 1800L, Seq("id")).select("id", "t", "v").collect()
         .map(x => (Option(x.get(0)), Option(x.get(1)), Option(x.get(2)))).toSeq
       assert(out.size == 6, out)

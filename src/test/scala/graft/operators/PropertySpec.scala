@@ -61,11 +61,18 @@ class PropertySpec extends AnyFunSuite {
         if (corpusTexts.contains(t))
           assert(out(1000L + i) == "drop", s"seed=$seed: duplicate '$t' kept")
       }
-      // OR-merging per-half sketches answers exactly like the union build
+      // OR-merging per-half sketches (Spark's sketch codec, which the
+      // build emits) answers exactly like the union build
       val (c1, c2) = corpusTexts.splitAt(corpusTexts.size / 2)
       def bloom(ts: Seq[String]) = graft.ext.Dedup.corpusBloom(
         ts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text"))
-      val merged = graft.ext.Dedup.mergeBloom(bloom(c1), bloom(c2))
+      def filter(bf: Array[Byte]) = org.apache.spark.util.sketch.BloomFilter
+        .readFrom(new java.io.ByteArrayInputStream(bf))
+      val merged = {
+        val out = new java.io.ByteArrayOutputStream()
+        filter(bloom(c1)).mergeInPlace(filter(bloom(c2))).writeTo(out)
+        out.toByteArray
+      }
       val whole = bloom(corpusTexts)
       val probes = batch.select(col("doc_id"), col("text"))
       def hits(bf: Array[Byte]) = probes
@@ -172,7 +179,7 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("salted aggregate == plain aggregate; salted join == plain join") {
+  test("salted aggregate == plain aggregate") {
     val rows = Gen.listOfN(200, Gen.zip(Gen.frequency(3 -> Gen.const("hot"), 1 -> Gen.oneOf("a", "b")),
       Gen.choose(0, 100)))
     for (seed <- 1 to 3) {
@@ -183,14 +190,6 @@ class PropertySpec extends AnyFunSuite {
       val got = Skew.saltedCount(df, Seq("k"), salts = 8).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(got == expected)
-
-      val dim = Seq(("hot", "H"), ("a", "A"), ("b", "B"), ("unused", "U")).toDF("k", "name")
-      val plain = df.join(dim, Seq("k")).groupBy("k", "name").count().collect()
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-      val salted = Skew.saltedJoin(df, dim, Seq("k"), salts = 8)
-        .groupBy("k", "name").count().collect()
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-      assert(salted == plain)
     }
   }
 

@@ -334,105 +334,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streaming dedup keeps first arrival per key within the watermark") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, Timestamp, Double)]
-    val df = input.toDF().toDF("event_id", "ts", "value")
-    val q = EventStreams.dedupByKey(df)
-      .writeStream.outputMode("append").format("memory").queryName("dedup_out").start()
-    try {
-      input.addData((1L, ts("2024-01-01 10:00:00"), 1.0), (2L, ts("2024-01-01 10:01:00"), 2.0))
-      q.processAllAvailable()
-      input.addData((1L, ts("2024-01-01 10:02:00"), 99.0)) // duplicate key, later arrival
-      q.processAllAvailable()
-      val out = spark.table("dedup_out").collect()
-        .map(r => r.getLong(0) -> r.getDouble(2)).toMap
-      assert(out == Map(1L -> 1.0, 2L -> 2.0)) // first arrival won
-    } finally q.stop()
-  }
-
-  test("streaming upsert sink: newest replaces on key collision across micro-batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft_upsert_sink").toString
-    val input = MemoryStream[(Long, String)]
-    val q = EventStreams.upsertSink(input.toDF().toDF("k", "v"),
-      s"$dir/table", Seq("k"), s"$dir/ckpt")
-    try {
-      input.addData((1L, "a1"), (2L, "b1"))
-      q.processAllAvailable()
-      // batch 2 collides on key 2 and inserts key 3
-      input.addData((2L, "b2"), (3L, "c1"))
-      q.processAllAvailable()
-      val out = spark.read.parquet(s"$dir/table").collect()
-        .map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(out == Map(1L -> "a1", 2L -> "b2", 3L -> "c1"))
-      // the merge is a table-state operation: re-upserting the same rows
-      // (a checkpoint-recovery replay) must change nothing
-      input.addData((2L, "b2"), (3L, "c1"))
-      q.processAllAvailable()
-      val again = spark.read.parquet(s"$dir/table").collect()
-        .map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(again == out)
-    } finally q.stop()
-  }
-
-  test("partition-scoped upsert sink: merges like full-table keep-newest, never touches other days' files") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft_upsert_part").toString
-    val table = s"$dir/table"
-    def fileAudit(day: String): Set[(String, Long, Long)] = {
-      val d = new java.io.File(s"$table/dt=$day")
-      d.listFiles().filter(_.isFile).filterNot(_.getName.startsWith("."))
-        .map(f => (f.getName, f.length(), f.lastModified())).toSet
-    }
-    val input = MemoryStream[(Timestamp, String)]
-    val q = EventStreams.upsertSinkPartitioned(input.toDF().toDF("ts", "v"),
-      table, keys = Seq("ts"), tsCol = "ts", checkpointDir = s"$dir/ckpt")
-    try {
-      val b1 = Seq((ts("2024-01-01 10:00:00"), "a1"), (ts("2024-01-02 11:00:00"), "b1"))
-      val b2 = Seq((ts("2024-01-02 11:00:00"), "b2"), (ts("2024-01-02 12:00:00"), "c1"))
-      input.addData(b1: _*)
-      q.processAllAvailable()
-      val day1Before = fileAudit("2024-01-01")
-      assert(day1Before.nonEmpty)
-      // batch 2 lands entirely in dt=2024-01-02: collides on 11:00, inserts 12:00
-      input.addData(b2: _*)
-      q.processAllAvailable()
-      // LAW 1 (the point of the face): the untouched partition's files are
-      // byte-identical — same names, sizes, and mtimes; nothing rewrote them
-      assert(fileAudit("2024-01-01") == day1Before,
-        s"untouched dt=2024-01-01 was rewritten:\nbefore=$day1Before\nafter=${fileAudit("2024-01-01")}")
-      // LAW 2: table content equals the full-table keep-newest over the
-      // same batch sequence
-      val expected = graft.operators.Upsert.keepNewest(
-          b1.toDF("ts", "v"), b2.toDF("ts", "v"), Seq("ts"))
-        .collect().map(r => r.getTimestamp(0) -> r.getString(1)).toMap
-      def tableNow() = spark.read.parquet(table).drop("dt").collect()
-        .map(r => r.getTimestamp(0) -> r.getString(1)).toMap
-      assert(tableNow() == expected)
-      assert(expected(ts("2024-01-02 11:00:00")) == "b2") // newest won
-      // LAW 3: a checkpoint-recovery replay of batch 2 changes nothing —
-      // including, again, the untouched partition's files
-      input.addData(b2: _*)
-      q.processAllAvailable()
-      assert(tableNow() == expected)
-      assert(fileAudit("2024-01-01") == day1Before)
-    } finally q.stop()
-  }
-
-  test("partition-scoped upsert refuses a key set the partition is not a function of") {
-    import spark.implicits._
-    val err = intercept[IllegalArgumentException] {
-      EventStreams.upsertPartitions(
-        Seq((ts("2024-01-01 10:00:00"), 1L, "a")).toDF("ts", "k", "v"),
-        "/tmp/unused", keys = Seq("k"), tsCol = "ts")
-    }
-    assert(err.getMessage.contains("function of the merge key"))
-  }
-
   test("stream-stream interval join: in-window pairs emit, out-of-window don't, batch agrees") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -473,27 +374,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streaming incremental dedup: corpus hits and within-stream repeats both drop") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val corpus = Seq((100L, "existing corpus document text")).toDF("doc_id", "text")
-    val input = MemoryStream[(Long, Timestamp, String)]
-    val q = EventStreams.dedupAgainstCorpus(
-        input.toDF().toDF("doc_id", "ts", "text"), corpus)
-      .writeStream.outputMode("append").format("memory").queryName("inc_dedup_out").start()
-    try {
-      input.addData(
-        (1L, ts("2024-01-01 10:00:00"), "existing corpus document text"), // corpus hit
-        (2L, ts("2024-01-01 10:01:00"), "a brand new document"))          // kept
-      q.processAllAvailable()
-      input.addData(
-        (3L, ts("2024-01-01 10:02:00"), "a brand new document"))          // stream repeat
-      q.processAllAvailable()
-      val out = spark.table("inc_dedup_out").collect().map(_.getLong(0)).toSet
-      assert(out == Set(2L)) // corpus duplicate and stream duplicate both dropped
-    } finally q.stop()
-  }
-
   test("streaming sketch dedup: bloom corpus hits and within-stream repeats both drop") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -513,159 +393,6 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()
       val out = spark.table("sketch_dedup_out").collect().map(_.getLong(0)).toSet
       assert(out == Set(2L))
-    } finally q.stop()
-  }
-
-  test("streaming curation: repetitive, corpus-dup, and cleaned-repeat docs drop; fresh prose keeps") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val corpus = Seq((100L, "an existing corpus document about energy markets"))
-      .toDF("doc_id", "text")
-    val input = MemoryStream[(Long, Timestamp, String)]
-    val q = EventStreams.curateStream(input.toDF().toDF("doc_id", "ts", "text"), corpus)
-      .writeStream.outputMode("append").format("memory").queryName("curate_out").start()
-    try {
-      input.addData(
-        (1L, ts("2024-01-01 10:00:00"), "a fresh document with http://x.io/a links and unique prose here"),
-        (2L, ts("2024-01-01 10:01:00"), "an existing corpus document about energy markets"), // corpus dup
-        (3L, ts("2024-01-01 10:02:00"), "spam spam spam spam spam spam spam spam spam spam")) // repetitive
-      q.processAllAvailable()
-      // doc 4 differs from doc 1 only by URL — the dedup tier keys on the
-      // CLEANED text, so it drops as a within-stream repeat
-      input.addData(
-        (4L, ts("2024-01-01 10:03:00"), "a fresh document with http://y.io/b links and unique prose here"))
-      q.processAllAvailable()
-      val rows = spark.table("curate_out").collect()
-      assert(rows.map(r => r.getLong(r.fieldIndex("doc_id"))).toSet == Set(1L))
-      val kept = rows.head
-      assert(kept.getString(kept.fieldIndex("clean_text"))
-        == "a fresh document with <URL> links and unique prose here")
-      assert(kept.getLong(kept.fieldIndex("n_urls")) == 1L)
-      // the stateless stage is the SAME function on a batch frame
-      val batch = EventStreams.repetitionFiltered(Seq(
-        (1L, "a fresh document with http://x.io/a links and unique prose here"),
-        (3L, "spam spam spam spam spam spam spam spam spam spam")).toDF("doc_id", "text"))
-      assert(batch.select("doc_id").collect().map(_.getLong(0)).toSeq == Seq(1L))
-    } finally q.stop()
-  }
-
-  test("streaming and batch sessionization agree on the same events") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val events = Seq(
-      (7L, ts("2024-01-01 09:00:00"), 1.0), (7L, ts("2024-01-01 09:10:00"), 2.0),
-      (7L, ts("2024-01-01 11:00:00"), 5.0), // > 30 min gap -> second session
-      (8L, ts("2024-01-01 09:05:00"), 4.0))
-
-    val input = MemoryStream[(Long, Timestamp, Double)]
-    val q = EventStreams.sessionize(
-        input.toDF().toDF("user_id", "ts", "value"), gapMinutes = 30)
-      .writeStream.outputMode("append").format("memory").queryName("sess_parity").start()
-    val streamed = try {
-      input.addData(events: _*)
-      q.processAllAvailable()
-      // far-future sentinel pushes the watermark past every gap deadline,
-      // timing out (= closing) all real sessions
-      input.addData((999L, ts("2024-01-02 00:00:00"), 0.0))
-      q.processAllAvailable()
-      spark.table("sess_parity").as[EventStreams.Session].collect()
-        .filter(_.userId != 999L)
-        .map(s => (s.userId, s.nEvents, s.startTs, s.endTs)).toSet
-    } finally q.stop()
-
-    val batch = graft.operators.Sessionize.sessions(
-        events.toDF("user_id", "ts", "value"), "user_id", "ts", 1800L)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(2), r.getTimestamp(3), r.getTimestamp(4))).toSet
-    assert(streamed == batch, s"streamed=$streamed batch=$batch")
-    assert(batch.size == 3) // u7 x2 sessions + u8 x1
-  }
-
-  test("sessionization: gap splits sessions, state emits closed ones") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, Timestamp, Double)]
-    val q = EventStreams.sessionize(
-        input.toDF().toDF("user_id", "ts", "value"), gapMinutes = 30)
-      .writeStream.outputMode("append").format("memory").queryName("sess_out").start()
-    try {
-      // user 7: two bursts 2 hours apart -> first session closes when the
-      // second burst arrives
-      input.addData((7L, ts("2024-01-01 09:00:00"), 1.0), (7L, ts("2024-01-01 09:10:00"), 2.0))
-      q.processAllAvailable()
-      input.addData((7L, ts("2024-01-01 11:00:00"), 5.0))
-      q.processAllAvailable()
-      val out = spark.table("sess_out").as[EventStreams.Session].collect()
-      assert(out.length == 1)
-      assert(out(0).userId == 7L && out(0).nEvents == 2 && out(0).totalValue == 3.0)
-      assert(out(0).startTs == ts("2024-01-01 09:00:00") && out(0).endTs == ts("2024-01-01 09:10:00"))
-    } finally q.stop()
-  }
-
-  test("sessionization: a stray late event beyond the gap becomes its own session") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, Timestamp, Double)]
-    val q = EventStreams.sessionize(
-        input.toDF().toDF("user_id", "ts", "value"),
-        gapMinutes = 30, watermarkDelay = "2 hours")
-      .writeStream.outputMode("append").format("memory").queryName("sess_stray").start()
-    try {
-      input.addData((7L, ts("2024-01-01 12:00:00"), 1.0))
-      q.processAllAvailable()
-      // 45 minutes BEFORE the open session's start (> gap): batch
-      // semantics put it in its own session — the old min/max merge would
-      // weld one session spanning a 45-minute internal gap
-      input.addData((7L, ts("2024-01-01 11:15:00"), 2.0))
-      q.processAllAvailable()
-      input.addData((7L, ts("2024-01-01 12:10:00"), 4.0))
-      q.processAllAvailable()
-      input.addData((999L, ts("2024-01-03 00:00:00"), 0.0)) // close via timeout
-      q.processAllAvailable()
-      val out = spark.table("sess_stray").as[EventStreams.Session].collect()
-        .filter(_.userId == 7L).sortBy(_.startTs.getTime)
-      assert(out.length == 2, s"expected stray singleton + main session: ${out.toSeq}")
-      assert(out(0).nEvents == 1 && out(0).startTs == ts("2024-01-01 11:15:00"))
-      assert(out(1).nEvents == 2 &&
-        out(1).startTs == ts("2024-01-01 12:00:00") &&
-        out(1).endTs == ts("2024-01-01 12:10:00"))
-      // batch agreement on the same event multiset
-      val batch = graft.operators.Sessionize.sessions(
-        Seq((7L, ts("2024-01-01 12:00:00"), 1.0), (7L, ts("2024-01-01 11:15:00"), 2.0),
-            (7L, ts("2024-01-01 12:10:00"), 4.0)).toDF("user_id", "ts", "value"),
-        "user_id", "ts", 1800L)
-      assert(batch.count() == 2)
-    } finally q.stop()
-  }
-
-  test("sessionization: a cross-batch late event extends the session, never rewinds it") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, Timestamp, Double)]
-    // generous watermark so the late event is admitted, not dropped
-    val q = EventStreams.sessionize(
-        input.toDF().toDF("user_id", "ts", "value"),
-        gapMinutes = 30, watermarkDelay = "1 hour")
-      .writeStream.outputMode("append").format("memory").queryName("sess_late").start()
-    try {
-      input.addData((7L, ts("2024-01-01 12:00:00"), 1.0))
-      q.processAllAvailable()
-      // a LATE event, older than the session's last event but inside the
-      // watermark: with the old blind lastMs assignment this rewound the
-      // session end to 11:55, so the 12:27 event (true gap 27 min) read a
-      // 32-minute gap and wrongly split the session in two
-      input.addData((7L, ts("2024-01-01 11:55:00"), 2.0))
-      q.processAllAvailable()
-      input.addData((7L, ts("2024-01-01 12:27:00"), 4.0))
-      q.processAllAvailable()
-      input.addData((999L, ts("2024-01-03 00:00:00"), 0.0)) // close via timeout
-      q.processAllAvailable()
-      val out = spark.table("sess_late").as[EventStreams.Session].collect()
-        .filter(_.userId == 7L)
-      assert(out.length == 1, s"late event split the session: ${out.toSeq}")
-      assert(out(0).nEvents == 3 && out(0).totalValue == 7.0)
-      assert(out(0).startTs == ts("2024-01-01 11:55:00") &&
-        out(0).endTs == ts("2024-01-01 12:27:00"))
     } finally q.stop()
   }
 
@@ -744,95 +471,5 @@ class StreamingSpec extends AnyFunSuite {
     val batch = graft.operators.AsofJoin.nearest(events, static, "t", 900L, Seq("event_id"))
       .collect().map(r => r.getLong(0) -> (if (r.isNullAt(2)) -1.0 else r.getDouble(2))).toMap
     assert(batch == got, s"NTZ stream face diverged from batch: $batch vs $got")
-  }
-
-  test("upsert replay after a crash mid-swap restores the parked table instead of losing it") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_upsert_crash").toString
-    val table = s"$dir/table"
-    val b1 = Seq((ts("2024-01-01 10:00:00"), "a1"), (ts("2024-01-01 11:00:00"), "b1"),
-      (ts("2024-01-02 09:00:00"), "c1")).toDF("ts", "v")
-    EventStreams.upsertPartitions(b1, table, keys = Seq("ts"), tsCol = "ts")
-    // simulate a hard crash between swapInto's two renames on day 1: the
-    // day is parked under the dot prefix and its dt= directory is missing
-    val fs = new org.apache.hadoop.fs.Path(table)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val day1 = new org.apache.hadoop.fs.Path(table, "dt=2024-01-01")
-    val parked = new org.apache.hadoop.fs.Path(table, ".old_dt=2024-01-01")
-    assert(fs.rename(day1, parked) && !fs.exists(day1))
-    // the replaying batch touches day 1 with ONE of its two keys: before
-    // the recovery fix this merge read the missing day as empty and the
-    // swap's park cleanup destroyed 11:00's row for good
-    val b2 = Seq((ts("2024-01-01 10:00:00"), "a2")).toDF("ts", "v")
-    EventStreams.upsertPartitions(b2, table, keys = Seq("ts"), tsCol = "ts")
-    val out = spark.read.parquet(table).drop("dt").collect()
-      .map(r => r.getTimestamp(0) -> r.getString(1)).toMap
-    assert(out == Map(ts("2024-01-01 10:00:00") -> "a2",
-      ts("2024-01-01 11:00:00") -> "b1", ts("2024-01-02 09:00:00") -> "c1"),
-      s"rows lost across crash replay: $out")
-    assert(!fs.exists(parked))
-  }
-
-  test("upsert against an existing-but-empty table dir (crash before first swap) proceeds as first write") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_upsert_emptydir").toString
-    val table = s"$dir/table"
-    val fs = new org.apache.hadoop.fs.Path(table)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(table)) // the mkdirs-then-crash leftover
-    val b = Seq((ts("2024-01-01 10:00:00"), "a1")).toDF("ts", "v")
-    EventStreams.upsertPartitions(b, table, keys = Seq("ts"), tsCol = "ts")
-    val out = spark.read.parquet(table).drop("dt").collect()
-      .map(r => r.getTimestamp(0) -> r.getString(1)).toMap
-    assert(out == Map(ts("2024-01-01 10:00:00") -> "a1"))
-  }
-
-  test("a partition-scoped upsert batch lists the same with 3 or 12 days stored") {
-    // only the batch's own days are listed and read: a read of the whole
-    // table would list every stored dt= directory
-    import spark.implicits._
-    graft.io.ListingCountingFs.register(spark)
-    def batchListings(storedDays: Int): Int = {
-      val table = s"countfs://${Files.createTempDirectory("graft_upsert_listing")}/table"
-      val history = (1 to storedDays).map(d => (ts(f"2024-01-$d%02d 10:00:00"), s"a$d"))
-      EventStreams.upsertPartitions(history.toDF("ts", "v"), table, keys = Seq("ts"), tsCol = "ts")
-      graft.io.ListingCountingFs.clear()
-      EventStreams.upsertPartitions(Seq((ts("2024-01-02 10:00:00"), "b2")).toDF("ts", "v"),
-        table, keys = Seq("ts"), tsCol = "ts")
-      val listed = graft.io.ListingCountingFs.listed.size
-      val out = spark.read.parquet(table).drop("dt").collect()
-        .map(r => r.getTimestamp(0) -> r.getString(1)).toMap
-      assert(out == history.toMap + (ts("2024-01-02 10:00:00") -> "b2"))
-      listed
-    }
-    val (at3, at12) = (batchListings(3), batchListings(12))
-    assert(at3 == at12, s"listings per batch: $at3 with 3 days stored, $at12 with 12")
-  }
-
-  test("partition-day assignment is pinned to the UTC calendar, not the session timezone") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_upsert_tz").toString
-    val table = s"$dir/table"
-    // 2024-01-01T23:30Z — a near-midnight instant whose LOCAL date under a
-    // +14 session zone is already 2024-01-02
-    val nearMidnight = Timestamp.from(java.time.Instant.parse("2024-01-01T23:30:00Z"))
-    val prevTz = spark.conf.get("spark.sql.session.timeZone")
-    try {
-      spark.conf.set("spark.sql.session.timeZone", "Pacific/Kiritimati")
-      EventStreams.upsertPartitions(Seq((nearMidnight, "a1")).toDF("ts", "v"),
-        table, keys = Seq("ts"), tsCol = "ts")
-    } finally spark.conf.set("spark.sql.session.timeZone", prevTz)
-    val fs = new org.apache.hadoop.fs.Path(table)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(table, "dt=2024-01-01")),
-      "key stored under its session-local day — a TZ-drifted replay would leave a stale twin")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(table, "dt=2024-01-02")))
-    // a replay under a DIFFERENT session zone maps the same key to the
-    // same partition — the run-invariance the merge depends on
-    EventStreams.upsertPartitions(Seq((nearMidnight, "a2")).toDF("ts", "v"),
-      table, keys = Seq("ts"), tsCol = "ts")
-    val out = spark.read.parquet(table).drop("dt").collect()
-      .map(r => r.getTimestamp(0) -> r.getString(1)).toMap
-    assert(out == Map(nearMidnight -> "a2"), s"stale twin survived: $out")
   }
 }
