@@ -536,8 +536,10 @@ private[graft] object ScopedCommit {
 
   /** Replay (or clean up) every interrupted scoped commit under `dir`.
     * Returns true when a journaled commit was driven to completion.
-    * Called on entry by every layout mutator (append/recluster/scoped) —
-    * the same discipline as [[Store.recoverSwap]] for whole-dir swaps.
+    * Called on entry by every lakehouse entry point, reads included
+    * (most through Store's `recoverAndRead`): the journal is the only commit protocol
+    * of a table's data files, whole-table rewrites included, so this is
+    * the only crash recovery a table needs.
     * More than one marker can coexist briefly (a fully-applied journal
     * whose laggard writer has not yet deleted its own file, beside a
     * successor's pending one); replay of an applied journal is a pure

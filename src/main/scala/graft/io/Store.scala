@@ -198,9 +198,7 @@ class Store(spark: SparkSession, baseDir: String) {
   def writePartitionedManaged(df: DataFrame, rel: String,
                               tsCol: String = "datetime"): Unit = {
     val dir = new Path(s"$baseDir/$rel")
-    Store.recoverSwap(fs, dir)
-    if (fs.exists(dir)) ScopedCommit.recover(fs, dir)
-    val m0 = LayoutManifest.read(fs, dir)
+    val m0 = recoverAndRead(dir)
     val epoch = m0.map(_.epoch + 1).getOrElse(0L)
     withEpochClaim(dir, epoch, m0.map(_.epoch).getOrElse(-1L)) {
       val current = if (fs.exists(dir)) listDataFilesDeep(dir) else Nil
@@ -267,9 +265,7 @@ class Store(spark: SparkSession, baseDir: String) {
   private def upsertPartitionsOnce(df: DataFrame, rel: String,
                                    tsCol: String): Unit = {
     val dir = new Path(s"$baseDir/$rel")
-    Store.recoverSwap(fs, dir)
-    if (fs.exists(dir)) ScopedCommit.recover(fs, dir)
-    val m0 = LayoutManifest.read(fs, dir)
+    val m0 = recoverAndRead(dir)
     // fail-first: a curve-clustered manifest must abort BEFORE any motion
     m0.foreach(mf => require(mf.isPartitioned,
       s"$rel is curve-clustered (zcols=${mf.zCols.mkString(",")}) — " +
@@ -354,9 +350,7 @@ class Store(spark: SparkSession, baseDir: String) {
   def addColumns(rel: String, cols: StructType): Unit = {
     require(cols.nonEmpty, "addColumns needs at least one new column")
     val dir = new Path(s"$baseDir/$rel")
-    Store.recoverSwap(fs, dir)
-    ScopedCommit.recover(fs, dir)
-    val m0 = LayoutManifest.read(fs, dir).getOrElse(throw new IllegalStateException(
+    val m0 = recoverAndRead(dir).getOrElse(throw new IllegalStateException(
       s"$rel has no layout manifest — schema evolution needs a manifest-tracked " +
         "store (writeZordered/writePartitionedManaged provenance)"))
     cols.foreach(f => require(f.nullable,
@@ -449,9 +443,23 @@ class Store(spark: SparkSession, baseDir: String) {
   def writeZordered(df: DataFrame, rel: String, zCols: Seq[String],
                     files: Int = 8, bits: Int = 6): Unit = {
     val dir = new Path(s"$baseDir/$rel")
-    Store.recoverSwap(fs, dir)
-    if (fs.exists(dir)) ScopedCommit.recover(fs, dir)
-    val m0 = LayoutManifest.read(fs, dir)
+    // the replace DEFINES the table's declared schema (an evolved wider
+    // schema from a prior life is gone — this epoch's content is df)
+    replaceZordered(dir, recoverAndRead(dir), df, zCols, files, bits,
+      Some(Store.nullableSchemaJson(df.schema)))
+  }
+
+  /** The one commit path of a whole-table rewrite, shared by
+    * [[writeZordered]] and [[recluster]]: `src`, laid out on the curve,
+    * replaces every data file of `dir` as the epoch after `m0`, recording
+    * `schemaJson` as the declared schema. `m0` is the manifest the caller
+    * read, and `src` must be read at that epoch: the claim checks it, so
+    * a commit landing after that read fails this write loudly instead of
+    * being overwritten by a stale frame.
+    */
+  private def replaceZordered(dir: Path, m0: Option[LayoutManifest], src: DataFrame,
+                              zCols: Seq[String], files: Int, bits: Int,
+                              schemaJson: Option[String]): Unit = {
     // The replace-table write runs under the SAME epoch CAS as every other
     // mutator, and it NEVER hands the table directory to a Spark overwrite
     // (which would delete the hidden history/retired dirs and any live
@@ -467,36 +475,34 @@ class Store(spark: SparkSession, baseDir: String) {
     // another, wedging the table behind an unreleasable claim
     val epoch = m0.map(_.epoch + 1).getOrElse(0L)
     withEpochClaim(dir, epoch, m0.map(_.epoch).getOrElse(-1L)) {
-      // DEEP listing for the replace set: a manifest-less target may be a
-      // dt-partitioned table, whose data lives under key= subdirs — a
-      // top-level-only delete would leave the old partitions' rows visible
-      // beside the new layout (manifest-tracked tables are flat, so the
-      // deep listing returns exactly the flat names there)
+      // DEEP listing for the replace set: the target may be partitioned
+      // (a plain dt= table, or a managed partitioned store reshaping into
+      // the curve), its data under key= subdirs — a top-level-only replace
+      // would leave the old partitions' rows visible beside the new layout
+      // (curve tables are flat; the deep walk returns their flat names)
       val current = if (fs.exists(dir)) listDataFilesDeep(dir) else Nil
       val tmp = ScopedCommit.newStageDir(dir)
       ScopedCommit.sweepStages(fs, dir)
       labeled(s"z-order replace write ${dir.getName}")(
-        zorderStage(df, zCols, files, bits).write.mode("overwrite").parquet(tmp.toString))
+        zorderStage(src, zCols, files, bits).write.mode("overwrite").parquet(tmp.toString))
       val staged = listDataFiles(tmp)
       val renames = staged.map(s => s -> s"part-w$epoch-${s.stripPrefix("part-")}")
-      // the replace DEFINES the table's declared schema (an evolved wider
-      // schema from a prior life is gone — this epoch's content is df)
       val newM = LayoutManifest(zCols, bits, files, epoch,
-        base = renames.map(_._2).sorted, appends = Nil,
-        schemaJson = Some(Store.nullableSchemaJson(df.schema)))
+        base = renames.map(_._2).sorted, appends = Nil, schemaJson = schemaJson)
       // replay from the lines just written, NOT a marker re-read: a
       // reader-driven recover racing this commit may finish the replay and
       // delete the marker first (replay itself is concurrent-replayer-safe)
       ScopedCommit.replay(fs, dir, ScopedCommit.write(fs, dir, renames,
         deletes = if (m0.isDefined) Nil else current, manifest = Some(newM),
         retires = if (m0.isDefined) current else Nil, stage = tmp))
-      // a replace of a partitioned dir leaves its key= dirs empty — dead
-      // weight on a now-flat table, so prune them BOTTOM-UP to the table
-      // root (a multi-level a=1/b=2 layout must not strand empty a=1
-      // skeletons after their b= children go). COW deletes keep a fully
-      // emptied partition's dir deliberately: its catalog partition entry
-      // stays valid at zero files. Non-recursive delete: a dir a
-      // concurrent writer raced a file into simply stays.
+      // a replace of a manifest-less partitioned dir leaves its key= dirs
+      // empty (a tracked one's hold the retired files its prior epochs
+      // read) — dead weight on a now-flat table, so prune them BOTTOM-UP
+      // to the table root (a multi-level a=1/b=2 layout must not strand
+      // empty a=1 skeletons after their b= children go). COW deletes keep
+      // a fully emptied partition's dir deliberately: its catalog
+      // partition entry stays valid at zero files. Non-recursive delete:
+      // a dir a concurrent writer raced a file into simply stays.
       current.filter(_.contains('/'))
         .map(n => new Path(dir, n.substring(0, n.lastIndexOf('/'))))
         .distinct
@@ -678,18 +684,11 @@ class Store(spark: SparkSession, baseDir: String) {
 
   private def appendZorderedOnce(df: DataFrame, rel: String, zCols: Seq[String],
                                  files: Int, bits: Int): Unit = {
-    // A recluster interrupted between swapInto's two renames parks the
-    // table with the target missing. Appending into that hole would
-    // recreate the target, making later recovery read the parked pre-crash
-    // table as a STALE leftover and delete it — silent loss of everything
-    // but this batch. Restore first; append on top of the real table.
     val dir = new Path(s"$baseDir/$rel")
-    Store.recoverSwap(fs, dir)
-    // likewise finish any interrupted scoped commit before listing
-    if (fs.exists(dir)) ScopedCommit.recover(fs, dir)
-    // fail-first: a layout mismatch must abort BEFORE the physical append,
-    // or wrong-curve rows would already be visible with no rollback
-    val m0 = LayoutManifest.read(fs, dir)
+    // finish any interrupted journaled commit before listing. Fail-first:
+    // a layout mismatch must abort BEFORE the physical append, or
+    // wrong-curve rows would already be visible with no rollback
+    val m0 = recoverAndRead(dir)
     m0.foreach(mf => require(mf.zCols == zCols && mf.bits == bits,
       s"append layout (${zCols.mkString(",")}/bits=$bits) does not match " +
         s"the table manifest (${mf.zCols.mkString(",")}/bits=${mf.bits})"))
@@ -887,82 +886,32 @@ class Store(spark: SparkSession, baseDir: String) {
     }
   }
 
-  /** Restore a clustered/z-ordered table's layout after appends: one full
-    * re-sort into `files` fresh files, swapped in atomically with the
-    * park-aside/rename discipline ([[Store.swapInto]], crash-recovered by
-    * [[Store.recoverSwap]]).
+  /** Restore a z-ordered table's layout after appends: one full re-sort
+    * into `files` fresh files, committed as a z-order replace write
+    * ([[writeZordered]]'s journaled commit). Every current file retires,
+    * so prior epochs stay readable until vacuum; a table without a
+    * manifest is adopted at epoch 0, exactly as [[writeZordered]] adopts
+    * it. Layout parameters may change here, and a managed partitioned
+    * store reshapes into a curve layout with its partition column kept
+    * as data. One column is [[writeClustered]]'s layout, not a curve.
     * At 100 TB this is the amortized OPTIMIZE pass — its range exchange
     * costs one table rewrite and every later scan's skipping pays it
     * back; schedule it by appended-bytes fraction, not per batch.
     */
   def recluster(rel: String, zCols: Seq[String], files: Int = 8,
                 bits: Int = 6): Unit = {
-    val target = new Path(s"$baseDir/$rel")
-    Store.recoverSwap(fs, target)
-    ScopedCommit.recover(fs, target) // finish an interrupted scoped pass first
-    val m0 = LayoutManifest.read(fs, target)
-    if (m0.isDefined && zCols.size >= 2) {
-      // manifest-tracked table: full rewrite through the JOURNALED commit
-      // instead of the directory swap — the hidden history/retired dirs
-      // stay in place (a swap would discard every prior epoch), every
-      // current file is retired rather than deleted, and the one-rename
-      // window where the table path does not exist disappears. This is
-      // scopedRecluster with the whole table as the region; layout
-      // parameters (columns/bits/files) may change here.
-      val m = m0.get
-      withEpochClaim(target, m.epoch + 1, m.epoch) {
-        // DEEP listing: a managed PARTITIONED store reshaping into a curve
-        // layout keeps its data under `key=value/` dirs — a top-level-only
-        // replace set would leave every old partition's rows visible
-        // beside the new layout (curve manifests are flat; the deep walk
-        // returns exactly their flat names)
-        val current = listDataFilesDeep(target)
-        val tmp = ScopedCommit.newStageDir(target)
-        ScopedCommit.sweepStages(fs, target)
-        // the evolved reader matters doubly here: a reshape of a
-        // PARTITIONED store must keep its partition column as data, and
-        // an evolved table's added columns must survive the rewrite
-        val src =
-          if (m.isPartitioned)
-            evolvedReader(m0).option("basePath", target.toString)
-              .parquet(current.map(n => s"$target/$n"): _*)
-          else evolvedReader(m0).parquet(target.toString)
-        zorderStage(src, zCols, files, bits)
-          .write.mode("overwrite").parquet(tmp.toString)
-        val staged = listDataFiles(tmp)
-        val epoch = m.epoch + 1
-        val renames = staged.map(s => s -> s"part-s$epoch-${s.stripPrefix("part-")}")
-        val newM = LayoutManifest(zCols, bits, files, epoch,
-          base = renames.map(_._2).sorted, appends = Nil, schemaJson = m.schemaJson)
-        ScopedCommit.replay(fs, target, ScopedCommit.write(fs, target, renames,
-          deletes = Nil, manifest = Some(newM), retires = current, stage = tmp))
-      }
-      refreshCatalog(target)
-      return
-    }
-    // tmp is a SIBLING of the leaf (writeCsv's discipline), so a nested
-    // rel stays inside its parent directory
-    val tmp = new Path(target.getParent, s".tmp_${target.getName}")
-    fs.delete(tmp, true)
-    val staged =
-      if (zCols.size >= 2)
-        zorderStage(evolvedReader(m0).parquet(target.toString), zCols, files, bits)
-      else
-        evolvedReader(m0).parquet(target.toString)
-          .repartitionByRange(files, zCols.map(col): _*)
-          .sortWithinPartitions(zCols.map(col): _*)
-    // the read is lazy but executes fully during the tmp write, while the
-    // target is still intact; only after tmp is complete does the swap run
-    staged.write.mode("overwrite").parquet(tmp.toString)
-    Store.swapInto(fs, tmp, target)
-    // every surviving file is freshly laid out, so reset provenance to
-    // all-base; a swap discards hidden dirs, so history restarts at v0
-    // (manifest-less input had no history to keep)
-    if (zCols.size >= 2)
-      LayoutManifest.write(fs, target,
-        LayoutManifest(zCols, bits, files, epoch = 0L,
-          base = listDataFiles(target), appends = Nil))
-    refreshCatalog(target)
+    val dir = new Path(s"$baseDir/$rel")
+    val m0 = recoverAndRead(dir)
+    // the frame is read at m0's epoch, the one the replace's claim checks.
+    // The evolved reader matters doubly here: a reshape of a PARTITIONED
+    // store must keep its partition column as data, and an evolved
+    // table's added columns must survive the rewrite
+    val src =
+      if (m0.exists(_.isPartitioned))
+        evolvedReader(m0).option("basePath", dir.toString)
+          .parquet(listDataFilesDeep(dir).map(n => s"$dir/$n"): _*)
+      else evolvedReader(m0).parquet(dir.toString)
+    replaceZordered(dir, m0, src, zCols, files, bits, m0.flatMap(_.schemaJson))
   }
 
   /** Result of a [[scopedRecluster]] pass, for logging and specs. */
@@ -997,9 +946,7 @@ class Store(spark: SparkSession, baseDir: String) {
     */
   def scopedRecluster(rel: String): ScopedStats = {
     val dir = new Path(s"$baseDir/$rel")
-    Store.recoverSwap(fs, dir)
-    ScopedCommit.recover(fs, dir)
-    val m = LayoutManifest.read(fs, dir).getOrElse(throw new IllegalStateException(
+    val m = recoverAndRead(dir).getOrElse(throw new IllegalStateException(
       s"$rel has no layout manifest — scopedRecluster needs writeZordered/appendZordered " +
         "provenance; use recluster(rel, zCols) for a full rewrite"))
     require(!m.isPartitioned,
@@ -1107,7 +1054,7 @@ class Store(spark: SparkSession, baseDir: String) {
       region.select(region.columns.map { c =>
         set.get(c).map(v => when(hit, v).otherwise(col(c)).as(c)).getOrElse(col(c))
       }: _*)
-    })
+    }, setCols = set.keySet)
     UpdateStats(r.filesTouched, r.filesKept, r.matchRows)
   }
 
@@ -1149,9 +1096,7 @@ class Store(spark: SparkSession, baseDir: String) {
     require(matched.nonEmpty || insert.isDefined,
       "mergeInto needs at least one action (matched update/delete, or insert)")
     val dir = new Path(s"$baseDir/$rel")
-    Store.recoverSwap(fs, dir)
-    ScopedCommit.recover(fs, dir)
-    val m0 = LayoutManifest.read(fs, dir)
+    val m0 = recoverAndRead(dir)
     // MATERIALIZE the source once: the body evaluates it across several
     // independent jobs (locate semi-join, cardinality check, stats agg,
     // insert anti-join, staging write) — an uncached nondeterministic
@@ -1427,15 +1372,13 @@ class Store(spark: SparkSession, baseDir: String) {
     * replacements are re-staged per directory (see [[cowRewriteBody]]).
     */
   private def cowRewrite(rel: String, cond: org.apache.spark.sql.Column,
-                         prefix: String,
-                         transform: DataFrame => DataFrame): CowResult = {
+                         prefix: String, transform: DataFrame => DataFrame,
+                         setCols: Set[String] = Set.empty): CowResult = {
     val dir = new Path(s"$baseDir/$rel")
-    Store.recoverSwap(fs, dir)
-    ScopedCommit.recover(fs, dir)
     // ONE manifest read feeds the claim, the staging curve, and the
     // committed epoch — split reads could diverge and release the wrong
     // claim; manifest-less (plain parquet) tables have no epochs to guard
-    val m0 = LayoutManifest.read(fs, dir)
+    val m0 = recoverAndRead(dir)
     // The match-bearing-file scan runs INSIDE the epoch claim: located
     // names are only valid against the file set the claim's
     // committed==prevEpoch validation pinned. A locate taken before the
@@ -1455,14 +1398,15 @@ class Store(spark: SparkSession, baseDir: String) {
         .map(r => relativeName(dir, r.getString(0))).toSeq.sorted
       val total = listDataFilesDeep(dir)
       if (touchedNames.isEmpty) CowResult(0, total.size, 0L, 0L, 0L)
-      else cowRewriteBody(dir, cond, prefix, transform, touchedNames, total.size, m0)
+      else cowRewriteBody(dir, cond, prefix, setCols, transform, touchedNames, total.size, m0)
     }
     // a no-match pass commits nothing — its claim releases on the way out
     withClaimUnlessNoop(dir, m0)(locateAndRun())(_.filesTouched > 0)
   }
 
   private def cowRewriteBody(dir: Path, cond: org.apache.spark.sql.Column,
-                             prefix: String, transform: DataFrame => DataFrame,
+                             prefix: String, setCols: Set[String],
+                             transform: DataFrame => DataFrame,
                              touchedNames: Seq[String], totalFiles: Int,
                              m0: Option[LayoutManifest]): CowResult = {
     // partitioned tables (touched paths carry `key=value/` dirs): the
@@ -1508,9 +1452,14 @@ class Store(spark: SparkSession, baseDir: String) {
         count(when(coalesce(cond, lit(false)), 1))).head)
     // sample from the raw region read, not transform(region): the
     // DELETE/UPDATE projection would otherwise be evaluated a second time
-    // just to draw the bounds sample (see zorderStage.sampleFrom)
+    // just to draw the bounds sample (see zorderStage.sampleFrom). Except
+    // when an UPDATE's SET rewrites a curve column: pre-update values
+    // then rank every moved row into the edge bucket, and a narrow probe
+    // of the moved range read ~3x the rows a fresh layout's does
+    // (StoreSpec pins it), so the sample draws the post-update values
+    val zMoved = m0.exists(_.zCols.exists(setCols))
     val stagedRows = stageAndCommit(dir, prefix, out, touchedNames, totalFiles,
-      partCols, m0, sampleFrom = Some(region))
+      partCols, m0, sampleFrom = Some(if (zMoved) transform(region) else region))
     val (regionRows, matchRows) = preStats match {
       case Some(r) => (r.getLong(0), r.getLong(1))
       case None =>
@@ -1631,9 +1580,7 @@ class Store(spark: SparkSession, baseDir: String) {
     */
   def erosionStats(rel: String): ErosionStats = {
     val dir = new Path(s"$baseDir/$rel")
-    Store.recoverSwap(fs, dir)
-    ScopedCommit.recover(fs, dir)
-    val m = LayoutManifest.read(fs, dir).getOrElse(throw new IllegalStateException(
+    val m = recoverAndRead(dir).getOrElse(throw new IllegalStateException(
       s"$rel has no layout manifest — erosionStats needs layout provenance"))
     require(!m.isPartitioned,
       s"$rel is a managed PARTITIONED store — the erosion statistic measures " +
@@ -1935,9 +1882,7 @@ class Store(spark: SparkSession, baseDir: String) {
     */
   def releaseStaleClaims(rel: String): Int = {
     val dir = new Path(s"$baseDir/$rel")
-    Store.recoverSwap(fs, dir)
-    ScopedCommit.recover(fs, dir)
-    val m = LayoutManifest.read(fs, dir).getOrElse(throw new IllegalStateException(
+    val m = recoverAndRead(dir).getOrElse(throw new IllegalStateException(
       s"$rel has no layout manifest — nothing to release"))
     val hd = LayoutManifest.historyDir(dir)
     if (!fs.exists(hd)) return 0
@@ -2002,11 +1947,11 @@ class Store(spark: SparkSession, baseDir: String) {
     r.schema.map(reader0.schema).getOrElse(reader0).parquet(r.paths: _*)
   }
 
-  /** One statement's recovery and committed-manifest read: finish a
-    * crashed swap or journaled commit, then read the manifest once.
+  /** One statement's recovery and committed-manifest read, the way every
+    * lakehouse entry point opens a table: finish a crashed journaled
+    * commit, then read the manifest once. A missing table reads as None.
     */
   private def recoverAndRead(dir: Path): Option[LayoutManifest] = {
-    Store.recoverSwap(fs, dir)
     ScopedCommit.recover(fs, dir)
     LayoutManifest.read(fs, dir)
   }
@@ -2062,9 +2007,7 @@ class Store(spark: SparkSession, baseDir: String) {
     */
   private[graft] def resolveNames(rel: String, epoch: Long,
                                   names: Seq[String]): Seq[String] = {
-    val dir = new Path(s"$baseDir/$rel")
-    Store.recoverSwap(fs, dir)
-    ScopedCommit.recover(fs, dir)
+    ScopedCommit.recover(fs, new Path(s"$baseDir/$rel"))
     locateNames(rel, epoch, names)
   }
 
@@ -2278,9 +2221,7 @@ class Store(spark: SparkSession, baseDir: String) {
   def vacuum(rel: String, keepLast: Int): VacuumStats = {
     require(keepLast >= 1, "vacuum must keep at least the current epoch")
     val dir = new Path(s"$baseDir/$rel")
-    Store.recoverSwap(fs, dir)
-    ScopedCommit.recover(fs, dir)
-    val m = LayoutManifest.read(fs, dir).getOrElse(throw new IllegalStateException(
+    val m = recoverAndRead(dir).getOrElse(throw new IllegalStateException(
       s"$rel has no layout manifest — vacuum needs layout provenance"))
     val versions = listVersions(rel)
     val keep = versions.takeRight(keepLast).toSet + m.epoch
@@ -2329,7 +2270,6 @@ class Store(spark: SparkSession, baseDir: String) {
     */
   def retentionStats(rel: String): RetentionStats = {
     val dir = new Path(s"$baseDir/$rel")
-    Store.recoverSwap(fs, dir)
     if (!fs.exists(dir)) throw new IllegalStateException(
       s"$rel does not exist — retentionStats needs a written table")
     ScopedCommit.recover(fs, dir)
@@ -2380,9 +2320,7 @@ class Store(spark: SparkSession, baseDir: String) {
                                maxFilesPerPartition: Int = 1): PartCompactStats = {
     require(maxFilesPerPartition >= 1, "maxFilesPerPartition must be >= 1")
     val dir = new Path(s"$baseDir/$rel")
-    Store.recoverSwap(fs, dir)
-    ScopedCommit.recover(fs, dir)
-    val m = LayoutManifest.read(fs, dir).getOrElse(throw new IllegalStateException(
+    val m = recoverAndRead(dir).getOrElse(throw new IllegalStateException(
       s"$rel has no layout manifest — compactPartitionsManaged needs a managed " +
         "partitioned store (writePartitionedManaged provenance)"))
     require(m.isPartitioned,
@@ -2864,52 +2802,29 @@ object Store {
   /** Names Spark scans skip: dot- and underscore-prefixed. */
   private[io] def hidden(name: String): Boolean = name.startsWith(".") || name.startsWith("_")
 
+  /** Where [[swapOver]] parks a CSV day file it replaces. Dot-prefixed,
+    * so Spark scans ignore a crash's leftovers.
+    */
   private def parkOf(p: Path): Path = new Path(p.getParent, s".old_${p.getName}")
 
-  /** Park-aside/rename swap of a fully-written `tmp` directory into
-    * `target` — the durability discipline of the unmanaged
-    * [[Store.recluster]] ([[swapOver]], its second half, also swaps
-    * [[Store.writeCsv]]'s day files):
-    * the old data is parked aside (never deleted first), so a failed swap
-    * rolls back with the target intact, and nothing reads and overwrites
-    * the same files in one plan. The park path is dot-prefixed, so Spark
-    * scans ignore a crash's leftovers. Single writer; a reader racing the
-    * swap can see a briefly missing target (one rename wide), never
-    * partial data.
-    *
-    * Crash window: a HARD crash between rename(target, old) and
-    * rename(tmp, target) leaves the table parked under the dot-prefixed
-    * park path with the target missing — in-process rollback only runs
-    * when the process survives to see the second rename fail. Every
-    * caller that READS the target before merging (recluster) must call
-    * [[recoverSwap]] first, so a replay merges against
-    * the real stored table instead of a phantom empty one and never
-    * reaches this method's `fs.delete(old)` with the parked copy as the
-    * only surviving data.
-    */
-  private[graft] def swapInto(fs: org.apache.hadoop.fs.FileSystem,
-                              tmp: Path, target: Path): Unit = {
-    fs.delete(parkOf(target), true)
-    swapOver(fs, tmp, target, Some(target).filter(fs.exists))
-  }
-
-  /** [[swapInto]]'s two renames, with the entry being replaced named by
-    * the caller: `replaced` (the current file or directory, if any) parks
-    * aside as `.old_<its name>`, `tmp` renames to `target` — which may
-    * carry a different name, as a CSV day file whose write id changed
-    * does — and the park is deleted. A crash between the renames leaves
-    * the old entry parked: [[recoverSwap]] restores a parked directory,
-    * and [[recoverParks]] a parked day file when no live file holds its
-    * day, deleting the park when the swap completed.
+  /** Park-aside/rename swap of a fully-written staged CSV day file `tmp`
+    * into `target` ([[Store.writeCsv]]'s durability discipline; the
+    * lakehouse tables commit through the journal instead): `replaced` (the
+    * day's current file, if any) parks aside as `.old_<its name>`, `tmp`
+    * renames to `target` — which may carry a different name, as a day
+    * file whose write id changed does — and the park is deleted. The old
+    * file is never deleted first, so a failed swap rolls back with the
+    * day intact, and nothing reads and overwrites the same file in one
+    * plan. A crash between the renames leaves the old file parked:
+    * [[recoverParks]] restores it when no live file holds its day, and
+    * deletes the park when the swap completed.
     */
   private[graft] def swapOver(fs: org.apache.hadoop.fs.FileSystem, tmp: Path,
                               target: Path, replaced: Option[Path]): Unit = {
     val parked = replaced.filter(r => fs.rename(r, parkOf(r)))
-    // If parking the old data FAILED but it still exists, a rename onto
-    // the same name would succeed by moving tmp INSIDE the existing
-    // directory (Hadoop rename-into-existing-dir semantics) — readers
-    // would keep the stale rows and the fresh data would be buried where
-    // nobody looks. Fail loudly instead; nothing has been destroyed yet.
+    // If parking the old file FAILED but it still exists, a swap under a
+    // new write id would leave two live files for one day — fail loudly
+    // instead; nothing has been destroyed yet.
     replaced.filter(r => parked.isEmpty && fs.exists(r)).foreach { r =>
       throw new IllegalStateException(
         s"could not park $r aside as ${parkOf(r)}; aborting swap with data intact")
@@ -2919,28 +2834,6 @@ object Store {
       throw new IllegalStateException(s"rename $tmp -> $target failed")
     }
     parked.foreach(r => fs.delete(parkOf(r), true))
-  }
-
-  /** Repair [[swapInto]]'s crash window before reading `target`: the
-    * signature of a crash between the two renames is "park path exists
-    * and target missing" — the previous contents are intact but parked.
-    * Restore them so the caller's read-merge-swap replay sees the real
-    * stored rows (the merge is idempotent, so re-applying the interrupted
-    * batch on top of the restored table is correct). A target that EXISTS
-    * alongside a park path means the crash happened after the swap
-    * completed but before the park cleanup — the park copy is stale and
-    * swapInto's entry delete disposes of it. Returns whether a restore
-    * happened (callers log/assert on it in specs).
-    */
-  private[graft] def recoverSwap(fs: org.apache.hadoop.fs.FileSystem,
-                                 target: Path): Boolean = {
-    val old = parkOf(target)
-    if (fs.exists(old) && !fs.exists(target)) {
-      if (!fs.rename(old, target))
-        throw new IllegalStateException(
-          s"crash recovery: could not restore parked $old -> $target")
-      true
-    } else false
   }
 
   /** Finish the day swaps a crash interrupted in CSV history `root`, from

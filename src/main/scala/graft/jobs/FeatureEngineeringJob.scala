@@ -4,14 +4,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.Store
-import graft.operators.{Features, Scaling, Upsert}
+import graft.operators.{Features, Scaling}
 import graft.pipeline.Schemas
 
 /** EP2 — incremental feature engineering
   * (`data_engineering/data_engineering.py:100-132`):
   * anti-join delta -> temporal -> interaction -> log -> z-scale (fit on the
-  * DELTA only, the reference's semantics — SURVEY §7.5(4)) -> keep-first
-  * dedup against previous output -> sorted write.
+  * DELTA only, the reference's semantics — SURVEY §7.5(4)) -> union with
+  * the previous output -> sorted write. The reference's keep-first dedup
+  * against the previous output (`data_engineering.py:123-127`) needs no
+  * window here: the delta was just anti-joined against those rows on
+  * `datetime`, so no key of it can collide with one of theirs.
   *
   * The whole run is O(delta), not O(history). Only rows absent from the
   * previous output are transformed — the reference's one real big-data
@@ -29,9 +32,9 @@ import graft.pipeline.Schemas
   * emptiness check, the scaler fit and the write all read it, and each
   * would otherwise re-read both CSV days and re-run the anti-join. When no
   * candidate day has an engineered file yet (the daily case), the delta
-  * cannot be empty and has nothing to keep-first against, so that run
-  * checks neither: it submits no emptiness job, and its plan has no
-  * keep-first window whose classes Spark would compile and cache.
+  * cannot be empty and has no previous rows to union with, so that run
+  * checks neither: it submits no emptiness job and reads no engineered
+  * day.
   */
 object FeatureEngineeringJob {
 
@@ -66,16 +69,16 @@ object FeatureEngineeringJob {
 
       if (prevFiles.isEmpty)
         // days never engineered (the daily case): the delta is all their
-        // rows, not empty as a day file holds at least one, and the
-        // keep-first has no previous row to keep (the raw history is
-        // unique on `datetime`)
+        // rows, not empty as a day file holds at least one, and there is
+        // no previous row to keep (the raw history is unique on `datetime`)
         store.writeCsvDays(engineer(delta), engineeredFile, "datetime", ids)
       else if (delta.isEmpty) // P8 short-circuit (data_engineering.py:113-115): the
         // candidates' engineered rows stand as they are; only their watermark moves
         prevFiles.foreach(p => store.renameCsvDay(engineeredFile, p, p.copy(id = ids(p.day))))
       else {
-        // J5+D2: previous rows win on key collision (data_engineering.py:123-127)
-        store.writeCsvDays(Upsert.keepFirst(prev, engineer(delta), Seq("datetime")),
+        // J5+D2 (data_engineering.py:123-127): previous rows win on key
+        // collision, and the anti-join above left the delta none to lose
+        store.writeCsvDays(prev.unionByName(engineer(delta)),
           engineeredFile, "datetime", ids)
       }
     }

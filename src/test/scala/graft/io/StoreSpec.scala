@@ -218,7 +218,7 @@ class StoreSpec extends AnyFunSuite {
     val df = spark.range(40000).select(col("id").as("k"),
       pmod(col("id") * 37, lit(40000)).as("v"))
     val parts = (0 until 4).map(i => df.where(pmod(col("k"), lit(4)) === i))
-    // nested rel: the swap tmp must stay a sibling of the LEAF
+    // nested rel: no stage or park may land beside the LEAF either
     store.writeZordered(parts(0), "lake/tbl", Seq("k", "v"), files = 4)
     parts.tail.foreach(p => store.appendZordered(p, "lake/tbl", Seq("k", "v"), files = 4))
     val want = spark.read.parquet(s"$base/lake/tbl").collect().map(_.toString).sorted.toSeq
@@ -231,7 +231,7 @@ class StoreSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$base/lake/tbl").collect().map(_.toString).sorted.toSeq == want)
     val restored = touched()
     assert(restored <= 3, s"recluster failed to restore skipping: $restored files for a 1/64 key window")
-    // no swap debris anywhere under the base (incl. beside the nested leaf)
+    // no debris anywhere under the base (incl. beside the nested leaf)
     import scala.jdk.CollectionConverters._
     val leftovers = java.nio.file.Files.walk(java.nio.file.Paths.get(base))
       .iterator().asScala.map(_.getFileName.toString)
@@ -495,6 +495,29 @@ class StoreSpec extends AnyFunSuite {
     assert(triples() == t0)
   }
 
+  test("updateWhere moving a curve column lays the moved rows out as tightly as a " +
+    "fresh writeZordered") {
+    val base = Files.createTempDirectory("graft_cow_zmove").toString
+    val store = new Store(spark, base)
+    val n = 40000L
+    store.writeZordered(spark.range(n).select(col("id").as("k"),
+      pmod(col("id") * 37, lit(n)).as("v")), "tbl", Seq("k", "v"), files = 16)
+    // half the keys move past every value the table held before the update
+    store.updateWhere("tbl", col("k") < n / 2, Map("k" -> (col("k") + 1000000L)))
+    store.writeZordered(store.readSnapshot("tbl"), "fresh", Seq("k", "v"), files = 16)
+    // rows a narrow key probe inside the moved range must read: every row
+    // of every file holding a match
+    def rowsRead(rel: String, lo: Long): Long = {
+      val t = spark.read.parquet(s"$base/$rel").withColumn("f", input_file_name())
+      t.join(t.where(col("k") >= lo && col("k") < lo + 300).select("f").distinct(), "f").count()
+    }
+    Seq(1001000L, 1005000L, 1015000L).foreach { lo =>
+      val (moved, fresh) = (rowsRead("tbl", lo), rowsRead("fresh", lo))
+      assert(moved <= fresh * 3 / 2,
+        s"probe at $lo reads $moved rows after the update, $fresh on a fresh layout")
+    }
+  }
+
   test("deleteWhere replays an interrupted manifest-less scoped journal before locating") {
     val base = Files.createTempDirectory("graft_cow_journal").toString
     val store = new Store(spark, base)
@@ -594,31 +617,63 @@ class StoreSpec extends AnyFunSuite {
       "freshly optimized table should measure below the threshold")
   }
 
-  test("appendZordered after a crash mid-recluster restores the parked table before appending") {
-    import spark.implicits._
-    // the loss scenario this guards: recluster crashes between its two
-    // renames (table parked, target missing); an append then recreates the
-    // target, so a LATER recovery would read the park as stale and delete
-    // it — everything but the appended batch gone. The append must restore
-    // first.
-    val base = Files.createTempDirectory("graft_appendz_crash").toString
+  test("recluster is a z-order replace write: adopts a plain directory at epoch 0, " +
+    "retires a managed partitioned store's files, prunes emptied partition dirs, " +
+    "refuses one column") {
+    val base = Files.createTempDirectory("graft_recluster_replace").toString
     val store = new Store(spark, base)
-    val df = spark.range(200).select(col("id").as("k"), (col("id") * 3).as("v"))
-    store.writeZordered(df, "tbl", Seq("k", "v"), files = 2, bits = 4)
     val fs = new org.apache.hadoop.fs.Path(base)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$base/tbl"),
-      new org.apache.hadoop.fs.Path(s"$base/.old_tbl")))
-    val batch = spark.range(200, 220).select(col("id").as("k"), (col("id") * 3).as("v"))
-    store.appendZordered(batch, "tbl", Seq("k", "v"), files = 2, bits = 4)
-    val after = spark.read.parquet(s"$base/tbl")
-    assert(after.count() == 220, "parked pre-crash rows lost by the append")
-    assert(after.agg(sum("k")).head.getLong(0) == (0L until 220L).sum)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$base/.old_tbl")))
-    // and a subsequent recluster (whose recoverSwap would otherwise have
-    // deleted the park as stale) keeps everything
-    store.recluster("tbl", Seq("k", "v"), files = 2)
-    assert(spark.read.parquet(s"$base/tbl").count() == 220)
+    def dir(rel: String) = new org.apache.hadoop.fs.Path(s"$base/$rel")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    // every entry under the base, as paths relative to it
+    def entries(): Seq[String] = {
+      import scala.jdk.CollectionConverters._
+      val root = java.nio.file.Paths.get(base)
+      Files.walk(root).iterator().asScala.map(root.relativize(_).toString).toSeq
+    }
+    val df = spark.range(2000).select(col("id").as("k"),
+      pmod(col("id") * 37, lit(2000)).as("v"),
+      timestamp_seconds(lit(1704067200L) + col("id") * 600).as("datetime"))
+
+    // a plain parquet directory is adopted through the journal at epoch 0
+    df.write.parquet(s"$base/plain")
+    store.recluster("plain", Seq("k", "v"), files = 4)
+    assert(rows(spark.read.parquet(s"$base/plain")) == rows(df))
+    assert(store.listVersions("plain") == Seq(0L))
+    val adopted = LayoutManifest.read(fs, dir("plain")).get
+    assert(adopted.zCols == Seq("k", "v") && adopted.appends.isEmpty)
+    assert(!ScopedCommit.anyMarker(fs, dir("plain")))
+
+    // a managed partitioned store reshapes into the curve; its previous
+    // epoch stays readable from the files the replace retired
+    store.writePartitionedManaged(df, "part")                          // epoch 0
+    val before = rows(store.readSnapshot("part"))
+    store.recluster("part", Seq("k", "v"), files = 4)                 // epoch 1
+    assert(rows(store.readSnapshot("part")) == before)
+    assert(rows(store.readVersion("part", 0L)) == before)
+    assert(LayoutManifest.read(fs, dir("part")).get.partCols.isEmpty)
+    // no live file is left under a dt= dir, only the retired ones epoch 0 reads
+    assert(entries().filter(_.startsWith("part/dt=")).forall(e =>
+      !e.endsWith(".parquet") || e.contains(LayoutManifest.RetiredDirName)), entries())
+
+    // a plain partitioned directory has no history: its files are
+    // deleted and the emptied dt= dirs pruned
+    df.withColumn("dt", Store.utcDay(col("datetime")))
+      .write.partitionBy("dt").parquet(s"$base/plainpart")
+    store.recluster("plainpart", Seq("k", "v"), files = 4)
+    assert(spark.read.parquet(s"$base/plainpart").count() == 2000L)
+    assert(!entries().exists(_.startsWith("plainpart/dt=")), entries())
+
+    // one column is writeClustered's layout: refused, the table untouched
+    intercept[IllegalArgumentException](store.recluster("plain", Seq("k"), files = 4))
+    assert(store.listVersions("plain") == Seq(0L))
+    assert(rows(spark.read.parquet(s"$base/plain")) == rows(df))
+    assert(store.releaseStaleClaims("plain") == 0)
+
+    // no park and no stage debris anywhere
+    assert(!entries().exists(e => e.split('/').exists(n =>
+      n.startsWith(".old_") || n.startsWith(ScopedCommit.TmpDirName))), entries())
   }
 
   test("orc sink/scan: lossless round trip; filters push into the orc scan") {

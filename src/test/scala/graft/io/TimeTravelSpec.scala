@@ -770,5 +770,17 @@ class TimeTravelSpec extends AnyFunSuite {
     val feed = listings(counted.changeFeed("tbl", Seq("k"), sinceEpoch = -1))
     assert(feed.getOrElse(history, 0) == 2 && feed.getOrElse(dir, 0) == 2, feed)
     assert(snapshotsOpened() == Map(s"$history/v0" -> 1, s"$history/v1" -> 1), snapshotsOpened())
+    // neither read probes for a parked copy of the table beside it: the
+    // journal is the only commit protocol a table entry has to recover
+    val park = s"$base/.old_tbl"
+    def probes(body: => Unit): Seq[String] = {
+      ListingCountingFs.clear()
+      body
+      ListingCountingFs.probed.toArray.toSeq.map(_.toString)
+    }
+    val snapProbes = probes(counted.readSnapshot("tbl"))
+    assert(!snapProbes.contains(park), snapProbes)
+    val feedProbes = probes(counted.changeFeed("tbl", Seq("k"), sinceEpoch = -1))
+    assert(!feedProbes.contains(park), feedProbes)
   }
 }
